@@ -37,18 +37,26 @@ object ExecShape {
     * 600 ms stable window), with the same bounded total wait.
     */
   def measure(spark: org.apache.spark.sql.SparkSession, tag: String)(body: => Unit): (Int, Int) = {
+    val (jobs, stages, _) = measureTasks(spark, tag)(body)
+    (jobs, stages)
+  }
+
+  /** [[measure]] plus the total tasks of those stages, read the same
+    * way: (jobs, stages, tasks).
+    */
+  def measureTasks(spark: org.apache.spark.sql.SparkSession, tag: String)(
+      body: => Unit): (Int, Int, Int) = {
     val sc = spark.sparkContext
     val group = s"execshape-$tag-${System.nanoTime()}"
     sc.setJobGroup(group, group, interruptOnCancel = false)
     try body
     finally sc.clearJobGroup()
     val tracker = sc.statusTracker
-    def read(): (Int, Int) = {
+    def read(): (Int, Int, Int) = {
       val ids = tracker.getJobIdsForGroup(group)
-      val stages = ids.toSeq
-        .flatMap(id => tracker.getJobInfo(id).map(_.stageIds().length))
-        .sum
-      (ids.length, stages)
+      val stageIds = ids.toSeq.flatMap(id => tracker.getJobInfo(id).toSeq.flatMap(_.stageIds()))
+      val tasks = stageIds.flatMap(tracker.getStageInfo(_).toSeq).map(_.numTasks()).sum
+      (ids.length, stageIds.length, tasks)
     }
     var prev = read()
     var agree = 0

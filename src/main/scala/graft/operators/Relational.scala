@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,10 +11,12 @@ import graft.functions.Scalars._
   * (SURVEY.md §2). Each is a reusable `DataFrame => DataFrame`-style
   * combinator; the test-query catalog binds them to the fixture tables.
   *
-  * Scale notes (100 TB): every combinator is a declarative plan —
-  * Catalyst chooses broadcast-hash for small dims, AQE handles skew;
-  * nothing here collects to the driver except the quality-gate's two
-  * scalar counts (one row each).
+  * Scale notes (100 TB): the combinators are declarative plans —
+  * Catalyst chooses broadcast-hash for small dims, AQE handles skew.
+  * What reaches the driver is bounded bookkeeping: the quality gate's
+  * one aggregate row, per-partition counts and sample bounds, and
+  * [[dimGetOrCreate]]'s dimension, which [[resolveDimFk]] broadcasts
+  * whole anyway.
   */
 object Relational {
 
@@ -48,26 +52,48 @@ object Relational {
   }
 
   /** Quality gate (reference: etl.js:249-278, SURVEY.md §2.6 Q1):
-    * remove parents whose supplemental data errored (left-anti join),
-    * compute `percentChangeAbs(oldCount, newCount)`
-    * (helpers.js:234-240), and abort the run when the loss exceeds the
-    * threshold. Returns the pruned frame; counts are the only
-    * driver-side values (two scalars).
+    * drop the parents whose `key` appears among `erroredKeys`, and abort
+    * the run when `percentChangeAbs(oldCount, newCount)`
+    * (helpers.js:234-240) reaches `thresholdPct`. An empty frame gives
+    * 0/0 = NaN, which never reaches it, as in the reference's `>=` test
+    * (etl.js:269-274).
+    *
+    * The parents are computed once. Each is marked with an errored flag
+    * by a left join on the deduplicated keys (a key reported twice never
+    * duplicates its parent; a NULL key matches nothing, as in a
+    * left-anti join), the marked frame is persisted (MEMORY_AND_DISK),
+    * and one aggregate, the action that fills the cache, gives both
+    * counts. Returns the unflagged rows, which read that cache, and a
+    * handle that unpersists exactly it; an abort releases it before it
+    * throws.
     */
   def qualityGate(
       parents: DataFrame,
       erroredKeys: DataFrame,
       key: String,
-      thresholdPct: Double): DataFrame = {
-    val pruned = parents.join(erroredKeys, Seq(key), "left_anti")
-    val oldCount = parents.count().toDouble
-    val newCount = pruned.count().toDouble
-    val change = math.abs((newCount - oldCount) / math.abs(oldCount)) * 100.0
-    require(
-      change < thresholdPct,
-      f"quality gate: $change%.2f%% of rows lost supplemental data (threshold $thresholdPct%%)")
-    pruned
+      thresholdPct: Double): (DataFrame, () => Unit) = {
+    val marks = erroredKeys.select(col(key).as(ErroredKey)).distinct()
+    val marked = parents
+      .join(marks, col(key) === col(ErroredKey), "left")
+      .withColumn(Errored, col(ErroredKey).isNotNull)
+      .drop(ErroredKey)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val release = () => { marked.unpersist(); () }
+    val change =
+      try {
+        val r = marked.agg(count(lit(1)), count_if(!col(Errored))).head()
+        math.abs((r.getLong(1) - r.getLong(0)).toDouble / r.getLong(0)) * 100.0
+      } catch { case NonFatal(e) => release(); throw e }
+    if (change >= thresholdPct) {
+      release()
+      throw new IllegalArgumentException(
+        f"quality gate: $change%.2f%% of rows lost supplemental data (threshold $thresholdPct%%)")
+    }
+    (marked.filter(!col(Errored)).drop(Errored), release)
   }
+
+  private val Errored = "__errored"
+  private val ErroredKey = "__errored_key"
 
   /** Plan-only form of the quality gate's accounting, for the oracle
     * harness: one row with (old_count, new_count, pct_change).
@@ -88,32 +114,51 @@ object Relational {
 
   /** Dimension get-or-create with dense surrogate ids — the Spark-native
     * `get_project_id` / `get_user_id` (reference: schema.sql:105-134,
-    * SURVEY.md §2.8 G1/G2). New names = incoming anti-join existing;
-    * ids assigned deterministically as dense numbering in name order
-    * (+ max existing id) via [[globalRowNumber]] — NOT a
-    * `row_number() over (order by name)` window: even though dim
-    * domains are tiny and the window was harmless, it emitted the
-    * `WindowExec: No Partition Defined` warning on every load, and a
-    * noisy log tail buries REAL single-partition regressions. The
-    * range-partitioned numbering gives the identical name-ordered ids
-    * with no Window operator at any size.
+    * SURVEY.md §2.8 G1/G2). New names are the distinct non-NULL
+    * incoming names the existing dim lacks; they are numbered on the
+    * driver, densely after the existing max id, in Spark's string
+    * order (UTF-8 bytes, not `String.compareTo`'s UTF-16 units). NULL
+    * names are dropped: a NULL never equi-matches a dim row, so keeping
+    * it would create it anew on every call.
+    *
+    * The grown dim comes back as a local relation of (id: bigint, name:
+    * string): [[resolveDimFk]] broadcasts the whole dim, so it must fit
+    * on the driver regardless, and a local relation broadcasts without
+    * a job. Costs one action for `incomingNames` and one for `existing`
+    * unless it is already local.
     */
-  def dimGetOrCreate(existing: DataFrame, incomingNames: DataFrame): DataFrame = {
-    // existing: (id: bigint, name: string); incomingNames: (name: string).
-    // NULL names are dropped: a NULL never equi-matches the anti-join, so
-    // without the filter it would be "new" on every call and the
-    // get-or-create idempotence contract would break for NULL keys.
-    val maxId = existing
-      .agg(coalesce(max(col("id")), lit(0L)).as("max_id"))
-    val newNames = incomingNames
-      .select(col("name"))
-      .filter(col("name").isNotNull)
-      .distinct()
-      .join(existing.select("name"), Seq("name"), "left_anti")
-    val newRows = globalRowNumber(newNames, "name", numPartitions = 8)
-      .crossJoin(maxId)
-      .select((col("rn") + col("max_id")).as("id"), col("name"))
-    existing.select(col("id"), col("name")).unionByName(newRows)
+  def dimGetOrCreate(existing: DataFrame, incomingNames: DataFrame): DataFrame =
+    dimGetOrCreate(
+      existing,
+      incomingNames
+        .select(col("name"))
+        .filter(col("name").isNotNull)
+        .distinct()
+        .collect()
+        .map(_.getString(0))
+        .toSeq)
+
+  /** [[dimGetOrCreate]] for names already on the driver. */
+  def dimGetOrCreate(existing: DataFrame, incomingNames: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val current = existing
+      .select(col("id").cast("long"), col("name"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+      .toSeq
+    val known = current.map(_._2).toSet
+    val maxId = current.map(_._1).maxOption.getOrElse(0L)
+    val added = incomingNames.distinct
+      .filter(n => n != null && !known(n))
+      .sortBy(UTF8String.fromString)
+      .zipWithIndex
+      .map { case (n, i) => (maxId + 1 + i, n) }
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    existing.sparkSession.createDataFrame(
+      java.util.Arrays.asList((current ++ added).map { case (id, n) => Row(id, n) }: _*),
+      schema)
   }
 
   /** Trigger-equivalent denormalized write path (reference:

@@ -8,8 +8,9 @@ import graft.operators.Relational
 /** The reference's five-stage ETL pipeline (etl.js:65-77) re-expressed
   * as composable DataFrame stages — SURVEY.md §3.1's "Spark shape":
   * HTTP fan-out becomes source joins, client-side correlation becomes
-  * left-outer equi-joins, the transform loop becomes one projection,
-  * and the whole flow is a single lazy plan until the sink action.
+  * left-outer equi-joins, the transform loop becomes one projection.
+  * [[run]] computes a batch once: the quality gate's aggregate fills a
+  * persisted copy, and every sink step reads that copy.
   *
   * Sources stand in for the reference's network scans:
   *  - `raw`: JIRA search payload rows (issues array elements;
@@ -117,14 +118,6 @@ object Etl {
       Seq("link_key"),
       "left")
 
-  /** Q1 — the quality gate (etl.js:249-278): prune feasibilities whose
-    * supplemental data errored; abort when the loss ratio crosses the
-    * threshold. `errored` carries the already-resolved parent key
-    * (`grandparent || parent`, etl.js:257).
-    */
-  def validate(feas: DataFrame, errored: DataFrame, thresholdPct: Double): DataFrame =
-    Relational.qualityGate(feas, errored.select(col("key")), "key", thresholdPct)
-
   private val EstimateCols = Seq(
     "design_estimate",
     "development_estimate",
@@ -186,19 +179,44 @@ object Etl {
             to_json(col("worklog")).as("worklog")): _*)
   }
 
-  /** The whole series pipeline (X1): extract → correlate → validate →
-    * transform. One logical plan; the only actions are the gate's two
-    * counts.
+  /** The whole series pipeline (X1): extract → correlate → transform →
+    * validate (Q1, etl.js:249-278), one batch computed once. The
+    * transformed batch goes through [[Relational.qualityGate]] (`errored`
+    * carries the already-resolved parent key, `grandparent || parent`,
+    * etl.js:257), which persists it (MEMORY_AND_DISK), counts it in the
+    * aggregate that fills the cache, and aborts before anything is
+    * written. So the sources are read once per batch, however many
+    * sink steps follow.
+    *
+    * The returned frame is the persisted batch minus its errored rows;
+    * it stays cached until released. Use [[runReleasable]] to release
+    * exactly this batch once it is loaded (`unpersist()` on the
+    * returned frame does not reach the cache beneath its filter), or
+    * sweep the session with [[graft.GraftSession.releaseAllCaches]].
     */
   def run(
       raw: DataFrame,
       worklogs: DataFrame,
       issueDetails: DataFrame,
       errored: DataFrame,
-      thresholdPct: Double = 20.0): DataFrame = {
-    val feas = validate(extractIssues(raw), errored, thresholdPct)
+      thresholdPct: Double = 20.0): DataFrame =
+    runReleasable(raw, worklogs, issueDetails, errored, thresholdPct)._1
+
+  /** [[run]] plus a handle that unpersists exactly this batch's cache,
+    * leaving any other cache in the session alone.
+    */
+  def runReleasable(
+      raw: DataFrame,
+      worklogs: DataFrame,
+      issueDetails: DataFrame,
+      errored: DataFrame,
+      thresholdPct: Double = 20.0): (DataFrame, () => Unit) = {
     val parsed = parseWorklogs(worklogs)
     val links = attachLinkWorklogs(enrichLinks(extractLinks(raw), issueDetails), parsed)
-    transformData(feas, parsed, links)
+    Relational.qualityGate(
+      transformData(extractIssues(raw), parsed, links),
+      errored.select(col("key")),
+      "key",
+      thresholdPct)
   }
 }

@@ -31,21 +31,29 @@ object Sinks {
     * the incoming batch (dense ids appended after the existing max),
     * then swap every name column for its surrogate key.
     *
-    * Returns (updated dims, normalized fact). Deterministic and
-    * idempotent per batch; dims stay small relative to the fact, so
-    * the FK-resolution joins broadcast — at 100 TB the fact never
-    * shuffles for this.
+    * Returns (updated dims, normalized fact). The names of every dim
+    * come from the batch in one action (distinct (dim, name) pairs), and
+    * each dim grows on the driver ([[Relational.dimGetOrCreate]]) into
+    * a local relation, so the FK-resolution joins broadcast it without
+    * a job; the fact stays lazy and never shuffles for this.
+    * Deterministic and idempotent per batch.
     */
   def normalize(
       incoming: DataFrame,
       existingDims: Map[String, DataFrame],
       specs: Seq[DimSpec]): (Map[String, DataFrame], DataFrame) = {
-    val grownDims = specs.groupBy(_.dimName).map { case (dimName, ss) =>
-      val names = ss
-        .map(s => incoming.select(col(s.nameCol).as("name")))
-        .reduce(_ unionByName _)
-      dimName -> Relational.dimGetOrCreate(existingDims(dimName), names)
-    }
+    val pairs = specs.map(s => struct(lit(s.dimName).as("dim"), col(s.nameCol).as("name")))
+    val names = incoming
+      .select(explode(array(pairs: _*)).as("n"))
+      .select(col("n.dim"), col("n.name"))
+      .filter(col("name").isNotNull)
+      .distinct()
+      .collect()
+      .groupMap(_.getString(0))(_.getString(1))
+    val grownDims = specs.map(_.dimName).distinct.map { dimName =>
+      val fresh = names.getOrElse(dimName, Array.empty[String]).toSeq
+      dimName -> Relational.dimGetOrCreate(existingDims(dimName), fresh)
+    }.toMap
     val fact = specs.foldLeft(incoming) { (acc, s) =>
       Relational.resolveDimFk(acc, grownDims(s.dimName), s.nameCol, s.fkCol).drop(s.nameCol)
     }
@@ -53,8 +61,9 @@ object Sinks {
   }
 
   /** The reference's NULL-id guard (schema.sql:151-152): fail the batch
-    * if any row carries a name that did not resolve. Costs one count on
-    * the already-built plan.
+    * if any row carries a name that did not resolve. Costs one count
+    * over `fact` — over [[normalize]]'s output, a scan of the incoming
+    * batch against the broadcast dims.
     */
   def requireResolved(fact: DataFrame, specs: Seq[DimSpec]): DataFrame = {
     val unresolved = specs.map(s => col(s.fkCol).isNull).reduce(_ || _)
@@ -194,8 +203,12 @@ object Sinks {
   /** JDBC sink — the Spark-native K1 (reference: etl.js:311-370, one
     * prepared INSERT per row under async.parallel). Spark's JDBC writer
     * batches `batchSize` rows per statement and runs one connection per
-    * partition, so `repartition(numPartitions)` is the concurrency
-    * knob the reference's unbounded async.parallel lacked. Per-row
+    * partition; its `numPartitions` option caps the connections (the
+    * cap the reference's unbounded async.parallel lacked) by coalescing
+    * only a frame with more partitions — no shuffle. A frame with
+    * fewer partitions writes with that many connections (AQE sizes a
+    * cached batch's partitions by its bytes and the session's
+    * parallelism). Per-row
     * error tolerance (helpers.js:100-104 swallows failures) is
     * deliberately NOT the default: a failed partition fails the job —
     * all-or-nothing beats silently missing rows in a 100 TB load. The
@@ -213,9 +226,9 @@ object Sinks {
       numPartitions: Int = 8,
       batchSize: Int = 10000,
       mode: SaveMode = SaveMode.Append): Unit =
-    df.repartition(numPartitions)
-      .write
+    df.write
       .mode(mode)
+      .option("numPartitions", numPartitions.toLong)
       .option("batchsize", batchSize.toLong)
       .jdbc(url, table, props)
 

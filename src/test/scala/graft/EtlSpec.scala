@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Etl
 
@@ -12,8 +13,11 @@ import graft.pipeline.Etl
   *  F-3 links w/o worklogs → linked 0, null delta; F-4 worklog w/o
   *  links; F-5 zero estimates → null delta.
   */
-class EtlSpec extends AnyFunSuite {
+class EtlSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
+
+  // Etl.run persists each batch it computes.
+  override def afterAll(): Unit = GraftSession.releaseAllCaches(spark)
 
   private def jsonDf(rows: Seq[String]): DataFrame = {
     import spark.implicits._
@@ -126,5 +130,53 @@ class EtlSpec extends AnyFunSuite {
     }
     val ok = Etl.run(raw, worklogs, details, errored, thresholdPct = 50.0)
     assert(ok.count() == 3)
+  }
+
+  /** Rows `Etl.run` keeps, against the left-anti join's count of the
+    * extracted issues (the gate before it was fused into one aggregate).
+    */
+  private def keptVsAnti(rawDf: DataFrame, errored: DataFrame): (Long, Long) = {
+    val (kept, release) = Etl.runReleasable(rawDf, worklogs, details, errored, thresholdPct = 50.0)
+    try (kept.count(), Etl.extractIssues(rawDf).join(errored, Seq("key"), "left_anti").count())
+    finally release()
+  }
+
+  test("runReleasable: the handle releases exactly the batch's cache; an abort leaves none") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val own = Seq(1, 2, 3).toDF("x").persist()
+    try {
+      own.count()
+      val before = sc.getPersistentRDDs.keySet
+      val (kept, release) = Etl.runReleasable(raw, worklogs, details, emptyErrored)
+      assert(sc.getPersistentRDDs.size == before.size + 1) // the gate's aggregate filled it
+      assert(kept.count() == 5)
+      release()
+      assert(sc.getPersistentRDDs.keySet == before)
+      assert(own.storageLevel.useMemory)
+      intercept[IllegalArgumentException] {
+        Etl.runReleasable(raw, worklogs, details, Seq("F-1", "F-3").toDF("key"), thresholdPct = 20.0)
+      }
+      assert(sc.getPersistentRDDs.keySet == before)
+    } finally own.unpersist()
+  }
+
+  test("quality gate: an empty batch passes (0/0 is NaN, below any threshold)") {
+    val (kept, anti) = keptVsAnti(raw.filter(lit(false)), emptyErrored)
+    assert(kept == 0 && anti == 0)
+  }
+
+  test("quality gate: duplicate errored keys count once") {
+    import spark.implicits._
+    val (kept, anti) = keptVsAnti(raw, Seq("F-1", "F-1", "F-3", "F-3").toDF("key"))
+    assert(kept == 3 && anti == 3)
+  }
+
+  test("quality gate: an issue with a NULL key is kept, as the left-anti join keeps it") {
+    import spark.implicits._
+    val nullKey = JiraFixture.issue("F-6", "rev1", """"customfield_14600": 1""", "")
+      .replace(""""key": "F-6"""", """"key": null""")
+    val (kept, anti) = keptVsAnti(jsonDf(JiraFixture.rawRows :+ nullKey), Seq(Some("F-1"), None).toDF("key"))
+    assert(kept == 5 && anti == 5)
   }
 }

@@ -82,6 +82,29 @@ class ExecShapeSpec extends AnyFunSuite {
           "and update this pin plus BASELINE.md's shape row")
     }
 
+  test("etl_batch: one fixture ETL batch submits exactly 25 jobs / 38 stages") {
+    // Etl.run → normalize → requireResolved → JDBC dims and fact, the
+    // shape of one benchmark etl_load batch at fixture size. The gate's
+    // aggregate fills the persisted batch and every sink step reads it,
+    // the names of all dims come from one action, the grown dims are
+    // local relations that broadcast without a job, and the JDBC writes
+    // coalesce instead of shuffling: a step that re-runs the transform
+    // adds its ~10 jobs here. Derived three times, identical.
+    import spark.implicits._
+    GraftSession.releaseAllCaches(spark)
+    val existing = Map(
+      "jira_user" -> Seq((1L, "rep1")).toDF("id", "name"),
+      "project" -> Seq((1L, "PROJ1")).toDF("id", "name"))
+    val url = JiraFixture.starSchema(s"graft_shape_${System.nanoTime()}", existing)
+    val dir = JiraFixture.landBatch(errored = Seq("F-4"))
+    val (j, s) = ExecShape.measure(spark, "etl_batch") {
+      val (fact, release) = JiraFixture.runBatch(spark, dir, 25.0)
+      try JiraFixture.loadBatch(fact, existing, url, numPartitions = 2)
+      finally release()
+    }
+    assert((j, s) == ((25, 38)), s"etl_batch execution shape drifted: got jobs=$j stages=$s")
+  }
+
   test("q150_cosupply_rank submits exactly 15 jobs / 35-50 stages at sf0.001") {
     // Same context-sensitivity class as q139/q148: isolated runs are
     // stable (15/39 re-derived twice, r17 — one cache-fill job fewer

@@ -212,4 +212,58 @@ class JdbcSinkSpec extends AnyFunSuite {
     val n = out.filter(col("id") === 2L).collect()(0)
     assert(n.isNullAt(n.fieldIndex("delta")))
   }
+
+  test("one ETL batch loads from its one materialization: the sink steps never re-read the sources") {
+    import spark.implicits._
+    val existing = Map(
+      "jira_user" -> Seq((1L, "rep1")).toDF("id", "name"),
+      "project" -> Seq((1L, "PROJ1")).toDF("id", "name"))
+    val batchUrl = JiraFixture.starSchema("graft_batch_once", existing)
+    // F-4 errored: 1 of 5 lost, under the 25 % threshold
+    val dir = JiraFixture.landBatch(errored = Seq("F-4"))
+    val (batch, release) = JiraFixture.runBatch(spark, dir, thresholdPct = 25.0)
+    try {
+      // Etl.run has returned: from here on, reading any input fails
+      val files = java.nio.file.Files.list(dir)
+      try files.forEach(f => java.nio.file.Files.delete(f))
+      finally files.close()
+      java.nio.file.Files.delete(dir)
+      JiraFixture.loadBatch(batch, existing, batchUrl, numPartitions = 2)
+    } finally release()
+
+    def table(t: String) = spark.read.jdbc(batchUrl, "\"" + t + "\"", props)
+    val users = table("jira_user").collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+    assert(users == Map("rep1" -> 1L, "rev1" -> 2L, "rev2" -> 3L))
+    val projects = table("project").collect().map(r => r.getString(1) -> r.getLong(0)).toMap
+    assert(projects == Map("PROJ1" -> 1L, "PROJ2" -> 2L))
+    val fact = table("feasibility")
+      .select("key", "fk_reviewer", "fk_reporter", "fk_project", "feasibility_estimate_total")
+      .collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+      .toMap
+    assert(fact == Map(
+      "F-1" -> ((2L, 1L, 1L, 20520.0)),
+      "F-2" -> ((2L, 1L, 1L, 7200.0)),
+      "F-3" -> ((3L, 1L, 1L, 3600.0)),
+      "F-5" -> ((3L, 1L, 2L, 0.0))))
+  }
+
+  /** (stages, tasks) of one `writeJdbc` call. */
+  private def writeShape(df: DataFrame, table: String, numPartitions: Int): (Int, Int) = {
+    val (_, stages, tasks) = ExecShape.measureTasks(spark, "jdbc-cap") {
+      Sinks.writeJdbc(df, url, table, props, numPartitions = numPartitions)
+    }
+    (stages, tasks)
+  }
+
+  test("writeJdbc caps connections by coalescing, never by a shuffle") {
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try conn.createStatement().executeUpdate("""CREATE TABLE "cap" ("id" BIGINT NOT NULL)""")
+    finally conn.close()
+    // 4 partitions under a cap of 2: 2 write tasks (2 connections), one stage
+    assert(writeShape(spark.range(0, 40, 1, 4).toDF(), "\"cap\"", numPartitions = 2) == ((1, 2)))
+    // 1 partition under a cap of 2: written as it is, no shuffle stage
+    assert(writeShape(spark.range(40, 50, 1, 1).toDF(), "\"cap\"", numPartitions = 2) == ((1, 1)))
+    assert(spark.read.jdbc(url, "\"cap\"", props).count() == 50)
+  }
 }

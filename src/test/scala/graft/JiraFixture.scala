@@ -1,8 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Properties
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
+import graft.pipeline.Etl
+import graft.sources.Sinks
+import graft.sources.Sinks.DimSpec
+
 /** Shared JIRA-shaped JSON fixture rows — the engine's port of the
   * reference's manual test rows (testing.sql:32-80), used by EtlSpec
-  * (inferred-schema path) and JiraSourceSpec (DSv2 connector path).
+  * (inferred-schema path) and JiraSourceSpec (DSv2 connector path),
+  * plus the fixture as one daily batch loaded into the Derby star
+  * schema (JdbcSinkSpec, ExecShapeSpec).
   */
 object JiraFixture {
 
@@ -67,5 +78,107 @@ object JiraFixture {
     val f = dir.resolve(name)
     java.nio.file.Files.writeString(f, rows.mkString("\n"))
     f.toString
+  }
+
+  /** Lands the fixture as one batch's four JSON-lines inputs in a
+    * fresh temp dir; `errored` lists the keys whose supplemental fetch
+    * failed.
+    */
+  def landBatch(errored: Seq[String]): Path = {
+    val dir = Files.createTempDirectory("jira_batch")
+    def put(name: String, rows: Seq[String]): Unit =
+      Files.writeString(dir.resolve(name), rows.mkString("\n"))
+    put("issues.jsonl", rawRows)
+    put("worklogs.jsonl", worklogRows)
+    put("details.jsonl", detailRows)
+    put("errored.jsonl", errored.map(k => s"""{"key": "$k"}"""))
+    dir
+  }
+
+  private val name = StructType(Seq(StructField("name", StringType)))
+
+  private val worklogSchema = StructType(Seq(
+    StructField("key", StringType),
+    StructField("worklogs", ArrayType(StructType(Seq(
+      StructField("author", name),
+      StructField("timeSpentSeconds", LongType),
+      StructField("id", StringType)))))))
+
+  private val detailSchema = StructType(Seq(
+    StructField("key", StringType),
+    StructField("fields", StructType(Seq(
+      StructField("customfield_12501", name),
+      StructField("reporter", name),
+      StructField("project", StructType(Seq(StructField("key", StringType)))),
+      StructField("created", StringType),
+      StructField("resolution", name),
+      StructField("resolutiondate", StringType))))))
+
+  /** `Etl.runReleasable` over a landed batch (the issues through the
+    * DSv2 connector), with the columns named as the star schema names
+    * them, and the handle that releases the batch's cache.
+    */
+  def runBatch(spark: SparkSession, dir: Path, thresholdPct: Double): (DataFrame, () => Unit) = {
+    def json(n: String, schema: StructType) =
+      spark.read.schema(schema).json(dir.resolve(n).toString)
+    val raw = spark.read
+      .format("graft.sources.JiraSearchSource")
+      .option("path", dir.resolve("issues.jsonl").toString)
+      .load()
+    val (fact, release) = Etl.runReleasable(
+      raw,
+      json("worklogs.jsonl", worklogSchema),
+      json("details.jsonl", detailSchema),
+      json("errored.jsonl", StructType(Seq(StructField("key", StringType)))),
+      thresholdPct)
+    val named = fact
+      .withColumnRenamed("reviewer", "reviewer_name")
+      .withColumnRenamed("reporter", "reporter_name")
+      .withColumnRenamed("project", "project_name")
+      .withColumnRenamed("linked_timespent", "issue_links_timespent")
+    (named, release)
+  }
+
+  val starSpecs: Seq[DimSpec] = Seq(
+    DimSpec("reviewer_name", "fk_reviewer", "jira_user"),
+    DimSpec("reporter_name", "fk_reporter", "jira_user"),
+    DimSpec("project_name", "fk_project", "project"))
+
+  private val starDims = Seq("jira_user" -> "username", "project" -> "name")
+
+  def derbyProps: Properties = {
+    val p = new Properties()
+    p.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    p
+  }
+
+  /** A fresh in-memory Derby database `db` holding the star schema and
+    * the `existing` dims' rows; returns its URL.
+    */
+  def starSchema(db: String, existing: Map[String, DataFrame]): String = {
+    val url = s"jdbc:derby:memory:$db;create=true"
+    Sinks.bootstrapStarSchema(url, derbyProps)
+    starDims.foreach { case (t, nameCol) =>
+      Sinks.writeJdbc(existing(t).withColumnRenamed("name", nameCol), url, "\"" + t + "\"", derbyProps)
+    }
+    url
+  }
+
+  /** The trigger-equivalent load of one batch: normalize against the
+    * in-memory `existing` dims (id, name), guard the keys, then write
+    * the dims' new rows and the fact over JDBC, dims first.
+    */
+  def loadBatch(
+      fact: DataFrame,
+      existing: Map[String, DataFrame],
+      url: String,
+      numPartitions: Int): Unit = {
+    val (dims, normalized) = Sinks.normalize(fact, existing, starSpecs)
+    val resolved = Sinks.requireResolved(normalized, starSpecs)
+    starDims.foreach { case (t, nameCol) =>
+      val added = dims(t).join(existing(t).select("id"), Seq("id"), "left_anti")
+      Sinks.writeJdbc(added.withColumnRenamed("name", nameCol), url, "\"" + t + "\"", derbyProps, numPartitions)
+    }
+    Sinks.writeJdbc(resolved, url, "\"feasibility\"", derbyProps, numPartitions)
   }
 }
