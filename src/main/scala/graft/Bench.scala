@@ -43,28 +43,14 @@ import scala.jdk.CollectionConverters._
   */
 object Bench {
 
-  /** Mirror of build.sbt's forked-run JVM flags: Spark 4 on JDK 17
-    * needs the add-opens when the session is created outside
-    * spark-submit, and the heap cap must match the parent's or child
-    * timings aren't comparable with single-JVM profiles.
+  /** The detail file's trailing `phase_error` member. Jackson writes
+    * the message as a JSON string, escaping quotes, backslashes and
+    * every control character (an exception message with a newline
+    * must not break the file).
     */
-  private def childJvmFlags: Seq[String] = {
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    opens ++ Seq(
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-Djava.awt.headless=true",
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "48g")}",
-    )
-  }
+  private[graft] def phaseErrorJson(e: String): String =
+    s""",
+"phase_error": ${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(e)}"""
 
   /** Flush filesystem writeback and settle. Dirty pages from a prior
     * query's shuffle writes otherwise compete with the next query's I/O
@@ -361,7 +347,13 @@ object Bench {
       val outFile = Files.createTempFile("graft_bench_", ".tsv")
       Files.deleteIfExists(outFile)
       val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-      val cmd = Seq(javaBin) ++ childJvmFlags ++ Seq(
+      // The child runs with the parent's own JVM flags: whatever
+      // launched the parent (build.sbt's forked `run`, or
+      // tools/run_main.sh) already carries the add-opens Spark 4 needs
+      // on JDK 17 outside spark-submit, and the same heap cap keeps
+      // child timings comparable with single-JVM profiles.
+      val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      val cmd = Seq(javaBin) ++ jvmFlags ++ Seq(
         "-cp", System.getProperty("java.class.path"), "graft.Bench",
         "--child", s"--queries=${qs.mkString(",")}", s"--out=$outFile",
         s"--sf-dir=$sfDir", s"--cpus=$cpus", s"--reps=$groupReps")
@@ -517,13 +509,13 @@ object Bench {
         else if (remaining - reserveSec < estRetry) budgetSkipped += q
         else
           try {
-            retried += q
             val before = scala.util.Try(calibratePingPong(20000)).getOrElse(-1.0)
             val rT0 = System.nanoTime()
             val rreps = runGroup(Seq(q), s"outlier$i", reps).getOrElse(q, Vector.empty)
             retrySecs += (System.nanoTime() - rT0) / 1e9
             val after = scala.util.Try(calibratePingPong(20000)).getOrElse(-1.0)
             retryDetail(q) = (rreps, before, after)
+            retried += q
             if (rreps.nonEmpty) results += q -> (results.getOrElse(q, Vector.empty) ++ rreps)
           } catch {
             case t: Throwable =>
@@ -534,7 +526,7 @@ object Bench {
     val retriedList = retried.result()
     val budgetSkippedList = budgetSkipped.result()
     val unretried = {
-      val done = retriedList.toSet
+      val done = retriedList.toSet ++ budgetSkippedList
       ranked.filterNot(done.contains)
     }
 
@@ -625,9 +617,7 @@ object Bench {
       if (shed.isEmpty) ""
       else s""",
 "reps_shed": [${shed.map { case (tag, r) => s"""{"group": "$tag", "reps": $r}""" }.mkString(", ")}]"""
-    val errorJson = phaseError.map(e =>
-      s""",
-"phase_error": "${e.replace("\\", "\\\\").replace("\"", "\\\"")}"""").getOrElse("")
+    val errorJson = phaseError.map(phaseErrorJson).getOrElse("")
     // Detail write failures must not stop the summary line below — the
     // println is the contract, the sidecar is best-effort.
     scala.util.Try(Files.writeString(Paths.get("bench_detail.json"),

@@ -49,6 +49,19 @@ object Config {
     }
   }
 
+  /** A forced-arm selector for an operator with an auto-selected arm
+    * pair: the explicit parameter wins, else the `envKey` environment
+    * variable as `on`/`off`, else None (the operator's auto-select
+    * decides). Any other env value fails fast instead of silently
+    * forcing an arm on a typo ("ON", "true", "1").
+    */
+  def armOverride(param: Option[Boolean], envKey: String): Option[Boolean] =
+    param.orElse(sys.env.get(envKey).map {
+      case "on" => true
+      case "off" => false
+      case other => throw new IllegalArgumentException(s"$envKey must be 'on' or 'off'; got '$other'")
+    })
+
   /** Standard layering for a `main(args)`: argv > real env > the
     * GRAFT_CONF properties file.
     */

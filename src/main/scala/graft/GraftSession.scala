@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *    locally, 2–3× total executor cores on a cluster) instead of the
   *    200 default;
   *  - AQE on, with skew-join splitting and partition coalescing —
-  *    the runtime re-plan that absorbs stats drift at 100 TB;
+  *    the runtime re-plan that absorbs stats drift at 100 TB — and
+  *    allowed to re-plan cache-building queries, so a node-sized
+  *    cached frame collapses to few partitions;
   *  - [[graft.functions.GraftExtensions]] installed, so the native
   *    codegen `graft_dot` is callable from any query;
   *  - UTC session timezone and nanos-as-long parquet reads — the
@@ -62,11 +64,8 @@ object GraftSession {
       // partition count). With it on, the cache build coalesces by
       // AQE's size rule — scale-adaptive by construction: corpus-
       // sized caches keep their width, node/pair-sized ones collapse
-      // to few partitions. A/B kill-switch:
-      // GRAFT_CACHED_PLAN_AQE=off restores the Spark default.
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (!sys.env.get("GRAFT_CACHED_PLAN_AQE").contains("off")).toString)
+      // to few partitions.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // localCheckpoint truncation normally stops at the FIRST marked

@@ -67,9 +67,9 @@ object ScaleCheck {
         .select(col("id_a"), col("id_b"))
     }
 
-    // Synthetic LARGE-VOCABULARY corpus for the BPE-trainer arm
-    // crossover (the fixtures' 31-word vocabulary can never exercise
-    // the incremental arm's regime): --docs (default 400k) DISTINCT
+    // Synthetic LARGE-VOCABULARY corpus for the BPE-trainer arms (the
+    // fixtures' 31-word vocabulary can never exercise the incremental
+    // arm's regime): --docs (default 400k) DISTINCT
     // hex words of length 8-15 over the 16-char alphabet, each row one
     // word repeated by a skewed weight — the trainer's corpus pass
     // collapses this to an N-row word-frequency table, so --docs IS
@@ -87,21 +87,16 @@ object ScaleCheck {
                 when(pmod(col("id"), lit(100)) === 0, lit(40)).otherwise(lit(0))).cast("int")))
             .as("text"))
     }
-    // --merges sizes the trainer probes (12 = the crossover rows;
-    // 512 = the local-vs-distributed A/B recorded in BpeTrainer.train's
-    // auto-select comment)
+    // --merges sizes the trainer probes (512 = the local-vs-distributed
+    // comparison recorded in BpeTrainer.train's auto-select comment)
     val nMerges = cfg.get("merges", "SPARK_GRAFT_SCALE_MERGES", "12").toInt
-    def bpeTrain(incr: Boolean): DataFrame =
+    def bpeTrain(local: Boolean): DataFrame =
       graft.operators.BpeTrainer
-        .trainDf(bigVocabCorpus, "text", nMerges, incremental = Some(incr), local = Some(false))
-    def bpeTrainLocal: DataFrame =
-      graft.operators.BpeTrainer
-        .trainDf(bigVocabCorpus, "text", nMerges, local = Some(true))
+        .trainDf(bigVocabCorpus, "text", nMerges, local = Some(local))
 
     val workloads: Seq[(String, () => DataFrame)] = Seq(
-      "bpetrain_full" -> (() => bpeTrain(false)),
-      "bpetrain_incr" -> (() => bpeTrain(true)),
-      "bpetrain_local" -> (() => bpeTrainLocal),
+      "bpetrain_incr" -> (() => bpeTrain(local = false)),
+      "bpetrain_local" -> (() => bpeTrain(local = true)),
       "minhash_pairs" -> (() => verifiedPairs),
       "components" -> (() => Dedup.connectedComponents(verifiedPairs)),
       "keeplist" -> (() => Dedup.keepList(docs, "doc_id", verifiedPairs)),

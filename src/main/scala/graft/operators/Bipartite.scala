@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-mode projections of bipartite incidence frames — the
@@ -17,20 +17,17 @@ import org.apache.spark.sql.functions._
   * class [[Dedup.editDistancePairs]] gates with `maxBlockRows` and
   * q118's triangle count defuses by degree orientation.
   *
-  * Guard mechanism (r10 shipped an EAGER pre-job gate — an extra
-  * count-max action per call that roughly doubled q146/q156 on
-  * healthy data, the r10 VERDICT/ADVICE ask): the per-key counts are
-  * now folded INTO the projection plan. A one-pass map-side-combined
-  * count per key feeds a `raise_error` projection, and the pair
-  * build joins through it on the same key partitioning — zero extra
-  * jobs, and a hub key kills the query loudly DURING the counts
-  * stage, before its quadratic fan-out materializes (degenerate keys
-  * are an EXPECTED failure mode to surface, not a hang to discover
-  * in a stage timeline). `GRAFT_BIPARTITE_GATE=eager` restores the
-  * r10 pre-job gate for A/B attribution (Profile protocol, min of 3
-  * reps at sf0.1/32cpu, eager → in-job: q146 4.14→3.38 s, q150
-  * 5.48→3.69 s, q151 5.93→5.12 s, q156 6.38→5.71 s — the in-job
-  * form won every arm, so it is the default).
+  * Guard mechanism: the per-key counts are folded INTO the
+  * projection plan. A one-pass map-side-combined count per key feeds
+  * a `raise_error` projection, and the pair build joins through it on
+  * the same key partitioning — zero extra jobs, and a hub key kills
+  * the query loudly DURING the counts stage, before its quadratic
+  * fan-out materializes (degenerate keys are an EXPECTED failure mode
+  * to surface, not a hang to discover in a stage timeline). An eager
+  * pre-job count-max gate cost one extra action per call and lost to
+  * this form on every query of the family (min of 3 reps at
+  * sf0.1/32cpu, eager → in-job: q146 4.14→3.38 s, q150 5.48→3.69 s,
+  * q151 5.93→5.12 s, q156 6.38→5.71 s).
   * Callers facing a legitimately heavy key should cap or sample that
   * key upstream — silently dropping pairs is not this operator's
   * call to make.
@@ -44,8 +41,7 @@ import org.apache.spark.sql.functions._
   * callers content with the session-wide sweep. Because the in-job
   * gate throws inside the CALLER's action, cache cleanup on the
   * throw path belongs to the caller's `finally` via the release
-  * handle (the eager A/B arm keeps the operator-side throw-path
-  * unpersist it always had).
+  * handle.
   */
 object Bipartite {
 
@@ -55,23 +51,6 @@ object Bipartite {
     * contribute before the projection's cost story stops holding.
     */
   val DefaultMaxKeyRows: Long = 10000L
-
-  private def eagerGate: Boolean =
-    sys.env.get("GRAFT_BIPARTITE_GATE").contains("eager")
-
-  /** The r10 eager pre-job gate, kept as the A/B arm: throws if any
-    * `keyCol` group of `inc` exceeds `maxKeyRows`. One aggregate + a
-    * 1-row driver fetch.
-    */
-  private def gateKeyFanoutEager(
-      inc: DataFrame, keyCol: String, maxKeyRows: Long, op: String): Unit = {
-    val biggestRow = inc.groupBy(col(keyCol)).count().agg(max(col("count"))).first()
-    val biggest = if (biggestRow.isNullAt(0)) 0L else biggestRow.getLong(0)
-    require(
-      biggest <= maxKeyRows,
-      s"$op: largest '$keyCol' group has $biggest incidence rows > maxKeyRows=$maxKeyRows — " +
-        "per-key pairing is quadratic in group size; cap or sample hub keys upstream")
-  }
 
   /** In-job guard frame: one row per key, whose projection RAISES when
     * the key's incidence count exceeds the gate. The `__g` column must
@@ -119,22 +98,14 @@ object Bipartite {
     require(minSupport >= 1, s"pairProjection: minSupport >= 1; got $minSupport")
     require(maxKeyRows >= 1, s"pairProjection: maxKeyRows >= 1; got $maxKeyRows")
     val inc = incidence.select(col(keyCol).as("__k"), col(itemCol).as("__i")).persist()
-    val release = { () => inc.unpersist(); () }
-    try {
-      val a = inc.select(col("__k"), col("__i").as("item_a"))
-      val gated =
-        if (eagerGate) { gateKeyFanoutEager(inc, "__k", maxKeyRows, "pairProjection"); a }
-        else a.join(guardedKeys(inc, maxKeyRows, "pairProjection"), Seq("__k"))
-      val out = gated
-        .join(inc.select(col("__k"), col("__i").as("item_b")), Seq("__k"))
-        .filter(col("item_a") < col("item_b"))
-        .groupBy(col("item_a"), col("item_b"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= minSupport)
-      (out, release)
-    } catch {
-      case t: Throwable => release(); throw t
-    }
+    val out = inc.select(col("__k"), col("__i").as("item_a"))
+      .join(guardedKeys(inc, maxKeyRows, "pairProjection"), Seq("__k"))
+      .join(inc.select(col("__k"), col("__i").as("item_b")), Seq("__k"))
+      .filter(col("item_a") < col("item_b"))
+      .groupBy(col("item_a"), col("item_b"))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= minSupport)
+    (out, () => { inc.unpersist(); () })
   }
 
   /** [[pairProjectionReleasable]] without the handle — the incidence
@@ -172,23 +143,14 @@ object Bipartite {
     val inc = incidence
       .select(col(keyCol).as("__k"), col(itemCol).as("__i"), col(timeCol).as("__t"))
       .persist()
-    val release = { () => inc.unpersist(); () }
-    try {
-      val a = inc.select(col("__k"), col("__i").as("src"), col("__t").as("dep"))
-      val gated =
-        if (eagerGate) {
-          gateKeyFanoutEager(inc, "__k", maxKeyRows, "temporalPairProjection"); a
-        } else a.join(guardedKeys(inc, maxKeyRows, "temporalPairProjection"), Seq("__k"))
-      val out = gated
-        .join(
-          inc.select(col("__k"), col("__i").as("dst"), col("__t").as("arr")),
-          Seq("__k"))
-        .filter(col("arr") > col("dep") && col("src") =!= col("dst"))
-        .select(col("src"), col("dst"), col("dep"), col("arr"))
-      (out, release)
-    } catch {
-      case t: Throwable => release(); throw t
-    }
+    val out = inc.select(col("__k"), col("__i").as("src"), col("__t").as("dep"))
+      .join(guardedKeys(inc, maxKeyRows, "temporalPairProjection"), Seq("__k"))
+      .join(
+        inc.select(col("__k"), col("__i").as("dst"), col("__t").as("arr")),
+        Seq("__k"))
+      .filter(col("arr") > col("dep") && col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), col("dep"), col("arr"))
+    (out, () => { inc.unpersist(); () })
   }
 
   /** [[temporalPairProjectionReleasable]] without the handle. */

@@ -30,38 +30,34 @@ import org.apache.spark.sql.functions._
   * Scale shape: the CORPUS pays exactly one pass (the distinct-word
   * count aggregate — vocabulary ≪ corpus, the same q167/q168
   * observation the inference side exploits). Every training round
-  * then runs on VOCABULARY-sized state, with TWO counting arms and a
-  * measured auto-select (r12):
+  * then runs on VOCABULARY-sized state, on one of TWO arms chosen from
+  * the OBSERVED vocabulary (see [[train]]):
   *
-  *  - FULL RECOUNT (small vocabularies): re-explode every adjacent
-  *    pair each round — one shuffle, two stages, minimal per-round
-  *    overhead; the right arm when the explode is a few thousand rows.
-  *  - INCREMENTAL (vocabulary ≥ [[IncrAutoVocabFloor]]): maintain the
-  *    (l, r, c) pair table by DELTA — the fix every real BPE trainer
-  *    ships. Applying merge (l, r) only changes pair counts inside
-  *    words that CONTAIN (l, r) adjacently, so each round filters the
-  *    word table to those rows, folds the merge over just them, and
-  *    subtracts their old / adds their new pair rows into the running
-  *    table in ONE re-aggregate. Exact integer bookkeeping, bit-equal
-  *    to a full recount (BpeTrainerSpec arm-equality cases). Per-round
-  *    shuffle volume drops from every adjacent pair in the vocabulary
-  *    (~Σ|word|) to the touched-word delta + the distinct-pair table.
+  *  - LOCAL (vocabulary ≤ [[LocalVocabCeil]]): collect the word
+  *    histogram and finish the greedy loop on the driver
+  *    ([[trainLocal]]).
+  *  - INCREMENTAL (larger vocabularies): maintain the (l, r, c) pair
+  *    table by DELTA — the fix every real BPE trainer ships. Applying
+  *    merge (l, r) only changes pair counts inside words that CONTAIN
+  *    (l, r) adjacently, so each round filters the word table to
+  *    those rows, folds the merge over just them, and subtracts their
+  *    old / adds their new pair rows into the running table in ONE
+  *    re-aggregate. Exact integer bookkeeping, bit-equal to the local
+  *    arm (BpeTrainerSpec arm-equality cases). Per-round shuffle
+  *    volume is the touched-word delta + the distinct-pair table, not
+  *    every adjacent pair in the vocabulary (~Σ|word|).
   *
-  * `GRAFT_BPE_INCR=on|off` forces a distributed arm (the A/B switch);
-  * the `incremental` parameter overrides both, and either form of
-  * explicit distributed-arm request also opts OUT of the r13 local
-  * (driver-side) arm's auto-select — `local`/`GRAFT_BPE_LOCAL` have
-  * the final say on that axis. Still exactly ONE argmax
-  * action per merge in either arm — inherent to greedy BPE (each pick
-  * depends on the previous fold) — so a 32k-merge production
-  * vocabulary remains 32k small jobs; what the delta maintenance
-  * removes is the per-round O(Σ|word|) explode+shuffle that made each
-  * job vocabulary-sized. Word and count tables are leaf-materialized
-  * each round (checkpointed row RDD, rewrapped) so round plans never
-  * stack — the graph loops' checkpoint discipline; materialization
-  * rides the NEXT round's argmax job (each argmax computes exactly
-  * one deferred generation: counts_k ← delta_k ← words_(k-1)),
-  * keeping the one-job-per-merge floor. Requires
+  * The incremental arm is still exactly ONE argmax action per merge —
+  * inherent to greedy BPE (each pick depends on the previous fold) —
+  * so a 32k-merge production vocabulary remains 32k small jobs; what
+  * the delta maintenance removes is the per-round O(Σ|word|)
+  * explode+shuffle that made each job vocabulary-sized. Word and
+  * count tables are leaf-materialized each round (checkpointed row
+  * RDD, rewrapped) so round plans never stack — the graph loops'
+  * checkpoint discipline; materialization rides the NEXT round's
+  * argmax job (each argmax computes exactly one deferred generation:
+  * counts_k ← delta_k ← words_(k-1)), keeping the one-job-per-merge
+  * floor. Requires
   * `spark.checkpoint.checkpointAllMarkedAncestors=true` (set by
   * [[graft.GraftSession]]): the deferred generations mean more than
   * one marked RDD per action path, and default truncation stops at
@@ -79,8 +75,7 @@ import org.apache.spark.sql.functions._
 object BpeTrainer {
 
   /** Adjacent symbol pairs (overlapping allowed) as an array of
-    * (l, r) structs — the shared explode/predicate source for both
-    * counting arms. Empty for 0/1-symbol arrays (zero-length slices).
+    * (l, r) structs — the incremental arm's explode source. Empty for 0/1-symbol arrays (zero-length slices).
     */
   private def adjPairs(syms: Column): Column =
     zip_with(
@@ -122,14 +117,6 @@ object BpeTrainer {
         explode(adjPairs(col("syms"))).as("p"))
       .select(col("p.l").as("l"), col("p.r").as("r"), col("c"))
 
-  /** Frequency-weighted adjacent-pair counts: one explode + one
-    * map-side-combined aggregate.
-    */
-  private def pairCounts(words: DataFrame, negate: Boolean): DataFrame =
-    pairRows(words, negate)
-      .groupBy(col("l"), col("r"))
-      .agg(sum(col("c")).as("c"))
-
   /** One left-to-right non-overlapping merge pass over a symbol
     * array — the `list_reduce` fold of the q167 oracle, as a Spark
     * `aggregate` HOF. Vocabulary-sized input only (never corpus-grain:
@@ -148,6 +135,16 @@ object BpeTrainer {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
           .otherwise(concat(acc, array(x))))
 
+  /** Bounded-collect ceiling for the driver-side arm (r12 verdict
+    * Next #3): the word histogram may come down to the driver only
+    * when the OBSERVED vocabulary count (already materialized for the
+    * loop-session sizing) clears this — the Relational.scala
+    * pre-collect-count guard idiom. 1M distinct words ≈ tens of MB of
+    * symbol arrays: trivially driver-resident, while a genuinely huge
+    * crawl vocabulary stays on the incremental arm.
+    */
+  final val LocalVocabCeil: Long = 1L << 20
+
   /** Train `nMerges` merges over the corpus's whitespace-word
     * frequencies (empties dropped — the corpus convention shared with
     * q167 and the python trainer). Returns the merges in rank order.
@@ -159,45 +156,18 @@ object BpeTrainer {
     * `make_bpe.py --bytes` / [[graft.functions.BpeTokens.encodeBytes]].
     * The byte mapping runs as a column expression (per-byte binary
     * substring → hex → chr) over the vocabulary-sized word table only.
-    */
-  /** Vocabulary floor for auto-selecting the incremental arm,
-    * bracketed by the ScaleCheck `bpetrain` crossover measurements
-    * (12 merges, hex-word synthetic corpus, 32 cores):
     *
-    *   - fixtures (vocab 31): full 8.2/9.6 s vs incr 9.8/12.1 s
-    *     (q175/q176 sf0.1) — per-round stage overhead dominates, full
-    *     wins;
-    *   - 400k words: full 25.3 s vs incr 24.9 s — tie;
-    *   - 1.6M words: full 123.3 s vs incr 61.1 s — the delta arm wins
-    *     2.0× (the whole-vocabulary pair explode now dominates).
-    *
-    * The floor sits at the tie point's upper edge; at a real
-    * multi-million-word corpus vocabulary the auto-select lands on
-    * the delta arm with a measured ≥2× margin that grows with V.
+    * `local` forces an arm: `Some(true)` the driver-side arm (fails
+    * loudly above [[LocalVocabCeil]]), `Some(false)` the incremental
+    * arm; `None` defers to `GRAFT_BPE_LOCAL=on|off`, then to the
+    * observed-vocabulary auto-select.
     */
-  final val IncrAutoVocabFloor: Long = 1L << 19
-
-  /** Bounded-collect ceiling for the driver-side arm (r12 verdict
-    * Next #3): the word histogram may come down to the driver only
-    * when the OBSERVED vocabulary count (already materialized for the
-    * loop-session sizing) clears this — the Relational.scala
-    * pre-collect-count guard idiom. 1M distinct words ≈ tens of MB of
-    * symbol arrays: trivially driver-resident, while a genuinely huge
-    * crawl vocabulary stays on the distributed arms.
-    */
-  final val LocalVocabCeil: Long = 1L << 20
-
-  // The r12–r15 auto-select additionally demanded nMerges >= 512 (a
-  // "short distributed loops are cheap" floor); the r16 optimization
-  // round retired it — see the auto-select comment in [[train]].
-
   def train(
       corpus: DataFrame,
       textCol: String,
       nMerges: Int,
       minPairCount: Long = 2L,
       byteAlphabet: Boolean = false,
-      incremental: Option[Boolean] = None,
       local: Option[Boolean] = None): Seq[(String, String)] = {
     require(nMerges >= 1 && nMerges <= 100000, s"nMerges in [1, 100000]; got $nMerges")
     require(minPairCount >= 1, s"minPairCount >= 1; got $minPairCount")
@@ -270,48 +240,23 @@ object BpeTrainer {
     val vocabRows = words0Rdd.count()
     val loopSpark = Graph.loopSessionFor(spark, vocabRows).getOrElse(spark)
     val words0Df = loopSpark.createDataFrame(words0Rdd, words0.schema)
-    // Arm order of precedence, each level explicit > env > auto:
-    // the LOCAL (driver-side) arm first — GRAFT_BPE_LOCAL on/off,
-    // auto when the OBSERVED vocabulary alone clears the
-    // bounded-collect ceiling (the r12 merge-count floor was retired
-    // in r16) — then between the distributed arms, GRAFT_BPE_INCR
-    // on/off > vocabulary-size auto-select.
-    def onOff(name: String)(v: String): Boolean = v match {
-      case "on"  => true
-      case "off" => false
-      case other =>
-        // Fail fast instead of silently forcing a default arm on a
-        // typo ("ON", "true", "1") — the contract is on|off
-        // (r12 ADVICE).
-        throw new IllegalArgumentException(s"$name must be 'on' or 'off'; got '$other'")
-    }
-    // An EXPLICIT distributed-arm request (incremental parameter or
-    // GRAFT_BPE_INCR env) opts out of the local auto-select — a caller
-    // A/B-ing the distributed arms must never be silently rerouted to
-    // a driver-side loop (r13 review finding).
-    val distributedRequested =
-      incremental.isDefined || sys.env.contains("GRAFT_BPE_INCR")
-    // Auto-select keys on the OBSERVED vocabulary alone (r16): the
-    // distributed arms cost one argmax ACTION per merge — pure
-    // scheduler latency whenever the word table is driver-sized — and
-    // the local arm is bit-equal by spec (BpeTrainerSpec arm-equality,
-    // 512 byte-alphabet merges) with its collect guarded by
-    // LocalVocabCeil. Measured: q175/q176 (48/64 merges, 31-word
-    // fixture vocab) spent 13.7 s of BENCH_r15 on distributed job
-    // round-trips; the 512-merge A/B records 80× (421.9 s vs 5.3 s,
-    // ScaleCheck bpetrain_full vs bpetrain_local, 50k words, 32
-    // cores). A genuinely huge vocabulary (> 2^20 observed words)
-    // stays distributed, so the 100 TB regime is unchanged.
-    val useLocal = local
-      .orElse(sys.env.get("GRAFT_BPE_LOCAL").map(onOff("GRAFT_BPE_LOCAL")))
-      .getOrElse(!distributedRequested && vocabRows <= LocalVocabCeil)
-    val useIncremental = incremental
-      .orElse(sys.env.get("GRAFT_BPE_INCR").map(onOff("GRAFT_BPE_INCR")))
-      .getOrElse(vocabRows >= IncrAutoVocabFloor)
+    // Arm choice, explicit > env > auto. Auto keys on the OBSERVED
+    // vocabulary alone (r16): the incremental arm costs one argmax
+    // ACTION per merge — pure scheduler latency whenever the word
+    // table is driver-sized — and the local arm is bit-equal by spec
+    // (BpeTrainerSpec arm-equality, 512 byte-alphabet merges) with its
+    // collect guarded by LocalVocabCeil. Measured: q175/q176 (48/64
+    // merges, 31-word fixture vocab) spent 13.7 s of BENCH_r15 on
+    // distributed job round-trips; at 512 merges over 50k words (32
+    // cores, ScaleCheck) the local arm took 5.3 s against 421.9 s for
+    // a distributed per-round recount. A genuinely huge vocabulary
+    // (> 2^20 observed words) stays distributed, so the 100 TB regime
+    // is unchanged.
+    val useLocal =
+      graft.Config.armOverride(local, "GRAFT_BPE_LOCAL").getOrElse(vocabRows <= LocalVocabCeil)
     try {
       if (useLocal) trainLocal(words0Df, nMerges, minPairCount, vocabRows)
-      else if (useIncremental) trainIncremental(loopSpark, words0Df, nMerges, minPairCount)
-      else trainFullRecount(loopSpark, words0Df, nMerges, minPairCount)
+      else trainIncremental(loopSpark, words0Df, nMerges, minPairCount)
     } finally words0Rdd.unpersist(): Unit
   }
 
@@ -365,13 +310,13 @@ object BpeTrainer {
     * vocabulary path): after the ONE corpus-grain distinct-word
     * count, the word histogram is usually small enough to finish the
     * greedy loop on the driver — one scheduler round-trip per merge ×
-    * a GPT-2-sized 32k vocabulary is ~32k jobs on the distributed
-    * arms, pure per-action latency. The collect is guarded by the
+    * a GPT-2-sized 32k vocabulary is ~32k jobs on the incremental
+    * arm, pure per-action latency. The collect is guarded by the
     * OBSERVED vocabulary count ([[LocalVocabCeil]] — the
     * Relational.scala pre-collect-count idiom); the genuinely huge
     * vocab case stays distributed.
     *
-    * Exact same recurrence as the distributed arms (BpeTrainerSpec
+    * Exact same recurrence as the incremental arm (BpeTrainerSpec
     * pins arm-equality at 512 merges): frequency-weighted adjacent
     * pair counts with overlap multiplicity, argmax (c DESC, l, r —
     * the tie-break compares [[utf8Cmp]] UTF-8 binary order, matching
@@ -392,7 +337,7 @@ object BpeTrainer {
     require(
       vocabRows <= LocalVocabCeil,
       s"BpeTrainer local arm: observed vocabulary $vocabRows exceeds the " +
-        s"driver-collect ceiling $LocalVocabCeil — use the distributed arms " +
+        s"driver-collect ceiling $LocalVocabCeil — use the incremental arm " +
         "(local = Some(false) or GRAFT_BPE_LOCAL=off)")
     import scala.collection.mutable
     val rows = words0.select(col("n"), col("syms")).collect()
@@ -498,8 +443,8 @@ object BpeTrainer {
 
   /** Checkpoint-mark a frame and rewrap it as an RDD-leaf DataFrame on
     * the loop session. LAZY: partitions persist (and lineage
-    * truncates) at the first job that computes the RDD — in both arms
-    * that is a later round's argmax, so materialization rides the
+    * truncates) at the first job that computes the RDD — a later
+    * round's argmax, so materialization rides the
     * existing one-job-per-merge floor instead of adding jobs.
     */
   private def leafMark(loopSpark: org.apache.spark.sql.SparkSession, df: DataFrame): (DataFrame, RowRdd) = {
@@ -522,57 +467,6 @@ object BpeTrainer {
       .limit(1)
       .collect()
 
-  /** A/B arm (`GRAFT_BPE_INCR=off`): re-explode every adjacent pair of
-    * the whole vocabulary each round — the r11 shape, kept as the
-    * incremental arm's equivalence reference.
-    */
-  private def trainFullRecount(
-      loopSpark: org.apache.spark.sql.SparkSession,
-      words0: DataFrame,
-      nMerges: Int,
-      minPairCount: Long): Seq[(String, String)] = {
-    var words = words0
-    var wordsRdd: RowRdd = null
-    var prevRdd: RowRdd = null
-    val merges = Vector.newBuilder[(String, String)]
-    var round = 0
-    var exhausted = false
-    try {
-      while (round < nMerges && !exhausted) {
-        val top = argmax(pairCounts(words, negate = false), minPairCount)
-        // the argmax action above has fully computed `words` — its
-        // predecessor's checkpointed blocks are now dead weight
-        if (prevRdd != null) { prevRdd.unpersist(); prevRdd = null }
-        if (top.isEmpty) exhausted = true
-        else {
-          val l = top(0).getString(0)
-          val r = top(0).getString(1)
-          merges += ((l, r))
-          // fold only rows that CONTAIN the pair (the codegen'd
-          // hasPair scan is ~free; the interpreted fold HOF is a
-          // per-round cost driver at large vocabularies — ScaleCheck
-          // bpetrain_full at 400k words: 31.3→25.3 s). Identity on
-          // non-matching rows either way, so results are unchanged.
-          val (next, nextRdd) = leafMark(
-            loopSpark,
-            words.select(
-              col("n"),
-              when(hasPair(col("syms"), l, r), mergeFold(col("syms"), l, r))
-                .otherwise(col("syms"))
-                .as("syms")))
-          prevRdd = wordsRdd
-          words = next
-          wordsRdd = nextRdd
-          round += 1
-        }
-      }
-      merges.result()
-    } finally {
-      if (prevRdd != null) prevRdd.unpersist(): Unit
-      if (wordsRdd != null) wordsRdd.unpersist(): Unit
-    }
-  }
-
   /** Incremental arm: maintain the (l, r, c) pair-count table by
     * delta. Applying merge (l, r) only changes counts of pairs inside
     * words containing (l, r) adjacently, so each round:
@@ -582,10 +476,12 @@ object BpeTrainer {
     *   counts_k   = (counts_(k-1) ∪ -pairs(touched.old)
     *                            ∪ +pairs(touched.new)) re-aggregated,
     *                zero rows dropped
-    *   words_k    = words_(k-1) minus touched, ∪ touched.new
+    *   words_k    = words_(k-1) with the fold applied to the rows
+    *                that contain (l, r), in place
     *
     * Exact integer bookkeeping — counts_k is bit-equal to a full
-    * recount of words_k (arm-equality pinned in BpeTrainerSpec), and
+    * recount of words_k (arm equality with [[trainLocal]] pinned in
+    * BpeTrainerSpec), and
     * a pair's count may RISE later (two merge paths can produce the
     * same symbol string, e.g. (a,bc) and (ab,c) both yield "abc"), so
     * sub-threshold pairs stay in the table; only exact zeros drop.
@@ -596,6 +492,15 @@ object BpeTrainer {
     * job per merge. A generation may only unpersist after its
     * successor is COMPUTED (truncated RDDs cannot recompute), hence
     * the two-round-deferred release queue.
+    *
+    * words_k is a narrow map of words_(k-1), never a union with
+    * touched_k: an RDD built over a checkpoint-marked leaf keeps the
+    * partition objects it saw before truncation, and a union +
+    * coalesce partition serializes its parents' partitions, so a
+    * per-round union chained every earlier round into each task and
+    * overflowed the serializer's stack (≈ 300-500 rounds; the task
+    * never launched and the job hung). Map partitions are the words_0
+    * leaf's at every depth.
     */
   private def trainIncremental(
       loopSpark: org.apache.spark.sql.SparkSession,
@@ -604,23 +509,25 @@ object BpeTrainer {
       minPairCount: Long): Seq[(String, String)] = {
     var words = words0
     var wordsRdd: RowRdd = null // null = words0 (caller-owned)
-    // every generation coalesces back to the words0 width: the unions
-    // below otherwise ADD their inputs' partition counts each round —
-    // words_k would double per round (exponential task blowup,
-    // measured: 41k tasks/stage by round ~15). coalesce is
-    // shuffle-free; the tables are vocabulary-sized.
+    // every counts generation coalesces back to the words0 width: the
+    // union below otherwise ADDS its inputs' partition counts each
+    // round (exponential task blowup, measured: 41k tasks/stage by
+    // round ~15). coalesce is shuffle-free; the tables are
+    // vocabulary-sized.
     val width = words0.rdd.getNumPartitions.max(1)
     // counts_0 is the ONE full-vocabulary pair aggregate the
     // incremental arm ever runs; leaf-marked so its two consumers
     // (round 1's argmax, counts_1) share one computation
     var (counts, countsRdd) =
-      leafMark(loopSpark, pairCounts(words0, negate = false).coalesce(width))
+      leafMark(
+        loopSpark,
+        pairRows(words0, negate = false).groupBy(col("l"), col("r")).agg(sum(col("c")).as("c")).coalesce(width))
     // Deferred release: a checkpointed generation may only unpersist
-    // once every consumer is COMPUTED. counts_k's sole consumer
-    // (counts_(k+1)) computes at the NEXT argmax; touched_k and
-    // words_k are also read by words_(k+1)/touched_(k+1), which
-    // compute one argmax LATER — hence the two-stage queue. At most
-    // ~3 vocabulary-sized generations are live at any time.
+    // once every consumer is COMPUTED. counts_k's and touched_k's sole
+    // consumer (counts_(k+1), counts_k) computes at the NEXT argmax;
+    // words_k is read by words_(k+1)/touched_(k+1), which compute one
+    // argmax LATER — hence the two-stage queue. At most ~3
+    // vocabulary-sized generations are live at any time.
     var freeAfter1: List[RowRdd] = Nil
     var freeAfter2: List[RowRdd] = Nil
     val merges = Vector.newBuilder[(String, String)]
@@ -648,10 +555,9 @@ object BpeTrainer {
               .select(col("n"), col("syms").as("old"), mergeFold(col("syms"), l, r).as("syms")))
           val (nextWords, nextWordsRdd) = leafMark(
             loopSpark,
-            words
-              .filter(!touchedPred)
-              .unionByName(touched.select(col("n"), col("syms")))
-              .coalesce(width))
+            words.select(
+              col("n"),
+              when(touchedPred, mergeFold(col("syms"), l, r)).otherwise(col("syms")).as("syms")))
           val (nextCounts, nextCountsRdd) = leafMark(
             loopSpark,
             counts
@@ -661,8 +567,8 @@ object BpeTrainer {
               .agg(sum(col("c")).as("c"))
               .filter(col("c") > 0)
               .coalesce(width))
-          freeAfter1 = Option(countsRdd).toList ::: freeAfter1
-          freeAfter2 = touchedRdd :: Option(wordsRdd).toList ::: freeAfter2
+          freeAfter1 = touchedRdd :: Option(countsRdd).toList ::: freeAfter1
+          freeAfter2 = Option(wordsRdd).toList ::: freeAfter2
           words = nextWords
           wordsRdd = nextWordsRdd
           counts = nextCounts
@@ -687,11 +593,10 @@ object BpeTrainer {
       nMerges: Int,
       minPairCount: Long = 2L,
       byteAlphabet: Boolean = false,
-      incremental: Option[Boolean] = None,
       local: Option[Boolean] = None): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    train(corpus, textCol, nMerges, minPairCount, byteAlphabet, incremental, local).zipWithIndex
+    train(corpus, textCol, nMerges, minPairCount, byteAlphabet, local).zipWithIndex
       .map { case ((l, r), i) => (i.toLong, l, r) }
       .toDF("rank", "l", "r")
   }

@@ -210,15 +210,8 @@ object ClassifierTrainer {
       val cwp = (n * 1000000L) / (2L * nPos) // non-negative: / == floorDiv
       val cwn = (n * 1000000L) / (2L * nNeg)
 
-      def onOff(name: String)(v: String): Boolean = v match {
-        case "on" => true
-        case "off" => false
-        case other =>
-          throw new IllegalArgumentException(s"$name must be 'on' or 'off'; got '$other'")
-      }
-      val useLocal = local
-        .orElse(sys.env.get("GRAFT_CLS_LOCAL").map(onOff("GRAFT_CLS_LOCAL")))
-        .getOrElse(nFeat <= LocalFeatCeil)
+      val useLocal =
+        graft.Config.armOverride(local, "GRAFT_CLS_LOCAL").getOrElse(nFeat <= LocalFeatCeil)
       if (useLocal)
         return trainLocalArm(feats0, docs0, buckets, epochs, lrMicro, n, cwp, cwn, nFeat)
 

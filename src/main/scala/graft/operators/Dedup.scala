@@ -914,14 +914,7 @@ object Dedup {
     // GRAFT_CC_LOCAL=off forces them for A/B attribution.
     // Arm precedence: explicit parameter > GRAFT_CC_LOCAL env > auto
     // by observed size (the BpeTrainer.train precedence).
-    val localRequested = local.orElse(sys.env.get("GRAFT_CC_LOCAL") match {
-      case Some("on")  => Some(true)
-      case Some("off") => Some(false)
-      case Some(other) =>
-        throw new IllegalArgumentException(s"GRAFT_CC_LOCAL must be 'on' or 'off'; got '$other'")
-      case None => None
-    })
-    if (localRequested.getOrElse(udRows <= LocalEdgeCeil)) {
+    if (graft.Config.armOverride(local, "GRAFT_CC_LOCAL").getOrElse(udRows <= LocalEdgeCeil)) {
       require(
         udRows <= LocalEdgeCeil,
         s"connectedComponents local arm: $udRows mirrored edge rows exceed the " +
@@ -932,13 +925,12 @@ object Dedup {
       return (labels, () => ())
     }
     // NO loop-session rebinding here (unlike the PageRank/HITS/
-    // relaxation family): the r10 LoopLab A/B measured the CC loop
+    // relaxation family): the CC loop measured
     // SLOWER under the edge-derived 1-partition clone (q51 3.79 vs
     // 2.57 s, q97 3.43 vs 1.89 s at sf0.1) — its per-round
     // convergence action over self-joining whole-node label frames
     // (viaNeighbor + viaJump + union + labelSum) loses more to
     // single-partition serialization than it saves in stage wakeups.
-    val (loopSpark, udLoop) = (spark, ud)
     // Decimal sum: label sums can exceed Long at planetary node counts,
     // and Spark 4 ANSI mode would throw on long-sum overflow.
     def labelSum(df: DataFrame): java.math.BigDecimal =
@@ -949,34 +941,22 @@ object Dedup {
     // iteration history.
     def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
       val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (loopSpark.createDataFrame(rdd, df.schema), rdd)
+      (spark.createDataFrame(rdd, df.schema), rdd)
     }
     // Env-gated per-round diagnostics (driver-side, once per round):
     // round wall-clock and label sum, for attributing CC cost between
     // round COUNT (algorithmic) and per-round fixed job overhead.
     val ccLog = sys.env.contains("GRAFT_CC_LOG")
     var (labels, labelsRdd) = materialize(
-      udLoop.groupBy(col("src").as("node"))
+      ud.groupBy(col("src").as("node"))
         .agg(min(least(col("src"), col("dst"))).as("component")))
     var prevSum = labelSum(labels)
     var converged = false
     var iter = 0
-    // Round batching (r10 VERDICT ask #6) was BUILT, MEASURED, and
-    // REVERTED: staging two propagation rounds per materialize+sum
-    // action keeps the fixpoint test exact (labels are monotone
-    // non-increasing under min folds, so an unchanged sum across a
-    // batch proves both rounds were no-ops) — but the staged inner
-    // round's frame is consumed ~4× by the outer round's joins
-    // (neighbor join + jump self-join + union leg) and recomputes
-    // each time, and AQE's per-action stage graph balloons (q51 shape
-    // 51/332 vs 31/140 jobs/stages). Profile A/B at sf0.1/32cpu (min
-    // of 3, GRAFT_LOOP_BATCH=2 vs default): q51 6.28 s vs 2.64 s,
-    // q97 6.01 s vs 2.33 s — 2.4–2.6× WORSE batched. Same structural
-    // verdict as the r10 loop-clone A/B: convergence-action loops
-    // over self-joining node frames want one cheap materialized
-    // action per round. The lever stays for re-runs; budget check is
-    // per-batch (up to batch-1 extra rounds past maxIter).
-    val ccBatch = math.max(1, sys.env.get("GRAFT_LOOP_BATCH").flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1))
+    // One propagation round per materialize+sum action: staging two
+    // rounds per action recomputed the inner round's frame for each
+    // of the outer round's ~4 consumers — q51 6.28 s vs 2.64 s, q97
+    // 6.01 s vs 2.33 s at sf0.1/32cpu.
     // One propagation round: neighbor min + POINTER JUMP (offer every
     // node its LABEL's label). Neighbor propagation alone moves the
     // min one hop per round — O(diameter) rounds, one Spark job per
@@ -992,7 +972,7 @@ object Dedup {
     // step alone found no improvement — the original component-min
     // fixpoint.
     def propagate(ls: DataFrame): DataFrame = {
-      val viaNeighbor = udLoop
+      val viaNeighbor = ud
         .join(ls.withColumnRenamed("node", "dst"), Seq("dst"))
         .select(col("src").as("node"), col("component"))
       val viaJump = ls
@@ -1007,17 +987,14 @@ object Dedup {
     }
     while (!converged && iter < maxIter) {
       val roundT0 = System.nanoTime()
-      var staged = labels
-      var steps = 0
-      while (steps < ccBatch) { staged = propagate(staged); steps += 1 }
-      val (next, nextRdd) = materialize(staged)
+      val (next, nextRdd) = materialize(propagate(labels))
       val nextSum = labelSum(next)
       labelsRdd.unpersist()
       labels = next
       labelsRdd = nextRdd
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
-      iter += steps
+      iter += 1
       if (ccLog)
         println(f"[cc] round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2f s sum=$nextSum converged=$converged")
     }

@@ -77,9 +77,6 @@ object Graph {
   private[operators] def loopSessionFor(
       sess: org.apache.spark.sql.SparkSession,
       rows: Long): Option[org.apache.spark.sql.SparkSession] = {
-    // Diagnostic kill-switch for A/B attribution (GRAFT_LOOP_STAGE=off
-    // reverts every loop to plain session-width rounds).
-    if (sys.env.get("GRAFT_LOOP_STAGE").contains("off")) return None
     val sessParts = sess.sessionState.conf.numShufflePartitions
     val p = math.max(
       1L,
@@ -453,11 +450,8 @@ object Graph {
     // but rebind=false: the wedge join's fan-out is quadratic in hub
     // degree, so the edge-derived loop width underestimates badly and
     // AQE's skew-split is wanted (see canonPairLeaf scaladoc).
-    // GRAFT_TRI_REBIND=on is the LoopLab A/B arm that restores the
-    // r10 inherit for attribution.
-    val (_, canon0, canonRows, canonRelease) = canonPairLeaf(
-      spark, edges, srcName, dstName,
-      rebind = sys.env.get("GRAFT_TRI_REBIND").contains("on"))
+    val (_, canon0, canonRows, canonRelease) =
+      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
     val canon = canon0.select(col("src").as("a"), col("dst").as("b"))
     if (canonRows == 0L) {
       canonRelease()
@@ -539,36 +533,18 @@ object Graph {
     val spark = edges.sparkSession
     val srcName = edges.columns(0)
     val dstName = edges.columns(1)
-    // TWO leaf materializations, caller plan first: canonicalizing
-    // lazily over the caller's plan lets Catalyst push the cheap
-    // least/greatest/self-loop conjuncts INTO that plan and reorder
-    // them with its filters — measured on the prefiltered near-dup
-    // pair build: the decimal-cosine conjunct ended up evaluated
-    // before the cheap double prefilter, re-paying the exact fold for
-    // all 12.5M candidate pairs (32 s vs 1 s, identical rows). A raw
-    // leaf freezes the caller's own optimized shape; the canonical
-    // distinct then runs over plain rows and cannot leak conjuncts.
-    val rawPlan = edges
-      .select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
-    val rawRdd = rawPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canonPlan = spark.createDataFrame(rawRdd, rawPlan.schema)
-      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val canonRdd = canonPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canon0 = spark.createDataFrame(canonRdd, canonPlan.schema)
-    val nCanon = canon0.count()
-    rawRdd.unpersist() // canonical leaf is built; the raw rows are dead weight
+    // Raw leaf first, then the canonical distinct over plain rows (the
+    // conjunct-leak guard, see canonPairLeaf). NO loop-session
+    // rebinding: the peel loop ran SLOWER under the 1-partition clone
+    // (q139 4.83 vs 3.27 s at sf0.1); like CC, its per-round
+    // convergence action over the shrinking survivor joins loses more
+    // to single-partition serialization than it saves in stage wakeups.
+    val (loopSpark, canon, nCanon, canonRelease) =
+      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
     if (nCanon == 0L) {
-      canonRdd.unpersist()
-      return (canon0.select(col("src").as("node"), lit(0L).as("deg")).limit(0), () => ())
+      canonRelease()
+      return (canon.select(col("src").as("node"), lit(0L).as("deg")).limit(0), () => ())
     }
-    // NO loop-session rebinding (r10 LoopLab A/B: the peel loop ran
-    // SLOWER under the 1-partition clone — q139 4.83 vs 3.27 s at
-    // sf0.1; like CC, its per-round convergence action over the
-    // shrinking survivor joins loses more to single-partition
-    // serialization than it saves in stage wakeups).
-    val (loopSpark, canon) = (spark, canon0)
     val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
     // Each round materializes through an RDD-backed LEAF (the PageRank
     // loop's checkpoint trick): a plain DataFrame.persist/unpersist
@@ -596,47 +572,25 @@ object Graph {
     var aliveCount = alive.count()
     var converged = false
     var round = 0
-    // Round batching (r10 VERDICT ask #6) was BUILT, MEASURED, and
-    // REVERTED: peeling two rounds per convergence action keeps the
-    // fixpoint test exact (survivor sets are monotone, so an
-    // unchanged count across a batch proves both peels were no-ops)
-    // and halves the actions — but the staged inner peel's lazy
-    // survivor agg is consumed by BOTH of the next peel's joins, and
-    // the recomputation + AQE's larger per-action stage graph cost
-    // far more than the saved action overhead. Profile A/B at
-    // sf0.1/32cpu (min of 3, GRAFT_LOOP_BATCH=2 vs default): q139
-    // 5.83 s batched vs 3.67 s unbatched (1.6× WORSE; shape 71/435
-    // vs 87/693 jobs/stages — fewer actions, far more expensive
-    // each). Same verdict as the r10 loop-clone A/B on this loop
-    // family: per-round-convergence loops over self-joining frames
-    // want one cheap action per round. The lever stays for re-runs.
-    val batch = math.max(1, sys.env.get("GRAFT_LOOP_BATCH").flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1))
+    // One peel per convergence action: batching two peels per action
+    // halved the actions but recomputed the staged inner survivor agg
+    // for both of the next peel's joins — q139 5.83 s batched vs
+    // 3.67 s unbatched at sf0.1/32cpu. Loops over self-joining frames
+    // want one cheap action per round.
     while (!converged && round < maxRounds) {
       // Peel the EDGES to the current survivors first, then count
       // degrees over the shrunken list — identical recurrence to
       // re-filtering the full list (see scaladoc), but round cost
       // tracks the live subgraph instead of the original graph.
-      // The budget check is per-BATCH (a batch may run up to batch-1
-      // peels past maxRounds before the !converged throw) — otherwise
-      // a peel depth the unbatched loop just fit would spuriously
-      // throw under batching's one-batch detection lag.
-      var stagedE = eCur
-      var surv = alive
-      var steps = 0
-      while (steps < batch) {
-        stagedE = stagedE
-          .join(surv.select(col("node").as("src")), Seq("src"))
-          .join(surv.select(col("node").as("dst")), Seq("dst"))
-        surv = degrees(stagedE).filter(col("deg") >= k)
-        steps += 1
-      }
-      round += steps
-      val (nextE, nextERdd) = materialize(stagedE)
+      val peeled = eCur
+        .join(alive.select(col("node").as("src")), Seq("src"))
+        .join(alive.select(col("node").as("dst")), Seq("dst"))
+      round += 1
+      val (nextE, nextERdd) = materialize(peeled)
       val next = degrees(nextE).filter(col("deg") >= k)
       val nextCount = next.count()
       // next ⊆ alive by construction (peeling only removes), so equal
-      // cardinality IS set equality — the fixpoint test needs no join,
-      // and across a batch it certifies every peel in it was a no-op.
+      // cardinality IS set equality — the fixpoint test needs no join.
       converged = nextCount == aliveCount
       eRdd.unpersist()
       alive = next
@@ -645,12 +599,12 @@ object Graph {
       aliveCount = nextCount
     }
     if (!converged) {
-      eRdd.unpersist(); canonRdd.unpersist()
+      eRdd.unpersist(); canonRelease()
       throw new IllegalStateException(
         s"kCore(k=$k) did not converge in $maxRounds rounds ($aliveCount survivors) — raise maxRounds")
     }
     val lastERdd = eRdd
-    (alive, () => { lastERdd.unpersist(); canonRdd.unpersist(); () })
+    (alive, () => { lastERdd.unpersist(); canonRelease() })
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge
@@ -834,27 +788,13 @@ object Graph {
       leaves += rdd
       spark.createDataFrame(rdd, df.schema)
     }
-    // Raw leaf FIRST (freeze the caller's optimized plan), then the
-    // canonical distinct over plain rows — see kCoreReleasable: a lazy
-    // canonicalization leaks its cheap conjuncts into the caller plan
-    // where reordering can re-run an expensive verify for every
-    // candidate pair (32 s vs 1 s measured).
-    val rawPlan = edges
-      .select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
-    val rawRdd = rawPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canon0 = materialize(
-      spark.createDataFrame(rawRdd, rawPlan.schema)
-        .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct())
-    canon0.count()
-    rawRdd.unpersist()
-    // NO loop-session rebinding for BFS (r10 LoopLab A/B: 4.68 vs
+    // NO loop-session rebinding for BFS (4.68 s rebound vs
     // 4.38 s at sf0.1 — the frontier loop's per-round action +
     // growing visited anti-join sits on the CC/kCore side of the
     // line, unlike the fixed-round relaxations below which measured
     // faster under the clone).
-    val canon = canon0
+    val (_, canon, _, canonRelease) =
+      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
     val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
     val seedCol = seeds.columns(0)
     var frontier = materialize(
@@ -876,7 +816,7 @@ object Graph {
       frontier = next
     }
     val out = rounds.reduce(_ unionByName _)
-    (out, () => { leaves.foreach(_.unpersist()); () })
+    (out, () => { leaves.foreach(_.unpersist()); canonRelease() })
   }
 
   /** Weighted shortest-path distance within `rounds` hops — the
@@ -1084,17 +1024,15 @@ object Graph {
     * edge-sized loop session when [[loopSessionFor]] says the count
     * warrants one. Returns (session for the loop, canonical frame
     * bound to it, canonical row count, cache release).
-    */
-  /** `rebind = false` keeps the canonical frame on the CALLER session
+    *
+    * `rebind = false` keeps the canonical frame on the CALLER session
     * (session shuffle width, AQE on). The edge-derived loop sizing is
     * justified only for iterative rounds whose shapes are fixed
     * node-sized equi-joins; an operator whose fan-out EXCEEDS the edge
     * count — triangleCounts' wedge join is quadratic in hub degree —
     * must not inherit the narrow width, and AQE's skew-split is useful
-    * exactly there (r10 ADVICE: q118 regressed 1.78→2.43 s on the
-    * silent inherit; GRAFT_TRI_REBIND=on A/B on this container,
-    * Profile min-of-3 at sf0.1/32cpu: 1.62 s rebind=false vs 2.97 s
-    * rebound, 1.83×).
+    * exactly there (q118 at sf0.1/32cpu, Profile min-of-3: 1.62 s
+    * rebind=false vs 2.97 s rebound, 1.83×).
     */
   private def canonPairLeaf(
       spark: org.apache.spark.sql.SparkSession,

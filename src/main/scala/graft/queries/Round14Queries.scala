@@ -64,24 +64,6 @@ object Round14Queries {
   private def imageRecords(s: SparkSession, d: String): Dataset[Multimodal.MediaRecord] =
     imageRecordsFor(Tables.documents(s, d))
 
-  /** Pre-codec input spread (guide §2.5 input skew, r17): the media
-    * fixture corpora arrive as ONE parquet split and `mapPartitions`
-    * preserves input partitioning, so without this every per-corpus
-    * codec chain (PNG/WAV/Y4M encode+decode, 200–500 µs/record —
-    * CodecProbe) ran as a SINGLE task at any core count. CodecProbe's
-    * thread-scaling arm pins that the kernels parallelize cleanly
-    * (4000 recs: 0.92 s @1 thread → 0.16 s @32 — no ImageIO lock
-    * pathology), and spreadFewSplits is the identity once the input
-    * already has ≥ parallelism splits (the real-crawl case).
-    * `GRAFT_MEDIA_SPREAD=off` restores the single-task funnel for A/B
-    * attribution.
-    */
-  private[graft] def spreadForCodec(
-      df: org.apache.spark.sql.DataFrame,
-      key: String): org.apache.spark.sql.DataFrame =
-    if (sys.env.get("GRAFT_MEDIA_SPREAD").contains("off")) df
-    else Relational.spreadFewSplits(df, key)
-
   /** The corpus generator over an arbitrary (doc_id, …) frame — shared
     * with [[graft.ScaleCheck]]'s `imagehash` slope probe. */
   private[graft] def imageRecordsFor(docs: org.apache.spark.sql.DataFrame): Dataset[Multimodal.MediaRecord] = {
@@ -92,8 +74,17 @@ object Round14Queries {
     // (a two-branch union over the same unpersisted Dataset would
     // re-run the full-corpus PNG encode for the variant branch —
     // r14 review finding).
-    // Spread BEFORE the codec pass — see spreadForCodec.
-    spreadForCodec(docs.select(col("doc_id")), "doc_id")
+    // Spread BEFORE the codec pass: the media fixture corpora arrive
+    // as ONE parquet split and `mapPartitions` preserves input
+    // partitioning, so without this every per-corpus codec chain
+    // (PNG/WAV/Y4M encode+decode, 200–500 µs/record — CodecProbe) ran
+    // as a SINGLE task at any core count. CodecProbe's thread-scaling
+    // arm pins that the kernels parallelize cleanly (4000 recs: 0.92 s
+    // @1 thread → 0.16 s @32 — no ImageIO lock pathology), and
+    // spreadFewSplits is the identity once the input already has
+    // ≥ parallelism splits (the real-crawl case). Every codec pass in
+    // the media queries spreads its input the same way.
+    Relational.spreadFewSplits(docs.select(col("doc_id")), "doc_id")
       .as[Long].mapPartitions(_.flatMap { id =>
       val wb = (64 + id % 61).toInt
       val hb = (64 + (id / 61) % 53).toInt
@@ -255,9 +246,9 @@ object Round14Queries {
   private[graft] def audioRecordsFor(docs: org.apache.spark.sql.DataFrame): Dataset[Multimodal.MediaRecord] = {
     val s = docs.sparkSession
     import s.implicits._
-    // Spread BEFORE the codec pass — see spreadForCodec; the shuffle
+    // Spread BEFORE the codec pass — see imageRecordsFor; the shuffle
     // carries (id, ASCII projection) only.
-    spreadForCodec(
+    Relational.spreadFewSplits(
       docs
         .filter(col("text").isNotNull)
         .select(col("doc_id"), regexp_replace(col("text"), "[^ -~]", "").as("__t"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Dedup, Multimodal, Relational}
 import graft.queries.CoreQueries.Q
 
 /** Round-15 surface — closing the last modality (r14 verdict Next #5)
@@ -53,9 +53,9 @@ object Round15Queries {
   private[graft] def videoRecordsFor(docs: org.apache.spark.sql.DataFrame): Dataset[Multimodal.MediaRecord] = {
     val s = docs.sparkSession
     import s.implicits._
-    // Spread BEFORE the codec pass — see Round14Queries.spreadForCodec.
-    Round14Queries
-      .spreadForCodec(docs.filter(col("doc_id") % 2 === 0).select(col("doc_id")), "doc_id")
+    // Spread BEFORE the codec pass — see Round14Queries.imageRecordsFor.
+    Relational
+      .spreadFewSplits(docs.filter(col("doc_id") % 2 === 0).select(col("doc_id")), "doc_id")
       .as[Long]
       .mapPartitions(_.flatMap { id =>
         val w = (24 + id % 13).toInt
@@ -334,12 +334,12 @@ object Round15Queries {
       .filter(col("text").isNotNull)
       .select(dId.as("leader"), regexp_replace(col("text"), "[^ -~]", "").as("__t"))
       .filter(length(col("__t")) >= 1)
-    // Spread before the codec pass — see Round14Queries.spreadForCodec
+    // Spread before the codec pass — see Round14Queries.imageRecordsFor
     // (the leader join inherits the single-split scan's partitioning
     // via a broadcast, so the WAV encode would otherwise run as one
     // task).
-    val audRecords = Round14Queries
-      .spreadForCodec(
+    val audRecords = Relational
+      .spreadFewSplits(
         docs
           .select(dId, (dId - dId % 5).as("leader"))
           .join(leaderTxt, "leader")
@@ -441,9 +441,9 @@ object Round15Queries {
   private[graft] def groupImageSh(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    // Spread before the codec pass — see Round14Queries.spreadForCodec.
-    val imgRecords = Round14Queries
-      .spreadForCodec(docs.select(col("doc_id")), "doc_id")
+    // Spread before the codec pass — see Round14Queries.imageRecordsFor.
+    val imgRecords = Relational
+      .spreadFewSplits(docs.select(col("doc_id")), "doc_id")
       .as[Long].mapPartitions(_.map { id =>
         val w = (64 + id % 61).toInt
         val h = (64 + (id / 61) % 53).toInt
@@ -503,9 +503,9 @@ object Round15Queries {
     */
   val q198VideoSceneCut: Q = (s, d) => {
     import s.implicits._
-    // Spread before the codec pass — see Round14Queries.spreadForCodec.
-    val recs = Round14Queries
-      .spreadForCodec(
+    // Spread before the codec pass — see Round14Queries.imageRecordsFor.
+    val recs = Relational
+      .spreadFewSplits(
         Tables.documents(s, d).filter(col("doc_id") % 2 === 1).select(col("doc_id")),
         "doc_id")
       .as[Long]

@@ -52,4 +52,11 @@ class BenchLedgerSpec extends AnyFunSuite {
     }
     assert(uncovered.isEmpty, s"ledger lines outside any (or in multiple) segments: $uncovered")
   }
+
+  test("phase_error: a message with newlines and control chars keeps the detail JSON valid") {
+    val msg = "java.lang.IllegalStateException: boom\n\tat graft.X(X.scala:1)\r\u0001 \"q\" \\ end"
+    val doc = s"""{\n"queries": {}${Bench.phaseErrorJson(msg)}\n}\n"""
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
+    assert(tree.get("phase_error").asText() == msg)
+  }
 }

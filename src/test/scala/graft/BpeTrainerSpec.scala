@@ -76,18 +76,19 @@ class BpeTrainerSpec extends AnyFunSuite {
       s"first divergence at rank ${got.zip(BpeTokens.bytesMerges).indexWhere { case (a, b) => a != b }}")
   }
 
-  test("arm equality: incremental delta counts ≡ full re-aggregate (both alphabets, sf0.001)") {
-    // the r12 incremental pair-count maintenance must be bit-equal to
-    // the full per-round recount (GRAFT_BPE_INCR=off arm) — including
-    // the subtle path where a pair's count RISES later because two
-    // merge paths produce the same symbol string
+  test("arm equality: incremental delta counts ≡ driver-side local arm (both alphabets, sf0.001)") {
+    // the incremental arm's distributed pair-count maintenance must be
+    // bit-equal to the driver-side local arm (the reference: pinned to
+    // the python-trained fixture below) — including the subtle path
+    // where a pair's count RISES later because two merge paths produce
+    // the same symbol string
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     for (byteMode <- Seq(false, true)) {
-      val full = BpeTrainer.train(docs, "text", 24, byteAlphabet = byteMode, incremental = Some(false))
-      val incr = BpeTrainer.train(docs, "text", 24, byteAlphabet = byteMode, incremental = Some(true))
+      val loc = BpeTrainer.train(docs, "text", 24, byteAlphabet = byteMode, local = Some(true))
+      val incr = BpeTrainer.train(docs, "text", 24, byteAlphabet = byteMode, local = Some(false))
       assert(
-        incr == full,
-        s"byteMode=$byteMode first divergence at rank ${incr.zip(full).indexWhere { case (a, b) => a != b }}")
+        incr == loc,
+        s"byteMode=$byteMode first divergence at rank ${incr.zip(loc).indexWhere { case (a, b) => a != b }}")
     }
   }
 
@@ -95,11 +96,11 @@ class BpeTrainerSpec extends AnyFunSuite {
     import spark.implicits._
     // 'abc' can arise as (a)(bc) or (ab)(c); the incremental table must
     // credit BOTH paths to the same (x, abc)-style string keys exactly
-    // as a recount would. Corpus engineered so merges pass through both.
+    // as the local arm does. Corpus engineered so merges pass through both.
     val docs = Seq("abc abc abc xab xab cy cy bc bc bc bc ab ab ab").toDF("text")
-    val full = BpeTrainer.train(docs, "text", 8, minPairCount = 1L, incremental = Some(false))
-    val incr = BpeTrainer.train(docs, "text", 8, minPairCount = 1L, incremental = Some(true))
-    assert(incr == full)
+    val loc = BpeTrainer.train(docs, "text", 8, minPairCount = 1L, local = Some(true))
+    val incr = BpeTrainer.train(docs, "text", 8, minPairCount = 1L, local = Some(false))
+    assert(incr == loc)
   }
 
   test("local arm: hand cases (greedy order, tie-break, stops, control-char skip)") {
@@ -123,7 +124,7 @@ class BpeTrainerSpec extends AnyFunSuite {
       s"first divergence at rank ${got.zip(BpeTokens.merges).indexWhere { case (a, b) => a != b }}")
   }
 
-  test("arm equality: driver-side local arm ≡ full recount at 512 merges (byte alphabet, sf0.001)") {
+  test("arm equality: driver-side local arm ≡ incremental arm at 512 merges (byte alphabet, sf0.001)") {
     // the r12 verdict's production-vocab ask: the local arm must stay
     // bit-equal to the distributed recurrence DEEP into the merge
     // sequence — 512 merges, byte alphabet (the production form),
@@ -133,8 +134,11 @@ class BpeTrainerSpec extends AnyFunSuite {
     // the ScaleCheck bigVocabCorpus construction at 3000 DISTINCT
     // deterministic hex words: rich enough for 512+, vocab-sized
     // rounds cheap enough for the suite. Covers rise-after-threshold,
-    // tie-breaks in the U+0100..U+01FF mapped alphabet, and the lazy
-    // heap's stale-entry discipline over a long sequence.
+    // tie-breaks in the U+0100..U+01FF mapped alphabet, the lazy
+    // heap's stale-entry discipline over a long sequence, and the
+    // incremental arm's task size at depth (a per-round union once
+    // chained every earlier round into each task, and the job hung
+    // past a few hundred merges).
     val docs = spark
       .range(3000)
       .select(
@@ -144,15 +148,14 @@ class BpeTrainerSpec extends AnyFunSuite {
             substring(md5(col("id").cast("string")), lit(1), (pmod(col("id"), lit(8)) + 8).cast("int")),
             (lit(1) + pmod(col("id"), lit(3))).cast("int")))
           .as("text"))
-    val full = BpeTrainer.train(
-      docs, "text", 512, minPairCount = 1L, byteAlphabet = true,
-      incremental = Some(false), local = Some(false))
+    val incr = BpeTrainer.train(
+      docs, "text", 512, minPairCount = 1L, byteAlphabet = true, local = Some(false))
     val loc = BpeTrainer.train(
       docs, "text", 512, minPairCount = 1L, byteAlphabet = true, local = Some(true))
     assert(
-      loc == full,
-      s"length loc=${loc.length} full=${full.length}; first divergence at rank " +
-        s"${loc.zip(full).indexWhere { case (a, b) => a != b }}")
+      loc == incr,
+      s"length loc=${loc.length} incr=${incr.length}; first divergence at rank " +
+        s"${loc.zip(incr).indexWhere { case (a, b) => a != b }}")
     assert(loc.length >= 512, s"corpus exhausted early (${loc.length}) — deepen the fixture")
   }
 

@@ -231,15 +231,16 @@ class PartitionInvarianceSpec extends AnyFunSuite {
   test("BPE training (both arms) is partitioning-invariant") {
     // the argmax is a global count-then-(l,r) tie-break and every
     // count is an exact integer — so the trained merge SEQUENCE must
-    // not depend on how the corpus arrives. Pinned for both counting
-    // arms (the incremental arm's delta bookkeeping rides shuffles
-    // whose layout varies with input partitioning).
+    // not depend on how the corpus arrives. Pinned for both arms (the
+    // incremental arm's delta bookkeeping rides shuffles whose layout
+    // varies with input partitioning; the local arm collects the word
+    // histogram in partition order).
     val docs = Tables.documents(spark, sf).limit(200)
-    for (incr <- Seq(false, true)) {
-      val a = operators.BpeTrainer.train(docs.repartition(1), "text", 12, incremental = Some(incr))
+    for (local <- Seq(true, false)) {
+      val a = operators.BpeTrainer.train(docs.repartition(1), "text", 12, local = Some(local))
       val b = operators.BpeTrainer.train(
-        docs.repartition(13, col("doc_id")), "text", 12, incremental = Some(incr))
-      assert(a == b, s"incremental=$incr: partitioning changed the merge sequence")
+        docs.repartition(13, col("doc_id")), "text", 12, local = Some(local))
+      assert(a == b, s"local=$local: partitioning changed the merge sequence")
     }
   }
 }
