@@ -52,6 +52,26 @@ object Bench {
     s""",
 "phase_error": ${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(e)}"""
 
+  /** Seconds every child fork is given, whatever the budget: killing
+    * a child that would have finished loses whole queries to save
+    * seconds. A fork the budget cannot give this much is not made.
+    */
+  private[graft] val ForkFloorSec = 120.0
+
+  /** Timed reps for the next group under the wall budget, or None to
+    * shed the group unforked. `spendable` is the remaining budget minus
+    * the bookkeeping reserve; a group costs 2 rep-units (JVM, session,
+    * warmup) plus one per rep, at `perUnitSec` seconds per unit as
+    * learned from the completed groups (0 before the first). A group
+    * that cannot fit [[ForkFloorSec]] is shed (its queries report as
+    * failed); any other gets its fair share of the spendable budget,
+    * at least 1 rep and at most `reps`.
+    */
+  private[graft] def groupReps(reps: Int, spendable: Double, groupsLeft: Int, perUnitSec: Double): Option[Int] =
+    if (spendable < ForkFloorSec) None
+    else if (perUnitSec <= 0) Some(reps)
+    else Some(math.max(1, math.min(reps, math.floor(spendable / groupsLeft / perUnitSec).toInt - 2)))
+
   /** Flush filesystem writeback and settle. Dirty pages from a prior
     * query's shuffle writes otherwise compete with the next query's I/O
     * inside its timed region (the round-6 container's disk sustains
@@ -312,9 +332,10 @@ object Bench {
     // and on a degraded container the r16 32-core run outlived the
     // driver's window and died at rc 124 WITHOUT printing the JSON
     // line, which violates the contract as surely as deleting the
-    // println. The budget makes the summary line unconditional: reps
-    // and outlier retries are shed against the remaining budget (shed
-    // work is named in bench_detail.json), never the other way around.
+    // println. The budget makes the summary line unconditional: reps,
+    // outlier retries and whole groups are shed against the remaining
+    // budget (shed work is named in bench_detail.json), never the other
+    // way around.
     // Default 3000 s sits inside every observed driver window (the r16
     // 8-core run finished at 3557 s and was the slowest on record).
     val budgetSec = cfg.get("budget", "SPARK_GRAFT_BENCH_BUDGET_SEC", "3000").toDouble
@@ -361,9 +382,7 @@ object Bench {
       val pb = new ProcessBuilder(cmd.asJava)
         .redirectOutput(log).redirectErrorStream(true)
       val p = pb.start()
-      // A budget-capped fork still gets a 120 s floor: killing a child
-      // that would have finished loses whole queries to save seconds.
-      val forkTimeout = math.min(timeoutSec.toDouble, math.max(120.0, remaining - reserveSec)).toLong
+      val forkTimeout = math.min(timeoutSec.toDouble, math.max(ForkFloorSec, remaining - reserveSec)).toLong
       val done = p.waitFor(forkTimeout, java.util.concurrent.TimeUnit.SECONDS)
       if (!done) { p.destroyForcibly(); p.waitFor(): Unit }
       val parsed: Map[String, Vector[Double]] =
@@ -385,13 +404,12 @@ object Bench {
     // bench_detail.json — "was the machine degraded WHILE this group
     // ran" stops being an after-the-fact forensics exercise.
     val groupCalib = Vector.newBuilder[(String, Seq[String], Double, Double)]
-    // Budget-aware rep shedding: model a group as (JVM+session+warmup ≈
-    // 2 rep-units) + r timed rep-units, learn seconds-per-unit from the
-    // completed groups, and size each remaining group's reps to its
-    // fair share of the remaining budget. Floor 1 — a group is never
-    // skipped outright (skipping reports healthy queries as failed);
-    // shed groups are recorded in the detail for the audit.
+    // Budget-aware rep shedding ([[groupReps]]): each remaining group
+    // gets its fair share of the remaining budget, and a group that
+    // cannot fit the fork floor is not forked at all, so the budget is
+    // a hard wall. Both are recorded in the detail for the audit.
     val shedEvents = Vector.newBuilder[(String, Int)]
+    val groupsShed = Vector.newBuilder[(String, Seq[String])]
     var unitsDone = 0.0
     var groupSecs = 0.0
     // The measurement phases run under a catch-all so that a bug or a
@@ -400,22 +418,20 @@ object Bench {
     var phaseError: Option[String] = None
     try {
       groups.zipWithIndex.foreach { case (g, i) =>
-        quiesce()
-        val sched = scala.util.Try(calibratePingPong(20000)).getOrElse(-1.0)
-        val mt = scala.util.Try(calibrateMd5Mt()).getOrElse(-1.0)
-        groupCalib += (((s"g$i", g, sched, mt)))
         val perUnit = if (unitsDone > 0) groupSecs / unitsDone else 0.0
-        val groupReps =
-          if (perUnit <= 0) reps
-          else {
-            val share = math.max(0.0, remaining - reserveSec) / (groups.length - i)
-            math.max(1, math.min(reps, math.floor(share / perUnit).toInt - 2))
-          }
-        if (groupReps < reps) shedEvents += ((s"g$i", groupReps))
-        val gT0 = System.nanoTime()
-        results ++= runGroup(g, s"g$i", groupReps)
-        groupSecs += (System.nanoTime() - gT0) / 1e9
-        unitsDone += 2.0 + groupReps
+        groupReps(reps, remaining - reserveSec, groups.length - i, perUnit) match {
+          case None => groupsShed += ((s"g$i", g))
+          case Some(r) =>
+            quiesce()
+            val sched = scala.util.Try(calibratePingPong(20000)).getOrElse(-1.0)
+            val mt = scala.util.Try(calibrateMd5Mt()).getOrElse(-1.0)
+            groupCalib += (((s"g$i", g, sched, mt)))
+            if (r < reps) shedEvents += ((s"g$i", r))
+            val gT0 = System.nanoTime()
+            results ++= runGroup(g, s"g$i", r)
+            groupSecs += (System.nanoTime() - gT0) / 1e9
+            unitsDone += 2.0 + r
+        }
       }
       // One retry pass, fresh JVM PER QUERY, for anything a child lost to
       // a hang or crash. Singleton groups on retry: a deterministically-
@@ -427,7 +443,7 @@ object Bench {
       if (missing.nonEmpty) {
         quiesce()
         missing.zipWithIndex.foreach { case (q, i) =>
-          if (remaining - reserveSec > 60.0)
+          if (remaining - reserveSec >= ForkFloorSec)
             results ++= runGroup(Seq(q), s"retry$i", reps)
         }
       }
@@ -506,7 +522,7 @@ object Bench {
           else if (unitsDone > 0) (groupSecs / unitsDone) * (2.0 + reps)
           else 60.0
         if (i >= retryCap || phaseError.isDefined) ()
-        else if (remaining - reserveSec < estRetry) budgetSkipped += q
+        else if (remaining - reserveSec < math.max(estRetry, ForkFloorSec)) budgetSkipped += q
         else
           try {
             val before = scala.util.Try(calibratePingPong(20000)).getOrElse(-1.0)
@@ -617,18 +633,23 @@ object Bench {
       if (shed.isEmpty) ""
       else s""",
 "reps_shed": [${shed.map { case (tag, r) => s"""{"group": "$tag", "reps": $r}""" }.mkString(", ")}]"""
+    val groupsShedList = groupsShed.result()
+    val groupsShedJson =
+      if (groupsShedList.isEmpty) ""
+      else s""",
+"groups_budget_shed": [${groupsShedList.map { case (tag, qs) => s"""{"group": "$tag", "queries": [${qs.map("\"" + _ + "\"").mkString(", ")}]}""" }.mkString(", ")}]"""
     val errorJson = phaseError.map(phaseErrorJson).getOrElse("")
     // Detail write failures must not stop the summary line below — the
     // println is the contract, the sidecar is best-effort.
     scala.util.Try(Files.writeString(Paths.get("bench_detail.json"),
       s"""{
-"config": {"sf": "$sfDir", "cpus": $cpus, "reps": $reps, "group_size": $groupSize, "budget_sec": ${fmt(budgetSec)}, "budget_elapsed_sec": ${fmt(budgetSec - remaining)}, "protocol": "fork-per-group JVM, warmup pass, forced GC + sync between timed regions, min of reps incl. outlier retry; per-group calib probes (sched normalized to 100k rounds); >2x-CALIB-NORMALIZED-ledger queries re-forked once with adjacent calib_sched; reps/retries shed against SPARK_GRAFT_BENCH_BUDGET_SEC", "calib_md5_3e6_sec": ${fmt(calib)}, "calib_md5_mt_sec": ${fmt(calibMt)}, "calib_sched_pingpong_sec": ${fmt(calibSched)}, "outlier_retry_cap": $retryCap, "ledger_segments": [${segments.map { case (lo, hi, c) => s"""{"from": $lo, "to": $hi, "calib_md5": ${fmt(c)}}""" }.mkString(", ")}], "ledger_missing": [${ledgerMissing.map("\"" + _ + "\"").mkString(", ")}]},
+"config": {"sf": "$sfDir", "cpus": $cpus, "reps": $reps, "group_size": $groupSize, "budget_sec": ${fmt(budgetSec)}, "budget_elapsed_sec": ${fmt(budgetSec - remaining)}, "protocol": "fork-per-group JVM, warmup pass, forced GC + sync between timed regions, min of reps incl. outlier retry; per-group calib probes (sched normalized to 100k rounds); >2x-CALIB-NORMALIZED-ledger queries re-forked once with adjacent calib_sched; reps/retries/groups shed against SPARK_GRAFT_BENCH_BUDGET_SEC", "calib_md5_3e6_sec": ${fmt(calib)}, "calib_md5_mt_sec": ${fmt(calibMt)}, "calib_sched_pingpong_sec": ${fmt(calibSched)}, "outlier_retry_cap": $retryCap, "ledger_segments": [${segments.map { case (lo, hi, c) => s"""{"from": $lo, "to": $hi, "calib_md5": ${fmt(c)}}""" }.mkString(", ")}], "ledger_missing": [${ledgerMissing.map("\"" + _ + "\"").mkString(", ")}]},
 "group_calib": [
 $groupsJson
 ],
 "queries": {
 $detail
-}$unretriedJson$budgetSkippedJson$shedJson$errorJson
+}$unretriedJson$budgetSkippedJson$shedJson$groupsShedJson$errorJson
 }
 """)): Unit
 

@@ -69,17 +69,23 @@ object CodecProbe {
     // 1-thread line is the serial bound, ideal scaling divides by the
     // thread count. Machine-state-robust: all arms run back-to-back.
     for (threads <- Seq(1, 8, 32)) {
-      val per = math.max(1, n / threads)
+      // The first n % threads workers take one record more, so every
+      // arm runs exactly the ids 0 until n.
+      val (per, extra) = (n / threads, n % threads)
+      val ranges = (0 until threads).map { t =>
+        val from = t * per + math.min(t, extra)
+        from until from + per + (if (t < extra) 1 else 0)
+      }
       val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       try {
         val t0 = System.nanoTime()
-        val futs = (0 until threads).map { t =>
+        val futs = ranges.map { ids =>
           pool.submit(new java.util.concurrent.Callable[Long] {
             def call(): Long = {
-              var i = 0
+              var i = ids.start
               var sink = 0L
-              while (i < per) {
-                val id = (t * per + i).toLong
+              while (i < ids.end) {
+                val id = i.toLong
                 val r = graft.operators.Multimodal
                   .encodeBlockPng(2 * id, id, (64 + id % 61).toInt, (64 + (id / 61) % 53).toInt)
                 val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
@@ -93,7 +99,7 @@ object CodecProbe {
         val sink = futs.map(_.get(600, java.util.concurrent.TimeUnit.SECONDS): Long).sum
         val dt = (System.nanoTime() - t0) / 1e9
         if (sink == Long.MinValue) println("")
-        println(f"[codec] png encode+decode+hash x${threads}thr: ${dt}%.2f s wall for ${per * threads} recs")
+        println(f"[codec] png encode+decode+hash x${threads}thr: ${dt}%.2f s wall for ${ranges.map(_.size).sum} recs")
       } finally pool.shutdownNow()
     }
   }

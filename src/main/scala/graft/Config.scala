@@ -1,7 +1,7 @@
 package graft
 
 /** Layered runtime configuration for the entry points (Bench / Verify /
-  * PlanAudit): `--key=value` argv beats environment beats properties
+  * Probe): `--key=value` argv beats environment beats properties
   * file beats built-in default — the reference's config precedence
   * (reference etl.js:10-12: argv overrides env overrides config.json).
   *

@@ -1,31 +1,16 @@
 package graft
 
-/** Execution-shape probe: jobs + total stages submitted for a query's
-  * full end-to-end run — the shape record for the ITERATIVE tail
-  * (PageRank/TrustRank/HITS/power-iteration), whose loop rounds never
-  * appear in the final frame's static plan. A future "graph tail is
-  * 2× slower" round compares these counts against BASELINE.md's
-  * pinned row: counts unchanged ⇒ container regression, counts grown
-  * ⇒ a plan/loop regression — no identical-code worktree A/B needed.
-  *
-  * `tools/run_main.sh graft.ExecShape q113_pagerank q115_trustrank ...`
+/** Execution shape of a block of Spark work: the jobs, stages and
+  * tasks the scheduler submitted for it. It is the shape record for
+  * the ITERATIVE tail (PageRank/TrustRank/HITS/power-iteration), whose
+  * loop rounds never appear in the final frame's static plan. A future
+  * "graph tail is 2× slower" round compares these counts against
+  * BASELINE.md's pinned row: counts unchanged ⇒ container regression,
+  * counts grown ⇒ a plan/loop regression — no identical-code worktree
+  * A/B needed. `ExecShapeSpec` pins them; `graft.Probe` prints them
+  * per query.
   */
 object ExecShape {
-  def main(args: Array[String]): Unit = {
-    val cfg = Config(args)
-    val sfDir = cfg.get("sf-dir", "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = cfg.get("cpus", "SPARK_GRAFT_CPUS", "32").toInt
-    val names = args.filterNot(_.startsWith("--")).toSeq
-    val spark = GraftSession.local(cpus, appName = "graft-execshape")
-    spark.sparkContext.setLogLevel("WARN")
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
-      GraftSession.releaseAllCaches(spark)
-      val (jobs, stages) = measure(spark, name)(fn(spark, sfDir).queryExecution.toRdd.count(): Unit)
-      println(s"""{"probe":"exec_shape","query":"$name","jobs":$jobs,"stages":$stages}""")
-    }
-    spark.stop()
-  }
 
   /** Runs `body` under a job group and returns (jobs, total stages)
     * the scheduler submitted for it. The status store is fed by the
@@ -45,9 +30,15 @@ object ExecShape {
     * way: (jobs, stages, tasks).
     */
   def measureTasks(spark: org.apache.spark.sql.SparkSession, tag: String)(
+      body: => Unit): (Int, Int, Int) =
+    measureGroup(spark, s"execshape-$tag-${System.nanoTime()}")(body)
+
+  /** [[measureTasks]] under the caller's job group id `group`, for a
+    * caller that also reads the group's stages from a listener.
+    */
+  def measureGroup(spark: org.apache.spark.sql.SparkSession, group: String)(
       body: => Unit): (Int, Int, Int) = {
     val sc = spark.sparkContext
-    val group = s"execshape-$tag-${System.nanoTime()}"
     sc.setJobGroup(group, group, interruptOnCancel = false)
     try body
     finally sc.clearJobGroup()

@@ -81,7 +81,7 @@ object GraftSession {
   }
 
   /** Local session with `cpus` worker threads — the shape the driver
-    * contract mains (Bench/Verify/PlanAudit) run under.
+    * contract mains (Bench/Verify) and Probe run under.
     */
   def local(cpus: Int, appName: String = "graft"): SparkSession =
     builder(s"local[$cpus]", math.max(1, cpus), appName).getOrCreate()

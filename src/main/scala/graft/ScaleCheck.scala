@@ -15,7 +15,7 @@ import graft.operators.{Dedup, Similarity}
   * and so inflate the pair space quadratically (real work, but a
   * duplicate-blowup stress test rather than a corpus-growth slope).
   *
-  * Workloads (each timed like Profile/Bench — full materialization,
+  * Workloads (each timed like Probe/Bench — full materialization,
   * cache sweep + forced GC between reps):
   *  - `minhash_pairs`: shingle→h32→MinHash(12)→LSH(12,3 bands)→
   *    hashed exact-Jaccard verify ≥ 0.6 (q20's stages, unsliced)

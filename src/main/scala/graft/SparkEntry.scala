@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{AffinityQueries, AnalyticQueries, CoreQueries, ExtQueries, PipelineQueries, QualityQueries, Round3Queries, Round4Queries, Round5Queries, Round6Queries, Round7Queries, Round8Queries, Round9Queries, Round10Queries, Round11Queries, Round12Queries, Round13Queries, Round14Queries, Round15Queries, SelectionQueries, SketchQueries, StatQueries}
+import graft.queries.{Catalog, CoreQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -14,12 +14,10 @@ object SparkEntry {
     CoreQueries.q07Delta(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.all ++ AnalyticQueries.all ++ PipelineQueries.all ++ StatQueries.all ++ ExtQueries.all ++ Round3Queries.all ++ QualityQueries.all ++ Round4Queries.all ++ Round5Queries.all ++ Round6Queries.all ++ Round7Queries.all ++ Round8Queries.all ++ SelectionQueries.all ++ SketchQueries.all ++ AffinityQueries.all ++ Round9Queries.all ++ Round10Queries.all ++ Round11Queries.all ++ Round12Queries.all ++ Round13Queries.all ++ Round14Queries.all ++ Round15Queries.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Catalog.declared.builds
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ AnalyticQueries.oracles ++ PipelineQueries.oracles ++ StatQueries.oracles ++ ExtQueries.oracles ++ Round3Queries.oracles ++ QualityQueries.oracles ++ Round4Queries.oracles ++ Round5Queries.oracles ++ Round6Queries.oracles ++ Round7Queries.oracles ++ Round8Queries.oracles ++ SelectionQueries.oracles ++ SketchQueries.oracles ++ AffinityQueries.oracles ++ Round9Queries.oracles ++ Round10Queries.oracles ++ Round11Queries.oracles ++ Round12Queries.oracles ++ Round13Queries.oracles ++ Round14Queries.oracles ++ Round15Queries.oracles
+  lazy val oracleSql: Map[String, String] = Catalog.declared.oracleSql
 }

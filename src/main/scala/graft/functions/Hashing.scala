@@ -32,12 +32,6 @@ object Hashing {
   def h48(c: Column): Column =
     conv(substring(md5(c), 1, 12), 16, 10).cast("long")
 
-  /** Hash-family member `j`: `h60(s + "#j")` — the salt makes the k
-    * MinHash functions independent while staying reproducible in SQL.
-    */
-  def h60Salted(c: Column, j: Int): Column =
-    h60(concat(c, lit("#" + j)))
-
   /** 32-bit base hash (first 8 hex digits of md5). Cheap affine family
     * members derive from ONE md5 per value — the k-independent-hashes
     * trick that makes MinHash O(md5) instead of O(k·md5).

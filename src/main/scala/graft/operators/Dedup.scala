@@ -102,9 +102,6 @@ object Dedup {
   def hofShingleHashes(text: Column, w: Int): Column =
     array_distinct(transform(charShingles(text, w), t => h32(t)))
 
-  /** Distinct whitespace tokens (the word-set view of a document). */
-  def tokenSet(text: Column): Column = array_distinct(split(text, " "))
-
   /** All word `n`-grams with order and multiplicity — `n` aligned
     * slices of the token array zipped (same once-per-row invariant
     * discipline as [[charGramsAll]]; an index lambda would re-split

@@ -671,31 +671,17 @@ object AffinityQueries {
       | MAX(CASE WHEN rn = CAST(CEIL(n * 0.9) AS BIGINT) THEN gap_us END) AS p90_us
       |FROM r GROUP BY 1 ORDER BY event_type NULLS FIRST""".stripMargin
 
-  def all: Map[String, Q] = Map(
-    "q156_temporal_reach" -> q156TemporalReach,
-    "q157_gap_quantiles" -> q157GapQuantiles,
-    "q146_copurchase_lift" -> q146CoPurchase,
-    "q147_decay_score" -> q147DecayScore,
-    "q148_bfs_dist" -> q148BfsDist,
-    "q149_greedy_cover" -> q149GreedyCover,
-    "q150_cosupply_rank" -> q150CoSupplyRank,
-    "q151_trust_dist" -> q151TrustDist,
-    "q152_lang_eval" -> q152LangEval,
-    "q153_weighted_quantiles" -> q153WeightedQuantiles,
-    "q154_calibration" -> q154Calibration,
-    "q155_event_transitions" -> q155Transitions)
-
-  def oracles: Map[String, String] = Map(
-    "q146_copurchase_lift" -> q146Sql,
-    "q147_decay_score" -> q147Sql,
-    "q148_bfs_dist" -> q148Sql,
-    "q149_greedy_cover" -> q149Sql,
-    "q150_cosupply_rank" -> q150Sql,
-    "q151_trust_dist" -> q151Sql,
-    "q152_lang_eval" -> q152Sql,
-    "q153_weighted_quantiles" -> q153Sql,
-    "q154_calibration" -> q154Sql,
-    "q155_event_transitions" -> q155Sql,
-    "q156_temporal_reach" -> q156Sql,
-    "q157_gap_quantiles" -> q157Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q156_temporal_reach", q156TemporalReach, q156Sql),
+    Query("q157_gap_quantiles", q157GapQuantiles, q157Sql),
+    Query("q146_copurchase_lift", q146CoPurchase, q146Sql),
+    Query("q147_decay_score", q147DecayScore, q147Sql),
+    Query("q148_bfs_dist", q148BfsDist, q148Sql),
+    Query("q149_greedy_cover", q149GreedyCover, q149Sql),
+    Query("q150_cosupply_rank", q150CoSupplyRank, q150Sql),
+    Query("q151_trust_dist", q151TrustDist, q151Sql),
+    Query("q152_lang_eval", q152LangEval, q152Sql),
+    Query("q153_weighted_quantiles", q153WeightedQuantiles, q153Sql),
+    Query("q154_calibration", q154Calibration, q154Sql),
+    Query("q155_event_transitions", q155Transitions, q155Sql))
 }

@@ -278,27 +278,14 @@ object AnalyticQueries {
       |FROM embeddings WHERE vec_id < 5
       |ORDER BY vec_id NULLS FIRST, pos NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q10_rollup" -> q10Rollup,
-    "q11_window" -> q11Window,
-    "q12_setops" -> q12SetOps,
-    "q13_semi_anti" -> q13SemiAnti,
-    "q14_json_extract" -> q14Json,
-    "q15_event_windows" -> q15EventWindows,
-    "q16_sessionize" -> q16Sessionize,
-    "q17_array_fold" -> q17ArrayFold,
-    "q18_explode" -> q18Explode
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q10_rollup" -> q10Sql,
-    "q11_window" -> q11Sql,
-    "q12_setops" -> q12Sql,
-    "q13_semi_anti" -> q13Sql,
-    "q14_json_extract" -> q14Sql,
-    "q15_event_windows" -> q15Sql,
-    "q16_sessionize" -> q16Sql,
-    "q17_array_fold" -> q17Sql,
-    "q18_explode" -> q18Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q10_rollup", q10Rollup, q10Sql),
+    Query("q11_window", q11Window, q11Sql),
+    Query("q12_setops", q12SetOps, q12Sql),
+    Query("q13_semi_anti", q13SemiAnti, q13Sql),
+    Query("q14_json_extract", q14Json, q14Sql),
+    Query("q15_event_windows", q15EventWindows, q15Sql),
+    Query("q16_sessionize", q16Sessionize, q16Sql),
+    Query("q17_array_fold", q17ArrayFold, q17Sql),
+    Query("q18_explode", q18Explode, q18Sql))
 }

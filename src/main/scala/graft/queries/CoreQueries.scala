@@ -310,27 +310,14 @@ object CoreQueries {
       |      UNION SELECT DISTINCT o_orderpriority FROM orders)
       |ORDER BY id""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_scan_filter_project" -> q02ScanFilterProject,
-    "q03_topk" -> q03TopK,
-    "q04_denorm_view" -> q04DenormView,
-    "q05_nation_revenue" -> q05NationRevenue,
-    "q06_child_rollup" -> q06ChildRollup,
-    "q07_delta" -> q07Delta,
-    "q08_quality_gate" -> q08QualityGate,
-    "q09_dim_ids" -> q09DimIds
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_scan_filter_project" -> q02Sql,
-    "q03_topk" -> q03Sql,
-    "q04_denorm_view" -> q04Sql,
-    "q05_nation_revenue" -> q05Sql,
-    "q06_child_rollup" -> q06Sql,
-    "q07_delta" -> q07Sql,
-    "q08_quality_gate" -> q08Sql,
-    "q09_dim_ids" -> q09Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01PricingSummary, q01Sql),
+    Query("q02_scan_filter_project", q02ScanFilterProject, q02Sql),
+    Query("q03_topk", q03TopK, q03Sql),
+    Query("q04_denorm_view", q04DenormView, q04Sql),
+    Query("q05_nation_revenue", q05NationRevenue, q05Sql),
+    Query("q06_child_rollup", q06ChildRollup, q06Sql),
+    Query("q07_delta", q07Delta, q07Sql),
+    Query("q08_quality_gate", q08QualityGate, q08Sql),
+    Query("q09_dim_ids", q09DimIds, q09Sql))
 }

@@ -325,31 +325,16 @@ object ExtQueries {
       | CAST(COUNT(*) AS BIGINT) AS cnt, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
       |FROM orders GROUP BY 1,2 ORDER BY 1 NULLS FIRST, 2 NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q40_tfidf" -> q40Tfidf,
-    "q41_grouping_sets" -> q41GroupingSets,
-    "q42_window_range" -> q42WindowRange,
-    "q43_kmv_distinct" -> q43KmvDistinct,
-    "q44_edit_distance" -> q44EditDistance,
-    "q45_unpivot" -> q45Unpivot,
-    "q46_mode" -> q46Mode,
-    "q47_exists_subquery" -> q47ExistsSubquery,
-    "q48_chunk" -> q48Chunk,
-    "q49_salted_join" -> q49SaltedJoin,
-    "q50_month_revenue" -> q50MonthRevenue
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q40_tfidf" -> q40Sql,
-    "q41_grouping_sets" -> q41Sql,
-    "q42_window_range" -> q42Sql,
-    "q43_kmv_distinct" -> q43Sql,
-    "q44_edit_distance" -> q44Sql,
-    "q45_unpivot" -> q45Sql,
-    "q46_mode" -> q46Sql,
-    "q47_exists_subquery" -> q47Sql,
-    "q48_chunk" -> q48Sql,
-    "q49_salted_join" -> q49Sql,
-    "q50_month_revenue" -> q50Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q40_tfidf", q40Tfidf, q40Sql),
+    Query("q41_grouping_sets", q41GroupingSets, q41Sql),
+    Query("q42_window_range", q42WindowRange, q42Sql),
+    Query("q43_kmv_distinct", q43KmvDistinct, q43Sql),
+    Query("q44_edit_distance", q44EditDistance, q44Sql),
+    Query("q45_unpivot", q45Unpivot, q45Sql),
+    Query("q46_mode", q46Mode, q46Sql),
+    Query("q47_exists_subquery", q47ExistsSubquery, q47Sql),
+    Query("q48_chunk", q48Chunk, q48Sql),
+    Query("q49_salted_join", q49SaltedJoin, q49Sql),
+    Query("q50_month_revenue", q50MonthRevenue, q50Sql))
 }

@@ -525,37 +525,19 @@ object PipelineQueries {
       |FROM lineitem GROUP BY l_returnflag
       |ORDER BY l_returnflag NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q19_exact_dedup" -> q19ExactDedup,
-    "q20_minhash_lsh" -> q20MinHashLsh,
-    "q21_simhash" -> q21SimHash,
-    "q22_ngram_jaccard" -> q22NgramJaccard,
-    "q23_embed_neardup" -> q23EmbedNearDup,
-    "q24_ann_topk" -> q24AnnTopK,
-    "q25_ann_lsh" -> q25AnnLsh,
-    "q26_langid" -> q26LangId,
-    "q27_quality" -> q27Quality,
-    "q28_token_counts" -> q28TokenCounts,
-    "q29_fingerprint" -> q29Fingerprint,
-    "q30_multimodal_meta" -> q30MultimodalMeta,
-    "q31_asof_join" -> q31AsOfJoin,
-    "q32_salted_agg" -> q32SaltedAgg
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q19_exact_dedup" -> q19Sql,
-    "q20_minhash_lsh" -> q20Sql,
-    "q21_simhash" -> q21Sql,
-    "q22_ngram_jaccard" -> q22Sql,
-    "q23_embed_neardup" -> q23Sql,
-    "q24_ann_topk" -> q24Sql,
-    "q25_ann_lsh" -> q25Sql,
-    "q26_langid" -> q26Sql,
-    "q27_quality" -> q27Sql,
-    "q28_token_counts" -> q28Sql,
-    "q29_fingerprint" -> q29Sql,
-    "q30_multimodal_meta" -> q30Sql,
-    "q31_asof_join" -> q31Sql,
-    "q32_salted_agg" -> q32Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q19_exact_dedup", q19ExactDedup, q19Sql),
+    Query("q20_minhash_lsh", q20MinHashLsh, q20Sql),
+    Query("q21_simhash", q21SimHash, q21Sql),
+    Query("q22_ngram_jaccard", q22NgramJaccard, q22Sql),
+    Query("q23_embed_neardup", q23EmbedNearDup, q23Sql),
+    Query("q24_ann_topk", q24AnnTopK, q24Sql),
+    Query("q25_ann_lsh", q25AnnLsh, q25Sql),
+    Query("q26_langid", q26LangId, q26Sql),
+    Query("q27_quality", q27Quality, q27Sql),
+    Query("q28_token_counts", q28TokenCounts, q28Sql),
+    Query("q29_fingerprint", q29Fingerprint, q29Sql),
+    Query("q30_multimodal_meta", q30MultimodalMeta, q30Sql),
+    Query("q31_asof_join", q31AsOfJoin, q31Sql),
+    Query("q32_salted_agg", q32SaltedAgg, q32Sql))
 }

@@ -483,37 +483,19 @@ object QualityQueries {
       |UNION ALL SELECT doc_id, lang, nc FROM c WHERE op IN ('I','U')
       |ORDER BY doc_id NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q61_cond_agg" -> q61CondAgg,
-    "q62_string_agg" -> q62StringAgg,
-    "q63_minby_maxby" -> q63MinByMaxBy,
-    "q64_exact_moments" -> q64ExactMoments,
-    "q65_calendar_fill" -> q65CalendarFill,
-    "q66_pct_of_total" -> q66PctOfTotal,
-    "q67_star_join" -> q67StarJoin,
-    "q68_repetition" -> q68Repetition,
-    "q69_bit_ops" -> q69BitOps,
-    "q70_full_outer" -> q70FullOuter,
-    "q71_multi_distinct" -> q71MultiDistinct,
-    "q72_union_by_name" -> q72UnionByName,
-    "q73_inline_dim" -> q73InlineDim,
-    "q74_cdc_apply" -> q74CdcApply
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q61_cond_agg" -> q61Sql,
-    "q62_string_agg" -> q62Sql,
-    "q63_minby_maxby" -> q63Sql,
-    "q64_exact_moments" -> q64Sql,
-    "q65_calendar_fill" -> q65Sql,
-    "q66_pct_of_total" -> q66Sql,
-    "q67_star_join" -> q67Sql,
-    "q68_repetition" -> q68Sql,
-    "q69_bit_ops" -> q69Sql,
-    "q70_full_outer" -> q70Sql,
-    "q71_multi_distinct" -> q71Sql,
-    "q72_union_by_name" -> q72Sql,
-    "q73_inline_dim" -> q73Sql,
-    "q74_cdc_apply" -> q74Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q61_cond_agg", q61CondAgg, q61Sql),
+    Query("q62_string_agg", q62StringAgg, q62Sql),
+    Query("q63_minby_maxby", q63MinByMaxBy, q63Sql),
+    Query("q64_exact_moments", q64ExactMoments, q64Sql),
+    Query("q65_calendar_fill", q65CalendarFill, q65Sql),
+    Query("q66_pct_of_total", q66PctOfTotal, q66Sql),
+    Query("q67_star_join", q67StarJoin, q67Sql),
+    Query("q68_repetition", q68Repetition, q68Sql),
+    Query("q69_bit_ops", q69BitOps, q69Sql),
+    Query("q70_full_outer", q70FullOuter, q70Sql),
+    Query("q71_multi_distinct", q71MultiDistinct, q71Sql),
+    Query("q72_union_by_name", q72UnionByName, q72Sql),
+    Query("q73_inline_dim", q73InlineDim, q73Sql),
+    Query("q74_cdc_apply", q74CdcApply, q74Sql))
 }

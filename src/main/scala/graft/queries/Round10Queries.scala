@@ -234,13 +234,8 @@ object Round10Queries {
       |SELECT doc_id, shard, CAST(n AS BIGINT) AS n_tok, CAST(bin AS BIGINT) AS bin
       |FROM pack ORDER BY doc_id NULLS FIRST""".stripMargin
 
-  def all: Map[String, Q] = Map(
-    "q167_bpe_tokenize" -> q167BpeTokenize,
-    "q168_bpe_budget" -> q168BpeBudget,
-    "q169_bpe_pack" -> q169BpePack)
-
-  def oracles: Map[String, String] = Map(
-    "q167_bpe_tokenize" -> q167Sql,
-    "q168_bpe_budget" -> q168Sql,
-    "q169_bpe_pack" -> q169Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q167_bpe_tokenize", q167BpeTokenize, q167Sql),
+    Query("q168_bpe_budget", q168BpeBudget, q168Sql),
+    Query("q169_bpe_pack", q169BpePack, q169Sql))
 }

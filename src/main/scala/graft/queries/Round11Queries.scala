@@ -438,21 +438,12 @@ object Round11Queries {
       s"unnest(regexp_extract_all(text, $preTokSqlLit))",
       byteW0SymsSql)
 
-  def all: Map[String, Q] = Map(
-    "q170_bpe_bytes_tokenize" -> q170BpeBytesTokenize,
-    "q171_bpe_bytes_budget" -> q171BpeBytesBudget,
-    "q172_bpe_bytes_pack" -> q172BpeBytesPack,
-    "q173_bpe_compression" -> q173BpeCompression,
-    "q174_classifier_filter" -> q174ClassifierFilter,
-    "q175_bpe_train" -> q175BpeTrain,
-    "q176_bpe_train_bytes" -> q176BpeTrainBytes)
-
-  def oracles: Map[String, String] = Map(
-    "q170_bpe_bytes_tokenize" -> q170Sql,
-    "q171_bpe_bytes_budget" -> q171Sql,
-    "q172_bpe_bytes_pack" -> q172Sql,
-    "q173_bpe_compression" -> q173Sql,
-    "q174_classifier_filter" -> q174Sql,
-    "q175_bpe_train" -> q175Sql,
-    "q176_bpe_train_bytes" -> q176Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q170_bpe_bytes_tokenize", q170BpeBytesTokenize, q170Sql),
+    Query("q171_bpe_bytes_budget", q171BpeBytesBudget, q171Sql),
+    Query("q172_bpe_bytes_pack", q172BpeBytesPack, q172Sql),
+    Query("q173_bpe_compression", q173BpeCompression, q173Sql),
+    Query("q174_classifier_filter", q174ClassifierFilter, q174Sql),
+    Query("q175_bpe_train", q175BpeTrain, q175Sql),
+    Query("q176_bpe_train_bytes", q176BpeTrainBytes, q176Sql))
 }

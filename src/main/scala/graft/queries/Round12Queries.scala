@@ -648,23 +648,13 @@ object Round12Queries {
       |FROM hd ORDER BY doc_id NULLS FIRST""".stripMargin
   }
 
-  def all: Map[String, Q] = Map(
-    "q177_classifier_train" -> q177ClassifierTrain,
-    "q178_html_extract" -> q178HtmlExtract,
-    "q179_encoding_screen" -> q179EncodingScreen,
-    "q180_train_tokenize" -> q180TrainTokenize,
-    "q181_mojibake_repair" -> q181MojibakeRepair,
-    "q182_intake_pipeline" -> q182IntakePipeline,
-    "q183_url_normalize" -> q183UrlNormalize,
-    "q184_domain_cap" -> q184DomainCap)
-
-  def oracles: Map[String, String] = Map(
-    "q177_classifier_train" -> q177Sql,
-    "q178_html_extract" -> q178Sql,
-    "q179_encoding_screen" -> q179Sql,
-    "q180_train_tokenize" -> q180Sql,
-    "q181_mojibake_repair" -> q181Sql,
-    "q182_intake_pipeline" -> q182Sql,
-    "q183_url_normalize" -> q183Sql,
-    "q184_domain_cap" -> q184Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q177_classifier_train", q177ClassifierTrain, q177Sql),
+    Query("q178_html_extract", q178HtmlExtract, q178Sql),
+    Query("q179_encoding_screen", q179EncodingScreen, q179Sql),
+    Query("q180_train_tokenize", q180TrainTokenize, q180Sql),
+    Query("q181_mojibake_repair", q181MojibakeRepair, q181Sql),
+    Query("q182_intake_pipeline", q182IntakePipeline, q182Sql),
+    Query("q183_url_normalize", q183UrlNormalize, q183Sql),
+    Query("q184_domain_cap", q184DomainCap, q184Sql))
 }

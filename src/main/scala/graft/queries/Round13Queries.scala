@@ -407,15 +407,9 @@ object Round13Queries {
       |FROM agg ORDER BY source NULLS FIRST""".stripMargin
   }
 
-  def all: Map[String, Q] = Map(
-    "q185_classifier_eval" -> q185ClassifierEval,
-    "q186_psl_domain_cap" -> q186PslDomainCap,
-    "q187_url_canonical_dup" -> q187UrlCanonicalDup,
-    "q188_bpe_heldout_eval" -> q188BpeHeldoutEval)
-
-  def oracles: Map[String, String] = Map(
-    "q185_classifier_eval" -> q185Sql,
-    "q186_psl_domain_cap" -> q186Sql,
-    "q187_url_canonical_dup" -> q187Sql,
-    "q188_bpe_heldout_eval" -> q188Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q185_classifier_eval", q185ClassifierEval, q185Sql),
+    Query("q186_psl_domain_cap", q186PslDomainCap, q186Sql),
+    Query("q187_url_canonical_dup", q187UrlCanonicalDup, q187Sql),
+    Query("q188_bpe_heldout_eval", q188BpeHeldoutEval, q188Sql))
 }

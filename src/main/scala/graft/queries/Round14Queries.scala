@@ -373,15 +373,9 @@ object Round14Queries {
       |FROM p WHERE hamming <= 7
       |ORDER BY id_a NULLS FIRST, id_b NULLS FIRST""".stripMargin
 
-  def all: Map[String, Q] = Map(
-    "q189_image_phash" -> q189ImagePhash,
-    "q190_image_neardup" -> q190ImageNearDup,
-    "q191_audio_phash" -> q191AudioPhash,
-    "q192_audio_neardup" -> q192AudioNearDup)
-
-  def oracles: Map[String, String] = Map(
-    "q189_image_phash" -> q189Sql,
-    "q190_image_neardup" -> q190Sql,
-    "q191_audio_phash" -> q191Sql,
-    "q192_audio_neardup" -> q192Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q189_image_phash", q189ImagePhash, q189Sql),
+    Query("q190_image_neardup", q190ImageNearDup, q190Sql),
+    Query("q191_audio_phash", q191AudioPhash, q191Sql),
+    Query("q192_audio_neardup", q192AudioNearDup, q192Sql))
 }

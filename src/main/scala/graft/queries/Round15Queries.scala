@@ -564,19 +564,11 @@ object Round15Queries {
       |ORDER BY doc_id NULLS FIRST, boundary_idx NULLS FIRST""".stripMargin
   }
 
-  def all: Map[String, Q] = Map(
-    "q193_video_framehash" -> q193VideoFrameHash,
-    "q194_video_neardup" -> q194VideoNearDup,
-    "q195_media_keeplist" -> q195MediaKeepList,
-    "q196_crossmodal_keeplist" -> q196CrossModalKeepList,
-    "q197_media_incremental" -> q197MediaIncremental,
-    "q198_video_scenecut" -> q198VideoSceneCut)
-
-  def oracles: Map[String, String] = Map(
-    "q193_video_framehash" -> q193Sql,
-    "q194_video_neardup" -> q194Sql,
-    "q195_media_keeplist" -> q195Sql,
-    "q196_crossmodal_keeplist" -> q196Sql,
-    "q197_media_incremental" -> q197Sql,
-    "q198_video_scenecut" -> q198Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q193_video_framehash", q193VideoFrameHash, q193Sql),
+    Query("q194_video_neardup", q194VideoNearDup, q194Sql),
+    Query("q195_media_keeplist", q195MediaKeepList, q195Sql),
+    Query("q196_crossmodal_keeplist", q196CrossModalKeepList, q196Sql),
+    Query("q197_media_incremental", q197MediaIncremental, q197Sql),
+    Query("q198_video_scenecut", q198VideoSceneCut, q198Sql))
 }

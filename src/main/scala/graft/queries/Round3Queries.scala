@@ -294,29 +294,15 @@ object Round3Queries {
       |FROM documents WHERE doc_id < 400
       |ORDER BY doc_id NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q51_conncomp" -> q51ConnComp,
-    "q52_percentiles" -> q52Percentiles,
-    "q53_ntile_cume" -> q53NtileCume,
-    "q54_regex_extract" -> q54RegexExtract,
-    "q55_hash_sample" -> q55HashSample,
-    "q56_scalar_subquery" -> q56ScalarSubquery,
-    "q57_histogram" -> q57Histogram,
-    "q58_keep_canonical" -> q58KeepCanonical,
-    "q59_frame_nav" -> q59FrameNav,
-    "q60_token_slice" -> q60TokenSlice
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q51_conncomp" -> q51Sql,
-    "q52_percentiles" -> q52Sql,
-    "q53_ntile_cume" -> q53Sql,
-    "q54_regex_extract" -> q54Sql,
-    "q55_hash_sample" -> q55Sql,
-    "q56_scalar_subquery" -> q56Sql,
-    "q57_histogram" -> q57Sql,
-    "q58_keep_canonical" -> q58Sql,
-    "q59_frame_nav" -> q59Sql,
-    "q60_token_slice" -> q60Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q51_conncomp", q51ConnComp, q51Sql),
+    Query("q52_percentiles", q52Percentiles, q52Sql),
+    Query("q53_ntile_cume", q53NtileCume, q53Sql),
+    Query("q54_regex_extract", q54RegexExtract, q54Sql),
+    Query("q55_hash_sample", q55HashSample, q55Sql),
+    Query("q56_scalar_subquery", q56ScalarSubquery, q56Sql),
+    Query("q57_histogram", q57Histogram, q57Sql),
+    Query("q58_keep_canonical", q58KeepCanonical, q58Sql),
+    Query("q59_frame_nav", q59FrameNav, q59Sql),
+    Query("q60_token_slice", q60TokenSlice, q60Sql))
 }

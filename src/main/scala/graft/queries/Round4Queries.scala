@@ -466,35 +466,18 @@ object Round4Queries {
       |FROM te JOIN tr USING (gram)
       |GROUP BY 1, 2 ORDER BY test_doc NULLS FIRST, train_doc NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q75_edge_text" -> q75EdgeText,
-    "q76_ivf_ann" -> q76IvfAnn,
-    "q77_pii_redact" -> q77PiiRedact,
-    "q78_bigram_top" -> q78BigramTop,
-    "q79_winnow" -> q79Winnow,
-    "q80_winnow_pairs" -> q80WinnowPairs,
-    "q81_cohort_retention" -> q81CohortRetention,
-    "q82_funnel" -> q82Funnel,
-    "q83_scd2" -> q83Scd2,
-    "q84_hash_split" -> q84HashSplit,
-    "q85_seq_pack" -> q85SeqPack,
-    "q86_stratified_sample" -> q86Stratified,
-    "q87_contamination" -> q87Contamination
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q75_edge_text" -> q75Sql,
-    "q76_ivf_ann" -> q76Sql,
-    "q77_pii_redact" -> q77Sql,
-    "q78_bigram_top" -> q78Sql,
-    "q79_winnow" -> q79Sql,
-    "q80_winnow_pairs" -> q80Sql,
-    "q81_cohort_retention" -> q81Sql,
-    "q82_funnel" -> q82Sql,
-    "q83_scd2" -> q83Sql,
-    "q84_hash_split" -> q84Sql,
-    "q85_seq_pack" -> q85Sql,
-    "q86_stratified_sample" -> q86Sql,
-    "q87_contamination" -> q87Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q75_edge_text", q75EdgeText, q75Sql),
+    Query("q76_ivf_ann", q76IvfAnn, q76Sql),
+    Query("q77_pii_redact", q77PiiRedact, q77Sql),
+    Query("q78_bigram_top", q78BigramTop, q78Sql),
+    Query("q79_winnow", q79Winnow, q79Sql),
+    Query("q80_winnow_pairs", q80WinnowPairs, q80Sql),
+    Query("q81_cohort_retention", q81CohortRetention, q81Sql),
+    Query("q82_funnel", q82Funnel, q82Sql),
+    Query("q83_scd2", q83Scd2, q83Sql),
+    Query("q84_hash_split", q84HashSplit, q84Sql),
+    Query("q85_seq_pack", q85SeqPack, q85Sql),
+    Query("q86_stratified_sample", q86Stratified, q86Sql),
+    Query("q87_contamination", q87Contamination, q87Sql))
 }

@@ -627,35 +627,19 @@ object Round5Queries {
       |FROM d JOIN c USING (source), t
       |GROUP BY 1 ORDER BY source NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q88_block_boilerplate" -> q88BlockBoilerplate,
-    "q89_global_rn" -> q89GlobalRn,
-    "q90_weighted_sample" -> q90WeightedSample,
-    "q91_cdc_segments" -> q91CdcSegments,
-    "q92_quality_filter" -> q92QualityFilter,
-    "q93_bloom_join" -> q93BloomJoin,
-    "q94_equidepth_hist" -> q94EquiDepth,
-    "q95_oov_rate" -> q95OovRate,
-    "q96_zorder" -> q96ZOrder,
-    "q97_dedup_pipeline" -> q97DedupPipeline,
-    "q98_quant_ann" -> q98QuantAnn,
-    "q99_incremental_dedup" -> q99IncrementalDedup,
-    "q100_bigram_novelty" -> q100BigramNovelty,
-    "q101_mixture_rebalance" -> q101MixtureRebalance)
-
-  val oracles: Map[String, String] = Map(
-    "q88_block_boilerplate" -> q88Sql,
-    "q89_global_rn" -> q89Sql,
-    "q90_weighted_sample" -> q90Sql,
-    "q91_cdc_segments" -> q91Sql,
-    "q92_quality_filter" -> q92Sql,
-    "q93_bloom_join" -> q93Sql,
-    "q94_equidepth_hist" -> q94Sql,
-    "q95_oov_rate" -> q95Sql,
-    "q96_zorder" -> q96Sql,
-    "q97_dedup_pipeline" -> q97Sql,
-    "q98_quant_ann" -> q98Sql,
-    "q99_incremental_dedup" -> q99Sql,
-    "q100_bigram_novelty" -> q100Sql,
-    "q101_mixture_rebalance" -> q101Sql)
+  val queries: Seq[Query] = Seq(
+    Query("q88_block_boilerplate", q88BlockBoilerplate, q88Sql),
+    Query("q89_global_rn", q89GlobalRn, q89Sql),
+    Query("q90_weighted_sample", q90WeightedSample, q90Sql),
+    Query("q91_cdc_segments", q91CdcSegments, q91Sql),
+    Query("q92_quality_filter", q92QualityFilter, q92Sql),
+    Query("q93_bloom_join", q93BloomJoin, q93Sql),
+    Query("q94_equidepth_hist", q94EquiDepth, q94Sql),
+    Query("q95_oov_rate", q95OovRate, q95Sql),
+    Query("q96_zorder", q96ZOrder, q96Sql),
+    Query("q97_dedup_pipeline", q97DedupPipeline, q97Sql),
+    Query("q98_quant_ann", q98QuantAnn, q98Sql),
+    Query("q99_incremental_dedup", q99IncrementalDedup, q99Sql),
+    Query("q100_bigram_novelty", q100BigramNovelty, q100Sql),
+    Query("q101_mixture_rebalance", q101MixtureRebalance, q101Sql))
 }

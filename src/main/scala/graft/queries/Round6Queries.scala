@@ -118,13 +118,7 @@ object Round6Queries {
       |GROUP BY lang
       |ORDER BY lang NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q102_multitable_ann" -> q102MultiTableAnn,
-    "q103_lang_quantiles" -> q103LangQuantiles
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q102_multitable_ann" -> q102Sql,
-    "q103_lang_quantiles" -> q103Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q102_multitable_ann", q102MultiTableAnn, q102Sql),
+    Query("q103_lang_quantiles", q103LangQuantiles, q103Sql))
 }

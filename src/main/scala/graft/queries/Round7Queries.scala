@@ -449,27 +449,14 @@ object Round7Queries {
       |FROM sk a JOIN sk b ON a.hv = b.hv AND a.source < b.source
       |GROUP BY 1, 2 ORDER BY src_a NULLS FIRST, src_b NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q104_semantic_keeplist" -> q104SemanticKeepList,
-    "q105_contamination" -> q105ContaminationScreen,
-    "q106_pack_sequences" -> q106PackSequences,
-    "q107_leakage_split" -> q107LeakageSafeSplit,
-    "q108_span_dedup" -> q108SpanDedup,
-    "q109_collocation_lift" -> q109CollocationLift,
-    "q110_quality_funnel" -> q110QualityFunnel,
-    "q111_importance_keep" -> q111ImportanceKeep,
-    "q112_source_overlap" -> q112SourceOverlap
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q104_semantic_keeplist" -> q104Sql,
-    "q105_contamination" -> q105Sql,
-    "q106_pack_sequences" -> q106Sql,
-    "q107_leakage_split" -> q107Sql,
-    "q108_span_dedup" -> q108Sql,
-    "q109_collocation_lift" -> q109Sql,
-    "q110_quality_funnel" -> q110Sql,
-    "q111_importance_keep" -> q111Sql,
-    "q112_source_overlap" -> q112Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q104_semantic_keeplist", q104SemanticKeepList, q104Sql),
+    Query("q105_contamination", q105ContaminationScreen, q105Sql),
+    Query("q106_pack_sequences", q106PackSequences, q106Sql),
+    Query("q107_leakage_split", q107LeakageSafeSplit, q107Sql),
+    Query("q108_span_dedup", q108SpanDedup, q108Sql),
+    Query("q109_collocation_lift", q109CollocationLift, q109Sql),
+    Query("q110_quality_funnel", q110QualityFunnel, q110Sql),
+    Query("q111_importance_keep", q111ImportanceKeep, q111Sql),
+    Query("q112_source_overlap", q112SourceOverlap, q112Sql))
 }

@@ -352,21 +352,11 @@ object Round8Queries {
       |FROM nodes n LEFT JOIN cnt ON cnt.node = n.node
       |ORDER BY vec_id NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q113_pagerank" -> q113PageRank,
-    "q114_grouped_mad" -> q114GroupedMad,
-    "q115_trustrank" -> q115TrustRank,
-    "q116_weighted_pagerank" -> q116WeightedPagerank,
-    "q117_label_spread" -> q117LabelSpread,
-    "q118_triangle_cohesion" -> q118TriangleCohesion
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q113_pagerank" -> q113Sql,
-    "q114_grouped_mad" -> q114Sql,
-    "q115_trustrank" -> q115Sql,
-    "q116_weighted_pagerank" -> q116Sql,
-    "q117_label_spread" -> q117Sql,
-    "q118_triangle_cohesion" -> q118Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q113_pagerank", q113PageRank, q113Sql),
+    Query("q114_grouped_mad", q114GroupedMad, q114Sql),
+    Query("q115_trustrank", q115TrustRank, q115Sql),
+    Query("q116_weighted_pagerank", q116WeightedPagerank, q116Sql),
+    Query("q117_label_spread", q117LabelSpread, q117Sql),
+    Query("q118_triangle_cohesion", q118TriangleCohesion, q118Sql))
 }

@@ -500,27 +500,14 @@ object Round9Queries {
       "\nORDER BY tbl NULLS FIRST"
   }
 
-  val all: Map[String, Q] = Map(
-    "q158_fuzzy_entity_pairs" -> q158FuzzyEntities,
-    "q159_power_iteration" -> q159PowerIteration,
-    "q160_zorder_layout" -> q160ZOrderLayout,
-    "q161_redaction_audit" -> q161RedactionAudit,
-    "q162_rendezvous_shards" -> q162RendezvousShards,
-    "q163_repetition_signals" -> q163RepetitionSignals,
-    "q164_weighted_sample" -> q164WeightedSample,
-    "q165_exact_simjoin" -> q165ExactSimilarityJoin,
-    "q166_table_checksums" -> q166TableChecksums
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q158_fuzzy_entity_pairs" -> q158Sql,
-    "q159_power_iteration" -> q159Sql,
-    "q160_zorder_layout" -> q160Sql,
-    "q161_redaction_audit" -> q161Sql,
-    "q162_rendezvous_shards" -> q162Sql,
-    "q163_repetition_signals" -> q163Sql,
-    "q164_weighted_sample" -> q164Sql,
-    "q165_exact_simjoin" -> q165Sql,
-    "q166_table_checksums" -> q166Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q158_fuzzy_entity_pairs", q158FuzzyEntities, q158Sql),
+    Query("q159_power_iteration", q159PowerIteration, q159Sql),
+    Query("q160_zorder_layout", q160ZOrderLayout, q160Sql),
+    Query("q161_redaction_audit", q161RedactionAudit, q161Sql),
+    Query("q162_rendezvous_shards", q162RendezvousShards, q162Sql),
+    Query("q163_repetition_signals", q163RepetitionSignals, q163Sql),
+    Query("q164_weighted_sample", q164WeightedSample, q164Sql),
+    Query("q165_exact_simjoin", q165ExactSimilarityJoin, q165Sql),
+    Query("q166_table_checksums", q166TableChecksums, q166Sql))
 }

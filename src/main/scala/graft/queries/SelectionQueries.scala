@@ -840,43 +840,22 @@ object SelectionQueries {
       |FROM o JOIN r ON r.split = o.split JOIN c ON c.lang = o.lang, n
       |ORDER BY o.split NULLS FIRST, o.lang NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q119_bm25_select" -> q119Bm25,
-    "q120_kmeans" -> q120Kmeans,
-    "q121_temperature_mix" -> q121TemperatureMix,
-    "q122_cluster_balance" -> q122ClusterBalance,
-    "q123_loop_screen" -> q123LoopScreen,
-    "q124_epoch_upsample" -> q124EpochUpsample,
-    "q125_winsorized_mean" -> q125Winsorize,
-    "q126_centroid_select" -> q126CentroidSelect,
-    "q127_phrase_search" -> q127PhraseSearch,
-    "q128_jl_project" -> q128JlProject,
-    "q129_negative_mine" -> q129NegativeMine,
-    "q130_hll_vocab" -> q130HllVocab,
-    "q131_incremental_view" -> q131IncrementalView,
-    "q132_topk_operator" -> q132TopkOperator,
-    "q133_expectations" -> q133Expectations,
-    "q134_snapshot_diff" -> q134SnapshotDiff,
-    "q135_split_balance" -> q135SplitBalance
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q119_bm25_select" -> q119Sql,
-    "q120_kmeans" -> q120Sql,
-    "q121_temperature_mix" -> q121Sql,
-    "q122_cluster_balance" -> q122Sql,
-    "q123_loop_screen" -> q123Sql,
-    "q124_epoch_upsample" -> q124Sql,
-    "q125_winsorized_mean" -> q125Sql,
-    "q126_centroid_select" -> q126Sql,
-    "q127_phrase_search" -> q127Sql,
-    "q128_jl_project" -> q128Sql,
-    "q129_negative_mine" -> q129Sql,
-    "q130_hll_vocab" -> q130Sql,
-    "q131_incremental_view" -> q131Sql,
-    "q132_topk_operator" -> q132Sql,
-    "q133_expectations" -> q133Sql,
-    "q134_snapshot_diff" -> q134Sql,
-    "q135_split_balance" -> q135Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q119_bm25_select", q119Bm25, q119Sql),
+    Query("q120_kmeans", q120Kmeans, q120Sql),
+    Query("q121_temperature_mix", q121TemperatureMix, q121Sql),
+    Query("q122_cluster_balance", q122ClusterBalance, q122Sql),
+    Query("q123_loop_screen", q123LoopScreen, q123Sql),
+    Query("q124_epoch_upsample", q124EpochUpsample, q124Sql),
+    Query("q125_winsorized_mean", q125Winsorize, q125Sql),
+    Query("q126_centroid_select", q126CentroidSelect, q126Sql),
+    Query("q127_phrase_search", q127PhraseSearch, q127Sql),
+    Query("q128_jl_project", q128JlProject, q128Sql),
+    Query("q129_negative_mine", q129NegativeMine, q129Sql),
+    Query("q130_hll_vocab", q130HllVocab, q130Sql),
+    Query("q131_incremental_view", q131IncrementalView, q131Sql),
+    Query("q132_topk_operator", q132TopkOperator, q132Sql),
+    Query("q133_expectations", q133Expectations, q133Sql),
+    Query("q134_snapshot_diff", q134SnapshotDiff, q134Sql),
+    Query("q135_split_balance", q135SplitBalance, q135Sql))
 }

@@ -606,27 +606,15 @@ object SketchQueries {
       |FROM r a JOIN r b ON b.rn > a.rn AND b.rn <= a.rn + 3
       |ORDER BY ra NULLS FIRST, rb NULLS FIRST""".stripMargin
 
-  def all: Map[String, Q] = Map(
-    "q136_cms_freq" -> q136Cms,
-    "q137_rrf_fusion" -> q137Rrf,
-    "q138_event_funnel" -> q138Funnel,
-    "q139_kcore" -> q139KCore,
-    "q140_hits" -> q140Hits,
-    "q141_ingest_anomaly" -> q141Anomaly,
-    "q142_gram_matrix" -> q142Gram,
-    "q143_fk_audit" -> q143FkAudit,
-    "q144_curriculum_deciles" -> q144Deciles,
-    "q145_sorted_neighbors" -> q145SortedNeighbors)
-
-  def oracles: Map[String, String] = Map(
-    "q136_cms_freq" -> q136Sql,
-    "q137_rrf_fusion" -> q137Sql,
-    "q138_event_funnel" -> q138Sql,
-    "q139_kcore" -> q139Sql,
-    "q140_hits" -> q140Sql,
-    "q141_ingest_anomaly" -> q141Sql,
-    "q142_gram_matrix" -> q142Sql,
-    "q143_fk_audit" -> q143Sql,
-    "q144_curriculum_deciles" -> q144Sql,
-    "q145_sorted_neighbors" -> q145Sql)
+  def queries: Seq[Query] = Seq(
+    Query("q136_cms_freq", q136Cms, q136Sql),
+    Query("q137_rrf_fusion", q137Rrf, q137Sql),
+    Query("q138_event_funnel", q138Funnel, q138Sql),
+    Query("q139_kcore", q139KCore, q139Sql),
+    Query("q140_hits", q140Hits, q140Sql),
+    Query("q141_ingest_anomaly", q141Anomaly, q141Sql),
+    Query("q142_gram_matrix", q142Gram, q142Sql),
+    Query("q143_fk_audit", q143FkAudit, q143Sql),
+    Query("q144_curriculum_deciles", q144Deciles, q144Sql),
+    Query("q145_sorted_neighbors", q145SortedNeighbors, q145Sql))
 }

@@ -215,23 +215,12 @@ object StatQueries {
       |WHERE rn = 1
       |ORDER BY o_custkey NULLS FIRST""".stripMargin
 
-  val all: Map[String, Q] = Map(
-    "q33_distinct_agg" -> q33DistinctAgg,
-    "q34_cube" -> q34Cube,
-    "q35_pivot" -> q35Pivot,
-    "q36_quantiles" -> q36Quantiles,
-    "q37_topk_udaf" -> q37TopKUdaf,
-    "q38_range_join" -> q38RangeJoin,
-    "q39_keep_latest" -> q39KeepLatest
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q33_distinct_agg" -> q33Sql,
-    "q34_cube" -> q34Sql,
-    "q35_pivot" -> q35Sql,
-    "q36_quantiles" -> q36Sql,
-    "q37_topk_udaf" -> q37Sql,
-    "q38_range_join" -> q38Sql,
-    "q39_keep_latest" -> q39Sql
-  )
+  val queries: Seq[Query] = Seq(
+    Query("q33_distinct_agg", q33DistinctAgg, q33Sql),
+    Query("q34_cube", q34Cube, q34Sql),
+    Query("q35_pivot", q35Pivot, q35Sql),
+    Query("q36_quantiles", q36Quantiles, q36Sql),
+    Query("q37_topk_udaf", q37TopKUdaf, q37Sql),
+    Query("q38_range_join", q38RangeJoin, q38Sql),
+    Query("q39_keep_latest", q39KeepLatest, q39Sql))
 }

@@ -288,7 +288,11 @@ object Sinks {
          | VALUES (${schema.fieldNames.map(_ => "?").mkString(", ")})""".stripMargin
     val info = new Properties()
     info.putAll(props)
-    df.repartition(numPartitions).rdd.foreachPartition { rows =>
+    // Cap the connections as writeJdbc does: coalesce only a frame with
+    // more partitions than the cap, so the write adds no shuffle.
+    val rdd = df.rdd
+    val capped = if (rdd.getNumPartitions > numPartitions) rdd.coalesce(numPartitions) else rdd
+    capped.foreachPartition { rows =>
       val conn = java.sql.DriverManager.getConnection(url, info)
       try {
         conn.setAutoCommit(true)

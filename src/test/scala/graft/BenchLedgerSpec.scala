@@ -59,4 +59,17 @@ class BenchLedgerSpec extends AnyFunSuite {
     val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
     assert(tree.get("phase_error").asText() == msg)
   }
+
+  test("groupReps: the first group gets the full reps; an exhausted budget sheds the group") {
+    // first group: a full budget, no per-unit rate learned yet
+    assert(Bench.groupReps(reps = 3, spendable = 3000.0, groupsLeft = 25, perUnitSec = 0.0) == Some(3))
+    // nothing (or less than the fork floor) left: shed, whatever the rate
+    assert(Bench.groupReps(reps = 3, spendable = 0.0, groupsLeft = 5, perUnitSec = 10.0) == None)
+    assert(Bench.groupReps(reps = 3, spendable = -50.0, groupsLeft = 5, perUnitSec = 0.0) == None)
+    assert(Bench.groupReps(reps = 3, spendable = Bench.ForkFloorSec - 1, groupsLeft = 1, perUnitSec = 1.0) == None)
+    // a tight budget sheds reps before it sheds the group: share 200 s
+    // at 40 s/unit is 5 units, 2 of them the fork's own cost
+    assert(Bench.groupReps(reps = 5, spendable = 400.0, groupsLeft = 2, perUnitSec = 40.0) == Some(3))
+    assert(Bench.groupReps(reps = 5, spendable = 400.0, groupsLeft = 4, perUnitSec = 40.0) == Some(1))
+  }
 }

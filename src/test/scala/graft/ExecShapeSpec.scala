@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * a plan or loop-structure regression in the tree.
   *
   * Re-derive after an intentional loop change:
-  * `tools/run_main.sh graft.ExecShape <query...>` (stable across
-  * runs — two identical back-to-back measurements recorded r10).
+  * `tools/run_main.sh graft.Probe <query...> --sf-dir=<sf0.001>`
+  * (stable across runs — two identical back-to-back measurements
+  * recorded r10).
   */
 class ExecShapeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -76,7 +77,7 @@ class ExecShapeSpec extends AnyFunSuite {
       val (j, s) = ExecShape.measure(spark, name)(fn(spark, sf).queryExecution.toRdd.count(): Unit)
       assert((j, s) == ((jobs, stages)),
         s"$name execution shape drifted: got jobs=$j stages=$s, pinned jobs=$jobs stages=$stages — " +
-          "if the loop change is intentional, re-derive with tools/run_main.sh graft.ExecShape " +
+          "if the loop change is intentional, re-derive with tools/run_main.sh graft.Probe " +
           "and update this pin plus BASELINE.md's shape row")
     }
 

@@ -248,10 +248,11 @@ class JdbcSinkSpec extends AnyFunSuite {
       "F-5" -> ((3L, 1L, 2L, 0.0))))
   }
 
-  /** (stages, tasks) of one `writeJdbc` call. */
-  private def writeShape(df: DataFrame, table: String, numPartitions: Int): (Int, Int) = {
+  /** (stages, tasks) of one call of `write(df, table, cap)`. */
+  private def writeShape(write: (DataFrame, String, Int) => Unit)(
+      df: DataFrame, table: String, numPartitions: Int): (Int, Int) = {
     val (_, stages, tasks) = ExecShape.measureTasks(spark, "jdbc-cap") {
-      Sinks.writeJdbc(df, url, table, props, numPartitions = numPartitions)
+      write(df, table, numPartitions)
     }
     (stages, tasks)
   }
@@ -260,10 +261,16 @@ class JdbcSinkSpec extends AnyFunSuite {
     val conn = java.sql.DriverManager.getConnection(url, props)
     try conn.createStatement().executeUpdate("""CREATE TABLE "cap" ("id" BIGINT NOT NULL)""")
     finally conn.close()
-    // 4 partitions under a cap of 2: 2 write tasks (2 connections), one stage
-    assert(writeShape(spark.range(0, 40, 1, 4).toDF(), "\"cap\"", numPartitions = 2) == ((1, 2)))
-    // 1 partition under a cap of 2: written as it is, no shuffle stage
-    assert(writeShape(spark.range(40, 50, 1, 1).toDF(), "\"cap\"", numPartitions = 2) == ((1, 1)))
-    assert(spark.read.jdbc(url, "\"cap\"", props).count() == 50)
+    val writers: Seq[(DataFrame, String, Int) => Unit] = Seq(
+      (df, t, n) => Sinks.writeJdbc(df, url, t, props, numPartitions = n),
+      (df, t, n) => assert(Sinks.writeJdbcTolerant(df, url, t, props, numPartitions = n) == 0L))
+    writers.zipWithIndex.foreach { case (write, i) =>
+      val base = 50L * i
+      // 4 partitions under a cap of 2: 2 write tasks (2 connections), one stage
+      assert(writeShape(write)(spark.range(base, base + 40, 1, 4).toDF(), "\"cap\"", 2) == ((1, 2)))
+      // 1 partition under a cap of 2: written as it is, no shuffle stage
+      assert(writeShape(write)(spark.range(base + 40, base + 50, 1, 1).toDF(), "\"cap\"", 2) == ((1, 1)))
+      assert(spark.read.jdbc(url, "\"cap\"", props).count() == base + 50)
+    }
   }
 }
