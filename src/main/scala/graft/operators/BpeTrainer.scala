@@ -223,7 +223,7 @@ object BpeTrainer {
     // train() in a retry-from-words0 loop — training is deterministic,
     // so a retry reproduces the identical merge table.
     // The training rounds run on a session sized from the MATERIALIZED
-    // vocabulary count (the Graph.loopStage discipline): the word
+    // vocabulary count (Graph.loopSessionFor): the word
     // table is vocabulary-sized — tiny against the corpus-tuned
     // session width — and each of the 48-64 rounds is one action
     // whose cost is dominated by per-task scheduler wakeups across
@@ -234,7 +234,7 @@ object BpeTrainer {
     // BPE), which is the acceptable cost of a TRAINING operator run
     // once per corpus, not per query. At a genuinely huge vocabulary
     // the derived width clamps to the session setting and nothing
-    // changes (same rule as loopStage).
+    // changes.
     val words0Rdd = words0.rdd
     words0Rdd.localCheckpoint()
     val vocabRows = words0Rdd.count()
@@ -445,7 +445,10 @@ object BpeTrainer {
     * the loop session. LAZY: partitions persist (and lineage
     * truncates) at the first job that computes the RDD — a later
     * round's argmax, so materialization rides the
-    * existing one-job-per-merge floor instead of adding jobs.
+    * existing one-job-per-merge floor instead of adding jobs. Not a
+    * [[LoopScope.leaf]]: a checkpointed generation may only be
+    * released after its successor is computed (the deferred release
+    * of the incremental arm).
     */
   private def leafMark(loopSpark: org.apache.spark.sql.SparkSession, df: DataFrame): (DataFrame, RowRdd) = {
     val rdd = df.rdd

@@ -216,13 +216,15 @@ object ClassifierTrainer {
         return trainLocalArm(feats0, docs0, buckets, epochs, lrMicro, n, cwp, cwn, nFeat)
 
       // Epoch rounds run on a session sized from the materialized
-      // feature count (the Graph.loopStage discipline): feature rows
+      // feature count (Graph.loopSessionFor): feature rows
       // ≪ corpus rows, and a 32-wide exchange per 1025-row gradient
       // is pure scheduler overhead. The frames are re-cached INSIDE
       // the loop session pre-partitioned on the doc key, so every
       // epoch's two doc-key joins and the per-doc aggregate reuse the
       // cached partitioning — the only exchange an epoch pays is the
-      // tiny per-bucket one.
+      // tiny per-bucket one. (No LoopScope: the result is driver-side
+      // weights, so the `finally` below releases every frame on every
+      // path.)
       val loopSpark = Graph.loopSessionFor(spark, nFeat).getOrElse(spark)
       featsL = loopSpark.createDataFrame(feats0.rdd, feats0.schema)
         .repartition(col("__id")).persist()

@@ -42,62 +42,55 @@ object Coverage {
     val spark = items.sparkSession
     val docName = items.columns(0)
     val itemName = items.columns(1)
-    val inc = items
-      .select(col(docName).cast("long").as("doc"), col(itemName).cast("string").as("item"))
-      .distinct()
-      .persist()
-    val leaves = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    def materialize(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      leaves += rdd
-      spark.createDataFrame(rdd, df.schema)
-    }
-    val covered = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var cum = 0L
-    var step = 0
-    while (step < k) {
-      step += 1
-      val uncovered =
-        if (covered.isEmpty) inc
-        else inc.join(covered.reduce(_ unionByName _), Seq("item"), "left_anti")
-      // Marginal gain per doc. Docs whose items are all covered drop
-      // out of the agg — re-anchor on the full doc list so they stay
-      // pickable at gain 0 (the fixed-k contract above).
-      val best = inc
-        .select(col("doc")).distinct()
-        .join(
-          uncovered.groupBy(col("doc")).agg(count(lit(1)).as("gain")),
-          Seq("doc"), "left")
-        .select(col("doc"), coalesce(col("gain"), lit(0L)).as("gain"))
-        .join(picked(spark, picks), Seq("doc"), "left_anti")
-        .orderBy(col("gain").desc, col("doc"))
-        .limit(1)
-        .collect() // ONE bookkeeping row: the argmax of this round
-      if (best.isEmpty) {
-        step = k // fewer docs than k: stop
-      } else {
-        val doc = best(0).getLong(0)
-        val gain = best(0).getLong(1)
-        cum += gain
-        picks += ((step.toLong, doc, gain, cum))
-        covered += materialize(
-          inc.filter(col("doc") === doc).select(col("item")))
+    // The picks are driver-side rows, so nothing the loop persisted
+    // outlives the call: release on return as well as on a throw.
+    LoopScope.run(spark) { scope =>
+      val inc = scope.cache(
+        items
+          .select(col(docName).cast("long").as("doc"), col(itemName).cast("string").as("item"))
+          .distinct())
+      val covered = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var cum = 0L
+      var step = 0
+      while (step < k) {
+        step += 1
+        val uncovered =
+          if (covered.isEmpty) inc
+          else inc.join(covered.reduce(_ unionByName _), Seq("item"), "left_anti")
+        // Marginal gain per doc. Docs whose items are all covered drop
+        // out of the agg — re-anchor on the full doc list so they stay
+        // pickable at gain 0 (the fixed-k contract above).
+        val best = inc
+          .select(col("doc")).distinct()
+          .join(
+            uncovered.groupBy(col("doc")).agg(count(lit(1)).as("gain")),
+            Seq("doc"), "left")
+          .select(col("doc"), coalesce(col("gain"), lit(0L)).as("gain"))
+          .join(picked(spark, picks), Seq("doc"), "left_anti")
+          .orderBy(col("gain").desc, col("doc"))
+          .limit(1)
+          .collect() // ONE bookkeeping row: the argmax of this round
+        if (best.isEmpty) {
+          step = k // fewer docs than k: stop
+        } else {
+          val doc = best(0).getLong(0)
+          val gain = best(0).getLong(1)
+          cum += gain
+          picks += ((step.toLong, doc, gain, cum))
+          covered += scope.leaf(inc.filter(col("doc") === doc).select(col("item")))
+        }
       }
-    }
+    }._2()
     val schema = StructType(Seq(
       StructField("step", LongType, nullable = false),
       StructField("doc_id", LongType, nullable = false),
       StructField("new_items", LongType, nullable = false),
       StructField("cum_items", LongType, nullable = false)))
-    val out = spark.createDataFrame(
+    spark.createDataFrame(
       spark.sparkContext.parallelize(
         picks.toSeq.map { case (s, d, g, c) => Row(s, d, g, c) }, 1),
       schema)
-    leaves.foreach(_.unpersist())
-    inc.unpersist()
-    out
   }
 
   private def picked(

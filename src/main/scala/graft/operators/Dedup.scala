@@ -869,139 +869,127 @@ object Dedup {
     val spark = edges.sparkSession
     val Array(srcName, dstName) = edges.columns
     val e = edges.select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
-    // Undirected: propagate both ways (self-loops fall out of least()).
-    val ud = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      .persist()
-    // Fully materialize the persisted edge cache BEFORE anything else
-    // reads it. An `isEmpty` here (take(1)) caches only the partitions
-    // its one-partition job computes, so the seed aggregation below
-    // would RE-RUN the entire upstream edge pipeline for the rest —
-    // and the edges handed to this operator are typically the most
-    // expensive frame in the job (LSH candidates + exact-Jaccard
-    // verify). Measured at 5 k docs: the one-round CC loop took 2–7 s
-    // while the call spent 60+ s re-evaluating the pairs pipeline
-    // behind the partial cache. `count()` costs one full evaluation —
-    // work the seed needs anyway — and makes every later read a cache
-    // hit.
-    val udRows = ud.count()
-    // Empty edge set (no candidate pairs survived upstream thresholds —
-    // a legitimate production input): no nodes, empty result. Without
-    // the short-circuit the label-sum aggregate below returns SQL NULL
-    // and the convergence compare would NPE.
-    if (udRows == 0L) {
-      ud.unpersist()
-      return (ud.select(col("src").as("node"), col("src").as("component")), () => ())
+    LoopScope.run(spark) { scope =>
+      // Undirected: propagate both ways (self-loops fall out of least()).
+      val ud = scope.cache(e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+      // Fully materialize the persisted edge cache BEFORE anything else
+      // reads it. An `isEmpty` here (take(1)) caches only the partitions
+      // its one-partition job computes, so the seed aggregation below
+      // would RE-RUN the entire upstream edge pipeline for the rest —
+      // and the edges handed to this operator are typically the most
+      // expensive frame in the job (LSH candidates + exact-Jaccard
+      // verify). Measured at 5 k docs: the one-round CC loop took 2–7 s
+      // while the call spent 60+ s re-evaluating the pairs pipeline
+      // behind the partial cache. `count()` costs one full evaluation —
+      // work the seed needs anyway — and makes every later read a cache
+      // hit.
+      val udRows = ud.count()
+      // Empty edge set (no candidate pairs survived upstream thresholds —
+      // a legitimate production input): no nodes, empty result. Without
+      // the short-circuit the label-sum aggregate below returns SQL NULL
+      // and the convergence compare would NPE.
+      //
+      // Otherwise, the driver-local union-find arm (r16 optimization):
+      // near-dup edge sets are a vanishing fraction of the corpus by
+      // design (every in-repo producer gates its candidate generation),
+      // so the common case is a mirrored edge list of thousands-to-
+      // millions of rows feeding 4-7 distributed label rounds of pure
+      // per-round job latency (measured ~0.4 s/round at sf0.1 — the
+      // dominant cost of q195/q196/q104). Below the observed-size
+      // ceiling the component labeling runs as union-find over the
+      // collected edge rows instead: the min-label fixpoint is UNIQUE
+      // (component id = min node id in the component), so the result is
+      // identical to the iterative arm's by construction — ConnCompSpec
+      // pins equality on path/star/random graphs, and every CC-consuming
+      // oracle gate re-proves it per query. Same guarded-collect idiom as
+      // BpeTrainer.LocalVocabCeil / ClassifierTrainer.LocalFeatCeil:
+      // the gate keys on the MATERIALIZED count the loop needed anyway,
+      // a 100 TB edge set stays on the distributed rounds, and
+      // GRAFT_CC_LOCAL=off forces them for A/B attribution.
+      // Arm precedence: explicit parameter > GRAFT_CC_LOCAL env > auto
+      // by observed size (the BpeTrainer.train precedence).
+      if (udRows == 0L) {
+        scope.drop(ud)
+        ud.select(col("src").as("node"), col("src").as("component"))
+      } else if (graft.Config.armOverride(local, "GRAFT_CC_LOCAL").getOrElse(udRows <= LocalEdgeCeil)) {
+        require(
+          udRows <= LocalEdgeCeil,
+          s"connectedComponents local arm: $udRows mirrored edge rows exceed the " +
+            s"driver-collect ceiling $LocalEdgeCeil — pass local = Some(false) or unset " +
+            "GRAFT_CC_LOCAL to use the distributed label-propagation rounds")
+        val labels = componentsLocal(spark, ud.collect())
+        scope.drop(ud)
+        labels
+      } else {
+        // NO loop-session rebinding here (unlike the PageRank/HITS/
+        // relaxation family): the CC loop measured
+        // SLOWER under the edge-derived 1-partition clone (q51 3.79 vs
+        // 2.57 s, q97 3.43 vs 1.89 s at sf0.1) — its per-round
+        // convergence action over self-joining whole-node label frames
+        // (viaNeighbor + viaJump + union + labelSum) loses more to
+        // single-partition serialization than it saves in stage wakeups.
+        // Decimal sum: label sums can exceed Long at planetary node counts,
+        // and Spark 4 ANSI mode would throw on long-sum overflow.
+        def labelSum(df: DataFrame): java.math.BigDecimal =
+          df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
+        // Each label frame is a leaf whose persisted rows the labelSum
+        // scan right after computes, so the next round's plan starts
+        // from a leaf, not the whole iteration history.
+        var labels = scope.leaf(
+          ud.groupBy(col("src").as("node"))
+            .agg(min(least(col("src"), col("dst"))).as("component")))
+        var prevSum = labelSum(labels)
+        var converged = false
+        var iter = 0
+        // One propagation round per leaf+sum action: staging two
+        // rounds per action recomputed the inner round's frame for each
+        // of the outer round's ~4 consumers — q51 6.28 s vs 2.64 s, q97
+        // 6.01 s vs 2.33 s at sf0.1/32cpu.
+        // One propagation round: neighbor min + POINTER JUMP (offer every
+        // node its LABEL's label). Neighbor propagation alone moves the
+        // min one hop per round — O(diameter) rounds, one Spark job per
+        // hop, and a chain-shaped duplicate cluster (A≈B≈C≈… with no A≈C
+        // edge, the shape drifting boilerplate produces) makes diameter
+        // grow with corpus size. Labels are always ids of same-component
+        // nodes, so label-of-label is a valid (smaller-or-equal) candidate
+        // too, and chasing it halves the remaining distance per round —
+        // O(log diameter) rounds (ConnCompSpec: a 200-edge path converges
+        // inside the default 20-round budget, where neighbor-only
+        // propagation needed one round per hop). The fixpoint test still
+        // certifies full convergence: an unchanged sum means the neighbor
+        // step alone found no improvement — the original component-min
+        // fixpoint.
+        def propagate(ls: DataFrame): DataFrame = {
+          val viaNeighbor = ud
+            .join(ls.withColumnRenamed("node", "dst"), Seq("dst"))
+            .select(col("src").as("node"), col("component"))
+          val viaJump = ls
+            .join(
+              ls.select(col("node").as("component"), col("component").as("jump")),
+              Seq("component"))
+            .select(col("node"), col("jump").as("component"))
+          ls.unionByName(viaNeighbor)
+            .unionByName(viaJump)
+            .groupBy("node")
+            .agg(min(col("component")).as("component"))
+        }
+        while (!converged && iter < maxIter) {
+          val next = scope.leaf(propagate(labels))
+          val nextSum = labelSum(next)
+          scope.drop(labels)
+          labels = next
+          converged = nextSum.compareTo(prevSum) == 0
+          prevSum = nextSum
+          iter += 1
+        }
+        scope.drop(ud)
+        if (!converged)
+          throw new IllegalStateException(
+            s"connectedComponents did not converge within $maxIter rounds — " +
+              "raise maxIter (with pointer jumping, rounds needed ≈ log2 of the largest component's diameter)")
+        labels
+      }
     }
-    // Driver-local union-find arm (r16 optimization): near-dup edge
-    // sets are a vanishing fraction of the corpus by design (every
-    // in-repo producer gates its candidate generation), so the common
-    // case is a mirrored edge list of thousands-to-millions of rows
-    // feeding 4-7 distributed label rounds of pure per-round job
-    // latency (measured ~0.4 s/round at sf0.1 — the dominant cost of
-    // q195/q196/q104). Below the observed-size ceiling the component
-    // labeling runs as union-find over the collected edge rows
-    // instead: the min-label fixpoint is UNIQUE (component id = min
-    // node id in the component), so the result is identical to the
-    // iterative arm's by construction — ConnCompSpec pins equality
-    // on path/star/random graphs, and every CC-consuming oracle gate
-    // re-proves it per query. Same guarded-collect idiom as
-    // BpeTrainer.LocalVocabCeil / ClassifierTrainer.LocalFeatCeil:
-    // the gate keys on the MATERIALIZED count the loop needed anyway,
-    // a 100 TB edge set stays on the distributed rounds, and
-    // GRAFT_CC_LOCAL=off forces them for A/B attribution.
-    // Arm precedence: explicit parameter > GRAFT_CC_LOCAL env > auto
-    // by observed size (the BpeTrainer.train precedence).
-    if (graft.Config.armOverride(local, "GRAFT_CC_LOCAL").getOrElse(udRows <= LocalEdgeCeil)) {
-      require(
-        udRows <= LocalEdgeCeil,
-        s"connectedComponents local arm: $udRows mirrored edge rows exceed the " +
-          s"driver-collect ceiling $LocalEdgeCeil — pass local = Some(false) or unset " +
-          "GRAFT_CC_LOCAL to use the distributed label-propagation rounds")
-      val labels = componentsLocal(spark, ud.collect())
-      ud.unpersist()
-      return (labels, () => ())
-    }
-    // NO loop-session rebinding here (unlike the PageRank/HITS/
-    // relaxation family): the CC loop measured
-    // SLOWER under the edge-derived 1-partition clone (q51 3.79 vs
-    // 2.57 s, q97 3.43 vs 1.89 s at sf0.1) — its per-round
-    // convergence action over self-joining whole-node label frames
-    // (viaNeighbor + viaJump + union + labelSum) loses more to
-    // single-partition serialization than it saves in stage wakeups.
-    // Decimal sum: label sums can exceed Long at planetary node counts,
-    // and Spark 4 ANSI mode would throw on long-sum overflow.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
-    // Materialize a label frame: persist its row RDD (computed by the
-    // labelSum scan right after) and rewrap in a fresh two-column frame
-    // so the next round's plan starts from a leaf, not the whole
-    // iteration history.
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    // Env-gated per-round diagnostics (driver-side, once per round):
-    // round wall-clock and label sum, for attributing CC cost between
-    // round COUNT (algorithmic) and per-round fixed job overhead.
-    val ccLog = sys.env.contains("GRAFT_CC_LOG")
-    var (labels, labelsRdd) = materialize(
-      ud.groupBy(col("src").as("node"))
-        .agg(min(least(col("src"), col("dst"))).as("component")))
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    // One propagation round per materialize+sum action: staging two
-    // rounds per action recomputed the inner round's frame for each
-    // of the outer round's ~4 consumers — q51 6.28 s vs 2.64 s, q97
-    // 6.01 s vs 2.33 s at sf0.1/32cpu.
-    // One propagation round: neighbor min + POINTER JUMP (offer every
-    // node its LABEL's label). Neighbor propagation alone moves the
-    // min one hop per round — O(diameter) rounds, one Spark job per
-    // hop, and a chain-shaped duplicate cluster (A≈B≈C≈… with no A≈C
-    // edge, the shape drifting boilerplate produces) makes diameter
-    // grow with corpus size. Labels are always ids of same-component
-    // nodes, so label-of-label is a valid (smaller-or-equal) candidate
-    // too, and chasing it halves the remaining distance per round —
-    // O(log diameter) rounds (ConnCompSpec: a 200-edge path converges
-    // inside the default 20-round budget, where neighbor-only
-    // propagation needed one round per hop). The fixpoint test still
-    // certifies full convergence: an unchanged sum means the neighbor
-    // step alone found no improvement — the original component-min
-    // fixpoint.
-    def propagate(ls: DataFrame): DataFrame = {
-      val viaNeighbor = ud
-        .join(ls.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src").as("node"), col("component"))
-      val viaJump = ls
-        .join(
-          ls.select(col("node").as("component"), col("component").as("jump")),
-          Seq("component"))
-        .select(col("node"), col("jump").as("component"))
-      ls.unionByName(viaNeighbor)
-        .unionByName(viaJump)
-        .groupBy("node")
-        .agg(min(col("component")).as("component"))
-    }
-    while (!converged && iter < maxIter) {
-      val roundT0 = System.nanoTime()
-      val (next, nextRdd) = materialize(propagate(labels))
-      val nextSum = labelSum(next)
-      labelsRdd.unpersist()
-      labels = next
-      labelsRdd = nextRdd
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iter += 1
-      if (ccLog)
-        println(f"[cc] round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2f s sum=$nextSum converged=$converged")
-    }
-    ud.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds — " +
-          "raise maxIter (with pointer jumping, rounds needed ≈ log2 of the largest component's diameter)")
-    val finalRdd = labelsRdd
-    (labels, () => finalRdd.unpersist(blocking = false))
   }
 
   /** Canonical KEEP-LIST from near-duplicate pairs — the step that
@@ -1207,20 +1195,19 @@ object Dedup {
       distanceOn: Column => Column = (c: Column) => c): DataFrame = {
     require(maxDist >= 1 && maxDist <= 16,
       s"editDistancePairs: maxDist in [1,16]; got $maxDist")
-    val names = entities
-      .select(col(strCol).cast("string").as("name"))
-      .filter(col("name").isNotNull)
-      .distinct()
-      .withColumn("block", blockOf(col("name")))
-      .persist()
     // The block-size gate action doubles as the cache pin: without the
     // persist, the distinct-name universe recomputes three times (gate
     // + both self-join sides) — the fan-out-recompute class the repo
     // pins against everywhere else. Released with the session's
     // releaseAllCaches on success; the gate's throw path (degenerate
-    // blocking is an EXPECTED failure mode) unpersists before
-    // rethrowing, mirroring the graph loops' cleanup.
-    try {
+    // blocking is an EXPECTED failure mode) releases it in LoopScope.run.
+    LoopScope.run(entities.sparkSession) { scope =>
+      val names = scope.cache(
+        entities
+          .select(col(strCol).cast("string").as("name"))
+          .filter(col("name").isNotNull)
+          .distinct()
+          .withColumn("block", blockOf(col("name"))))
       val biggestRow = names.groupBy(col("block")).count().agg(max(col("count"))).first()
       val biggest = if (biggestRow.isNullAt(0)) 0L else biggestRow.getLong(0)
       require(biggest <= maxBlockRows,
@@ -1241,9 +1228,7 @@ object Dedup {
           levenshtein(distanceOn(col("name_a")), distanceOn(col("name_b"))).cast("long"))
         .filter(col("dist") <= maxDist)
         .select(col("name_a"), col("name_b"), col("dist"))
-    } catch {
-      case t: Throwable => names.unpersist(); throw t
-    }
+    }._1
   }
 
   /** EXACT set-similarity join by prefix filtering (the AllPairs /
@@ -1342,63 +1327,52 @@ object Dedup {
     // as a materialized column first. The dfreq aggregation under
     // globalRowNumber's leaf materialization fills every cache
     // partition before the array build reads it.
-    val toks = df
-      .select(col(idCol).as("__id"), explode(col(tokensCol)).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var arrs: DataFrame = null
-    try {
+    LoopScope.run(df.sparkSession) { scope =>
+      val toks = scope.cache(df.select(col(idCol).as("__id"), explode(col(tokensCol)).as("token")))
       val dfreq = toks.groupBy(col("token")).agg(count(lit(1)).as("df"))
       val ranked = Relational
         .globalRowNumber(dfreq, "df", numPartitions = rankParts, outCol = "rank")
         .select(col("token"), col("rank"))
-      arrs = toks
-        .join(ranked, Seq("token"))
-        .groupBy(col("__id"))
-        .agg(sort_array(collect_list(struct(col("rank"), col("token")))).as("ts"))
-        .select(
-          col("__id"),
-          transform(col("ts"), x => x.getField("token")).as("toks"),
-          size(col("ts")).cast("long").as("n"))
-        .withColumn("k", col("n") - expr(s"($tNum * n + ${tDen - 1}) div $tDen") + 1L)
-        .persist()
+      val arrs = scope.cache(
+        toks
+          .join(ranked, Seq("token"))
+          .groupBy(col("__id"))
+          .agg(sort_array(collect_list(struct(col("rank"), col("token")))).as("ts"))
+          .select(
+            col("__id"),
+            transform(col("ts"), x => x.getField("token")).as("toks"),
+            size(col("ts")).cast("long").as("n"))
+          .withColumn("k", col("n") - expr(s"($tNum * n + ${tDen - 1}) div $tDen") + 1L))
       arrs.count() // pin ONE evaluation before prefix + both verify sides read it
       // toks has no consumers past this point — release it here rather
       // than holding the operator's largest intermediate (the exploded
       // corpus) until the session sweep, where it would compete with
       // arrs and sibling caches for executor memory.
-      toks.unpersist(): Unit
-    } catch {
-      // rank/array-build actions can throw (globalRowNumber
-      // materializes a leaf): release both operator caches before
-      // surfacing, mirroring the graph loops' cleanup
-      case t: Throwable =>
-        toks.unpersist()
-        if (arrs != null) arrs.unpersist(): Unit
-        throw t
-    }
-    val prefix = arrs.select(
-      col("__id"),
-      col("n"),
-      explode(slice(col("toks"), lit(1), col("k"))).as("token"))
-    // Candidate join carries the AllPairs SIZE FILTER alongside the
-    // prefix-token equality: J ≥ t forces inter ≥ t·max(|x|,|y|) and
-    // inter ≤ min(|x|,|y|), so min·tDen ≥ max·tNum — pairs whose set
-    // sizes differ more than the threshold allows never reach
-    // verification. Correctness-preserving (a pruned pair provably
-    // fails the gate); on near-uniform-vocabulary corpora this is the
-    // filter still standing when rare-token selectivity degenerates.
-    val cands = prefix
-      .select(col("__id").as("id_a"), col("n").as("n_a"), col("token"))
-      .join(
-        prefix.select(col("__id").as("id_b"), col("n").as("n_b"), col("token")),
-        Seq("token"))
-      .filter(
-        col("id_a") < col("id_b") &&
-          col("n_a") * tDen >= col("n_b") * tNum &&
-          col("n_b") * tDen >= col("n_a") * tNum)
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    (arrs, cands)
+      scope.drop(toks)
+      val prefix = arrs.select(
+        col("__id"),
+        col("n"),
+        explode(slice(col("toks"), lit(1), col("k"))).as("token"))
+      // Candidate join carries the AllPairs SIZE FILTER alongside the
+      // prefix-token equality: J ≥ t forces inter ≥ t·max(|x|,|y|) and
+      // inter ≤ min(|x|,|y|), so min·tDen ≥ max·tNum — pairs whose set
+      // sizes differ more than the threshold allows never reach
+      // verification. Correctness-preserving (a pruned pair provably
+      // fails the gate); on near-uniform-vocabulary corpora this is the
+      // filter still standing when rare-token selectivity degenerates.
+      val cands = prefix
+        .select(col("__id").as("id_a"), col("n").as("n_a"), col("token"))
+        .join(
+          prefix.select(col("__id").as("id_b"), col("n").as("n_b"), col("token")),
+          Seq("token"))
+        .filter(
+          col("id_a") < col("id_b") &&
+            col("n_a") * tDen >= col("n_b") * tNum &&
+            col("n_b") * tDen >= col("n_a") * tNum)
+        .select(col("id_a"), col("id_b"))
+        .distinct()
+      (arrs, cands)
+    }._1
   }
 
   /** Exact integer verification of the candidate pairs against the

@@ -22,6 +22,12 @@ import org.apache.spark.sql.functions._
   * plan — per-round scheduler latency amortizes, while analysis cost
   * never compounds past the checkpoint interval (the plan-depth
   * discipline of the CC loop, applied at interval).
+  *
+  * Every operator here runs its call in a [[LoopScope]]: the scope
+  * persists the leaves and caches the operator asks for, moves the
+  * rounds to the edge-sized session of [[loopSessionFor]], and
+  * releases what it holds through the returned handle — or before
+  * rethrowing, when an action inside the call throws.
   */
 object Graph {
 
@@ -44,35 +50,19 @@ object Graph {
     * with loop shuffles at the edge-derived width and AQE's per-stage
     * orchestration off for the rounds.
     *
-    * Mechanism: once the canonical edge frame is materialized (its
-    * count is an action the loops already pay), partitions =
-    * `ceil(edgeRows / 500k)` clamped to the session setting. If that
-    * equals the session setting — the 100 TB regime — NOTHING changes:
-    * same session, AQE stays on, skew handling intact. Otherwise the
-    * rounds build against a CLONED session (shared SparkContext,
-    * shared cache manager) with the derived width and AQE off —
-    * justified for the rounds only, whose shapes are fixed node-sized
-    * equi-join + map-side-combined agg with no skew or stats surprises
-    * for AQE to exploit. The edge frame crosses sessions as an
-    * RDD-backed leaf (reading THROUGH the caller-session cache), which
-    * also freezes the caller's optimized plan — the conjunct-leak
-    * guard the loops already require.
-    *
-    * Returns the session to run rounds on and the edge frame rebound
-    * to it. The caller keeps releasing the original cache handle.
-    */
-  private[operators] def loopStage(
-      cached: DataFrame,
-      cachedRows: Long): (org.apache.spark.sql.SparkSession, DataFrame) =
-    loopSessionFor(cached.sparkSession, cachedRows) match {
-      case None => (cached.sparkSession, cached)
-      case Some(loop) => (loop, loop.createDataFrame(cached.rdd, cached.schema))
-    }
-
-  /** The clone-or-not decision behind [[loopStage]]: Some(clone) with
-    * the derived shuffle width and AQE off when the edge count sits
-    * below the session width × 500k rows, None (run on the caller
-    * session untouched) otherwise.
+    * Mechanism: once the loop's input is materialized (its count is an
+    * action the loops already pay), partitions = `ceil(rows / 500k)`
+    * clamped to the session setting. If that equals the session
+    * setting — the 100 TB regime — this returns None and NOTHING
+    * changes: same session, AQE stays on, skew handling intact.
+    * Otherwise Some(clone) (shared SparkContext, shared cache manager)
+    * with the derived width and AQE off — justified for the rounds
+    * only, whose shapes are fixed node-sized equi-join + map-side-
+    * combined agg with no skew or stats surprises for AQE to exploit.
+    * [[LoopScope.rebind]] moves an operator's materialized input onto
+    * the clone as an RDD-backed leaf (reading THROUGH the caller-
+    * session cache), which also freezes the caller's optimized plan —
+    * the conjunct-leak guard the loops already require.
     */
   private[operators] def loopSessionFor(
       sess: org.apache.spark.sql.SparkSession,
@@ -145,6 +135,11 @@ object Graph {
       edges, iterations, dampingPct, scale,
       undirected = undirected, seeds = seeds, weightCol = weightCol)._1
 
+  /** Rounds the PageRank and label-propagation loops stack lazily
+    * between two leaf-materialized rank frames.
+    */
+  private val MaterializeEvery = 4
+
   /** [[integerPageRank]] plus a release handle for the persisted frames
     * backing the result (the final rank RDD + the edge/degree caches) —
     * same contract as [[Dedup.connectedComponentsReleasable]]: the
@@ -156,15 +151,12 @@ object Graph {
       iterations: Int = 3,
       dampingPct: Int = 85,
       scale: Long = 1000000L,
-      materializeEvery: Int = 4,
       undirected: Boolean = false,
       seeds: Option[DataFrame] = None,
       weightCol: Option[String] = None): (DataFrame, () => Unit) = {
     require(iterations >= 1, "integerPageRank: need at least one iteration")
     require(dampingPct >= 0 && dampingPct <= 100, "dampingPct is a percentage")
     require(scale >= 100L, "scale below 100 micro-units loses the damping term to truncation")
-    require(materializeEvery >= 1, "materializeEvery is a round count")
-    val spark = edges.sparkSession
     // First two columns are (src, dst); a weight column is addressed
     // by name and may sit anywhere else in the frame.
     val srcName = edges.columns(0)
@@ -172,143 +164,133 @@ object Graph {
     require(
       !weightCol.exists(wc => wc == srcName || wc == dstName),
       "integerPageRank: weightCol collides with the (src, dst) columns")
-    // `undirected = true`: the input is an unordered pair list. Dedup
-    // the CANONICAL (min, max) pair — ONE shuffle over the raw input —
-    // and mirror from the cache with a narrow column flip, instead of
-    // having the caller pre-mirror (which would evaluate the upstream
-    // pipeline twice and push 2× the rows through the dedup shuffle —
-    // measured on the q113 edge build: the mirrored-input plan scanned
-    // and joined the fact tables twice and distinct'd 1.17 M rows where
-    // this shape distinct's 585 k once). Self-loops are dropped (their
-    // mirror would double-count the edge); directed mode keeps them.
-    val cached = {
-      val cast = weightCol match {
-        case None =>
-          edges.select(col(srcName).cast("long").as("a"), col(dstName).cast("long").as("b"), lit(1L).as("w"))
-        case Some(wc) =>
-          edges.select(col(srcName).cast("long").as("a"), col(dstName).cast("long").as("b"), col(wc).cast("long").as("w"))
+    LoopScope.run(edges.sparkSession) { scope =>
+      // `undirected = true`: the input is an unordered pair list. Dedup
+      // the CANONICAL (min, max) pair — ONE shuffle over the raw input —
+      // and mirror from the cache with a narrow column flip, instead of
+      // having the caller pre-mirror (which would evaluate the upstream
+      // pipeline twice and push 2× the rows through the dedup shuffle —
+      // measured on the q113 edge build: the mirrored-input plan scanned
+      // and joined the fact tables twice and distinct'd 1.17 M rows where
+      // this shape distinct's 585 k once). Self-loops are dropped (their
+      // mirror would double-count the edge); directed mode keeps them.
+      val cached = {
+        val cast = weightCol match {
+          case None =>
+            edges.select(col(srcName).cast("long").as("a"), col(dstName).cast("long").as("b"), lit(1L).as("w"))
+          case Some(wc) =>
+            edges.select(col(srcName).cast("long").as("a"), col(dstName).cast("long").as("b"), col(wc).cast("long").as("w"))
+        }
+        val canon =
+          if (undirected)
+            cast
+              .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"), col("w"))
+              .filter(col("src") =!= col("dst"))
+          else cast.select(col("a").as("src"), col("b").as("dst"), col("w"))
+        // Unweighted: duplicates collapse to a single unit edge.
+        // Weighted: parallel edges SUM their weights — one dedup/agg
+        // shuffle either way.
+        scope.cache(
+          if (weightCol.isEmpty)
+            canon.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L))
+          else canon.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
       }
-      val canon =
-        if (undirected)
-          cast
-            .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"), col("w"))
-            .filter(col("src") =!= col("dst"))
-        else cast.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      // Unweighted: duplicates collapse to a single unit edge.
-      // Weighted: parallel edges SUM their weights — one dedup/agg
-      // shuffle either way.
-      val agg =
-        if (weightCol.isEmpty)
-          canon.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L))
-        else canon.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      agg.persist()
-    }
-    // Materialize FULLY before anything else reads the cache (an
-    // isEmpty probe would cache only one partition's worth and every
-    // later scan would replay the upstream edge pipeline — the CC
-    // lesson, Dedup.scala:473-484).
-    val edgeRows = cached.count()
-    if (edgeRows == 0L) {
-      cached.unpersist()
-      return (cached.select(col("src").as("node"), col("src").as("rank")), () => ())
-    }
-    // Edge-derived loop sizing (see loopStage): the rounds below run
-    // at a shuffle width matched to the materialized edge count, not
-    // the corpus-sized session setting.
-    val (loopSpark, loopEdges) = loopStage(cached, edgeRows)
-    // Canonical pairs are strictly (min < max), so the mirrored rows
-    // cannot collide with the originals — no second dedup needed; the
-    // mirror carries the pair's weight in both directions.
-    val e =
-      if (undirected)
-        loopEdges.unionByName(loopEdges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      else loopEdges
-    // Per-source outgoing totals fold into a persisted per-edge sender
-    // frame (src, dst, w, wsum) — iteration-invariant, computed once.
-    // The node universe is persisted too: it seeds rank 0 and anchors
-    // the per-round left join (a node with no in-edges keeps its base
-    // mass). No eager count on either: every read below is a FULL
-    // scan (the partial-cache trap needs a take(1)-shaped probe), so
-    // the first full scan fills the cache and later ones hit it.
-    val wsums = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    // The node universe carries an `is_seed` flag: uniform PageRank is
-    // the all-seeds case; a seed set (TrustRank) restricts BOTH the
-    // initial mass and the per-round teleport term to the seeds, so
-    // trust reaches non-seeds only through links. The seed frame is
-    // broadcast — a trust whitelist is small by construction.
-    val nodes = {
-      val uni = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
-      seeds match {
-        case None => uni.withColumn("is_seed", lit(true)).persist()
-        case Some(sd) =>
-          val s0 = sd.select(col(sd.columns.head).cast("long").as("node"), lit(true).as("__s")).distinct()
-          uni.join(broadcast(s0), Seq("node"), "left")
-            .select(col("node"), coalesce(col("__s"), lit(false)).as("is_seed"))
-            .persist()
-      }
-    }
-    val sender = e.join(wsums, Seq("src")).persist()
-    val base = ((100L - dampingPct) * scale) / 100L
-    // Per-edge contribution. Unweighted stays pure-long (`rank div
-    // wsum`, wsum ≡ out-degree). Weighted routes the multiply through
-    // DECIMAL(38,0): rank·w can exceed Long while the QUOTIENT is
-    // always ≤ rank (w ≤ wsum), so IntegralDivide's long result is
-    // safe — ANSI mode would throw on a long multiply instead.
-    val contribExpr =
-      if (weightCol.isEmpty) "rank div wsum"
-      else "(CAST(rank AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) div CAST(wsum AS DECIMAL(38,0))"
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (loopSpark.createDataFrame(rdd, df.schema), rdd)
-    }
-    // Rounds STACK LAZILY — one action evaluates several rounds as a
-    // single multi-stage job instead of paying scheduler + cache-write
-    // latency per round (measured: per-round materialization tripled
-    // the 3-round wall-clock). Every `materializeEvery` rounds the
-    // rank frame is persisted and rewrapped as a leaf so analysis
-    // cost never compounds past a bounded plan depth (the unbounded-
-    // iteration discipline of the CC loop, applied at interval).
-    var rank = nodes.select(col("node"), when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
-    var rankRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    for (i <- 1 to iterations) {
-      val contrib = sender
-        .join(rank.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr(contribExpr).as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("csum"))
-      val damped = expr(s"($dampingPct * coalesce(csum, CAST(0 AS BIGINT))) div 100")
-      // Undirected + no seed set: the mirror guarantees every node an
-      // in-edge, so `contrib` already covers the full node universe
-      // and the teleport term is a constant — the anchor join would be
-      // a per-round no-op (one saved broadcast join + stage per round).
-      // Seeded or directed graphs keep the left join: it carries the
-      // per-node is_seed flag and re-anchors danglers' targets.
-      val next =
-        if (undirected && seeds.isEmpty)
-          contrib.select(col("node"), (lit(base) + damped).as("rank"))
-        else
-          nodes
-            .join(contrib, Seq("node"), "left")
-            .select(
-              col("node"),
-              (when(col("is_seed"), lit(base)).otherwise(lit(0L)) + damped).as("rank"))
-      if (i % materializeEvery == 0 && i < iterations) {
-        val (nextDf, nextRdd) = materialize(next)
-        nextDf.count()
-        rankRdd.foreach(_.unpersist())
-        rank = nextDf
-        rankRdd = Some(nextRdd)
+      // Materialize FULLY before anything else reads the cache (an
+      // isEmpty probe would cache only one partition's worth and every
+      // later scan would replay the upstream edge pipeline — the CC
+      // lesson, Dedup.scala:473-484).
+      val edgeRows = cached.count()
+      if (edgeRows == 0L) {
+        scope.drop(cached)
+        cached.select(col("src").as("node"), col("src").as("rank"))
       } else {
-        rank = next
+        // Edge-derived loop sizing (Graph.loopSessionFor): the rounds
+        // below run at a shuffle width matched to the materialized edge
+        // count, not the corpus-sized session setting.
+        val loopEdges = scope.rebind(cached, edgeRows)
+        // Canonical pairs are strictly (min < max), so the mirrored rows
+        // cannot collide with the originals — no second dedup needed; the
+        // mirror carries the pair's weight in both directions.
+        val e =
+          if (undirected)
+            loopEdges.unionByName(loopEdges.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+          else loopEdges
+        // Per-source outgoing totals fold into a persisted per-edge sender
+        // frame (src, dst, w, wsum) — iteration-invariant, computed once.
+        // The node universe is persisted too: it seeds rank 0 and anchors
+        // the per-round left join (a node with no in-edges keeps its base
+        // mass). No eager count on either: every read below is a FULL
+        // scan (the partial-cache trap needs a take(1)-shaped probe), so
+        // the first full scan fills the cache and later ones hit it.
+        val wsums = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
+        // The node universe carries an `is_seed` flag: uniform PageRank is
+        // the all-seeds case; a seed set (TrustRank) restricts BOTH the
+        // initial mass and the per-round teleport term to the seeds, so
+        // trust reaches non-seeds only through links. The seed frame is
+        // broadcast — a trust whitelist is small by construction.
+        val nodes = {
+          val uni = e.select(col("src").as("node"))
+            .unionByName(e.select(col("dst").as("node")))
+            .distinct()
+          scope.cache(seeds match {
+            case None => uni.withColumn("is_seed", lit(true))
+            case Some(sd) =>
+              val s0 = sd.select(col(sd.columns.head).cast("long").as("node"), lit(true).as("__s")).distinct()
+              uni.join(broadcast(s0), Seq("node"), "left")
+                .select(col("node"), coalesce(col("__s"), lit(false)).as("is_seed"))
+          })
+        }
+        val sender = scope.cache(e.join(wsums, Seq("src")))
+        val base = ((100L - dampingPct) * scale) / 100L
+        // Per-edge contribution. Unweighted stays pure-long (`rank div
+        // wsum`, wsum ≡ out-degree). Weighted routes the multiply through
+        // DECIMAL(38,0): rank·w can exceed Long while the QUOTIENT is
+        // always ≤ rank (w ≤ wsum), so IntegralDivide's long result is
+        // safe — ANSI mode would throw on a long multiply instead.
+        val contribExpr =
+          if (weightCol.isEmpty) "rank div wsum"
+          else "(CAST(rank AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) div CAST(wsum AS DECIMAL(38,0))"
+        // Rounds STACK LAZILY — one action evaluates several rounds as a
+        // single multi-stage job instead of paying scheduler + cache-write
+        // latency per round (measured: per-round materialization tripled
+        // the 3-round wall-clock). Every `MaterializeEvery` rounds the
+        // rank frame becomes a leaf so analysis cost never compounds past
+        // a bounded plan depth (the unbounded-iteration discipline of the
+        // CC loop, applied at interval).
+        var rank = nodes.select(col("node"), when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("rank"))
+        var rankLeaf: Option[DataFrame] = None
+        for (i <- 1 to iterations) {
+          val contrib = sender
+            .join(rank.withColumnRenamed("node", "src"), Seq("src"))
+            .select(col("dst").as("node"), expr(contribExpr).as("c"))
+            .groupBy(col("node"))
+            .agg(sum(col("c")).as("csum"))
+          val damped = expr(s"($dampingPct * coalesce(csum, CAST(0 AS BIGINT))) div 100")
+          // Undirected + no seed set: the mirror guarantees every node an
+          // in-edge, so `contrib` already covers the full node universe
+          // and the teleport term is a constant — the anchor join would be
+          // a per-round no-op (one saved broadcast join + stage per round).
+          // Seeded or directed graphs keep the left join: it carries the
+          // per-node is_seed flag and re-anchors danglers' targets.
+          rank =
+            if (undirected && seeds.isEmpty)
+              contrib.select(col("node"), (lit(base) + damped).as("rank"))
+            else
+              nodes
+                .join(contrib, Seq("node"), "left")
+                .select(
+                  col("node"),
+                  (when(col("is_seed"), lit(base)).otherwise(lit(0L)) + damped).as("rank"))
+          if (i % MaterializeEvery == 0 && i < iterations) {
+            rank = scope.leaf(rank)
+            rank.count()
+            rankLeaf.foreach(scope.drop)
+            rankLeaf = Some(rank)
+          }
+        }
+        rank
       }
     }
-    val lastRdd = rankRdd
-    val release = { () =>
-      lastRdd.foreach(_.unpersist()); sender.unpersist(); nodes.unpersist(); cached.unpersist(); ()
-    }
-    (rank, release)
   }
 
   /** Semi-supervised label propagation — spread integer labels from a
@@ -343,80 +325,66 @@ object Graph {
   def labelPropagationReleasable(
       edges: DataFrame,
       seedLabels: DataFrame,
-      iterations: Int = 3,
-      materializeEvery: Int = 4): (DataFrame, () => Unit) = {
+      iterations: Int = 3): (DataFrame, () => Unit) = {
     require(iterations >= 1, "labelPropagation: need at least one iteration")
-    require(materializeEvery >= 1, "materializeEvery is a round count")
-    val spark = edges.sparkSession
-    val srcName = edges.columns(0)
-    val dstName = edges.columns(1)
-    // Raw leaf first, then canonicalize over plain rows — the
-    // conjunct-leak guard shared with kCore/bfsDistances: a lazy
-    // canonicalization lets Catalyst push its cheap conjuncts into
-    // the caller's pair plan and reorder them with the caller's own
-    // filters (measured re-running an exact decimal verify for every
-    // candidate pair, 32 s vs 1 s).
-    val (loopSpark, canon, canonRows, canonRelease) = canonPairLeaf(spark, edges, srcName, dstName)
-    if (canonRows == 0L) {
-      canonRelease()
-      return (
-        canon.select(col("src").as("node"), lit(null).cast("long").as("label")),
-        () => ())
-    }
-    val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
-    // Conflicting seed rows for one node resolve to the smallest label
-    // (deterministic; also collapses exact duplicates) — a plain
-    // distinct would leave two rows and FAN OUT the node join below.
-    val seeds = seedLabels
-      .select(
-        col(seedLabels.columns(0)).cast("long").as("node"),
-        col(seedLabels.columns(1)).cast("long").as("seed_label"))
-      .groupBy(col("node"))
-      .agg(min(col("seed_label")).as("seed_label"))
-      .persist()
-    val nodes = canon.select(col("src").as("node"))
-      .unionByName(canon.select(col("dst").as("node")))
-      .distinct()
-      .join(seeds, Seq("node"), "left")
-      .persist()
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (loopSpark.createDataFrame(rdd, df.schema), rdd)
-    }
-    var labels = nodes.select(col("node"), col("seed_label").as("label"))
-    var labelsRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
-    for (i <- 1 to iterations) {
-      // Votes: each labeled neighbor contributes one count to its label.
-      val votes = e
-        .join(
-          labels.filter(col("label").isNotNull).withColumnRenamed("node", "src"),
-          Seq("src"))
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      // Deterministic argmax: max count, ties to the SMALLEST label
-      // (labels are non-negative, so -label orders ties correctly).
-      val pick = votes
-        .groupBy(col("node"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("picked"))
-      val next = nodes
-        .join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("seed_label"), col("picked")).as("label"))
-      if (i % materializeEvery == 0 && i < iterations) {
-        val (nextDf, nextRdd) = materialize(next)
-        nextDf.count()
-        labelsRdd.foreach(_.unpersist())
-        labels = nextDf
-        labelsRdd = Some(nextRdd)
+    LoopScope.run(edges.sparkSession) { scope =>
+      // Raw leaf first, then canonicalize over plain rows — the
+      // conjunct-leak guard shared with kCore/bfsDistances: a lazy
+      // canonicalization lets Catalyst push its cheap conjuncts into
+      // the caller's pair plan and reorder them with the caller's own
+      // filters (measured re-running an exact decimal verify for every
+      // candidate pair, 32 s vs 1 s).
+      val (canon0, canonRows) = canonPairLeaf(scope, edges)
+      if (canonRows == 0L) {
+        scope.drop(canon0)
+        canon0.select(col("src").as("node"), lit(null).cast("long").as("label"))
       } else {
-        labels = next
+        val canon = scope.rebind(canon0, canonRows)
+        val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
+        // Conflicting seed rows for one node resolve to the smallest label
+        // (deterministic; also collapses exact duplicates) — a plain
+        // distinct would leave two rows and FAN OUT the node join below.
+        val seeds = scope.cache(
+          seedLabels
+            .select(
+              col(seedLabels.columns(0)).cast("long").as("node"),
+              col(seedLabels.columns(1)).cast("long").as("seed_label"))
+            .groupBy(col("node"))
+            .agg(min(col("seed_label")).as("seed_label")))
+        val nodes = scope.cache(
+          canon.select(col("src").as("node"))
+            .unionByName(canon.select(col("dst").as("node")))
+            .distinct()
+            .join(seeds, Seq("node"), "left"))
+        var labels = nodes.select(col("node"), col("seed_label").as("label"))
+        var labelsLeaf: Option[DataFrame] = None
+        for (i <- 1 to iterations) {
+          // Votes: each labeled neighbor contributes one count to its label.
+          val votes = e
+            .join(
+              labels.filter(col("label").isNotNull).withColumnRenamed("node", "src"),
+              Seq("src"))
+            .groupBy(col("dst").as("node"), col("label"))
+            .agg(count(lit(1)).as("c"))
+          // Deterministic argmax: max count, ties to the SMALLEST label
+          // (labels are non-negative, so -label orders ties correctly).
+          val pick = votes
+            .groupBy(col("node"))
+            .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+            .select(col("node"), (-col("m.nl")).as("picked"))
+          labels = nodes
+            .join(pick, Seq("node"), "left")
+            .select(col("node"), coalesce(col("seed_label"), col("picked")).as("label"))
+          if (i % MaterializeEvery == 0 && i < iterations) {
+            labels = scope.leaf(labels)
+            labels.count()
+            labelsLeaf.foreach(scope.drop)
+            labelsLeaf = Some(labels)
+          }
+        }
+        labels
       }
     }
-    val lastRdd = labelsRdd
-    val release = { () =>
-      lastRdd.foreach(_.unpersist()); nodes.unpersist(); seeds.unpersist(); canonRelease(); ()
-    }
-    (labels, release)
   }
 
   /** Per-node triangle counts over an undirected pair list — the
@@ -442,61 +410,58 @@ object Graph {
     triangleCountsReleasable(edges)._1
 
   /** [[triangleCounts]] plus the cache release handle. */
-  def triangleCountsReleasable(edges: DataFrame): (DataFrame, () => Unit) = {
-    val spark = edges.sparkSession
-    val srcName = edges.columns(0)
-    val dstName = edges.columns(1)
-    // Same raw-leaf-first conjunct-leak guard as labelPropagation —
-    // but rebind=false: the wedge join's fan-out is quadratic in hub
-    // degree, so the edge-derived loop width underestimates badly and
-    // AQE's skew-split is wanted (see canonPairLeaf scaladoc).
-    val (_, canon0, canonRows, canonRelease) =
-      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
-    val canon = canon0.select(col("src").as("a"), col("dst").as("b"))
-    if (canonRows == 0L) {
-      canonRelease()
-      return (canon.select(col("a").as("node"), col("a").as("triangles")), () => ())
+  def triangleCountsReleasable(edges: DataFrame): (DataFrame, () => Unit) =
+    LoopScope.run(edges.sparkSession) { scope =>
+      // Same raw-leaf-first conjunct-leak guard as labelPropagation —
+      // but no loop-session rebinding: the wedge join's fan-out is
+      // quadratic in hub degree, so the edge-derived loop width
+      // underestimates badly and AQE's skew-split is wanted (see
+      // canonPairLeaf scaladoc).
+      val (canon0, canonRows) = canonPairLeaf(scope, edges)
+      val canon = canon0.select(col("src").as("a"), col("dst").as("b"))
+      if (canonRows == 0L) {
+        scope.drop(canon0)
+        canon.select(col("a").as("node"), col("a").as("triangles"))
+      } else {
+        val deg = canon.select(col("a").as("node"))
+          .unionByName(canon.select(col("b").as("node")))
+          .groupBy(col("node"))
+          .agg(count(lit(1)).as("deg"))
+        // Orient each edge low→high by (deg, id); carry the head's order
+        // key so the wedge filter needs no extra degree join.
+        val oriented = {
+          val ordA = struct(col("da").as("d"), col("a").as("n"))
+          val ordB = struct(col("db").as("d"), col("b").as("n"))
+          scope.cache(
+            canon
+              .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+              .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
+              .select(
+                when(ordA < ordB, col("a")).otherwise(col("b")).as("lo"),
+                when(ordA < ordB, col("b")).otherwise(col("a")).as("hi"),
+                when(ordA < ordB, ordB).otherwise(ordA).as("hiOrd")))
+        }
+        oriented.count()
+        val w1 = oriented.select(col("lo").as("u"), col("hi").as("x"), col("hiOrd").as("xOrd"))
+        val w2 = oriented.select(col("lo").as("u"), col("hi").as("y"), col("hiOrd").as("yOrd"))
+        val wedges = w1
+          .join(w2, Seq("u"))
+          .filter(col("xOrd") < col("yOrd"))
+          .select(col("u"), col("x"), col("y"))
+        val triangles = wedges
+          .join(
+            canon.select(col("a"), col("b")),
+            least(col("x"), col("y")) === col("a") && greatest(col("x"), col("y")) === col("b"))
+          .select(col("u"), col("x"), col("y"))
+        val perNode = triangles
+          .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
+          .groupBy(col("node"))
+          .agg(count(lit(1)).as("t"))
+        deg
+          .join(perNode, Seq("node"), "left")
+          .select(col("node"), coalesce(col("t"), lit(0L)).as("triangles"))
+      }
     }
-    val deg = canon.select(col("a").as("node"))
-      .unionByName(canon.select(col("b").as("node")))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("deg"))
-    // Orient each edge low→high by (deg, id); carry the head's order
-    // key so the wedge filter needs no extra degree join.
-    val oriented = {
-      val ordA = struct(col("da").as("d"), col("a").as("n"))
-      val ordB = struct(col("db").as("d"), col("b").as("n"))
-      canon
-        .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-        .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-        .select(
-          when(ordA < ordB, col("a")).otherwise(col("b")).as("lo"),
-          when(ordA < ordB, col("b")).otherwise(col("a")).as("hi"),
-          when(ordA < ordB, ordB).otherwise(ordA).as("hiOrd"))
-        .persist()
-    }
-    oriented.count()
-    val w1 = oriented.select(col("lo").as("u"), col("hi").as("x"), col("hiOrd").as("xOrd"))
-    val w2 = oriented.select(col("lo").as("u"), col("hi").as("y"), col("hiOrd").as("yOrd"))
-    val wedges = w1
-      .join(w2, Seq("u"))
-      .filter(col("xOrd") < col("yOrd"))
-      .select(col("u"), col("x"), col("y"))
-    val triangles = wedges
-      .join(
-        canon.select(col("a"), col("b")),
-        least(col("x"), col("y")) === col("a") && greatest(col("x"), col("y")) === col("b"))
-      .select(col("u"), col("x"), col("y"))
-    val perNode = triangles
-      .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("t"))
-    val out = deg
-      .join(perNode, Seq("node"), "left")
-      .select(col("node"), coalesce(col("t"), lit(0L)).as("triangles"))
-    val release = { () => oriented.unpersist(); canonRelease(); () }
-    (out, release)
-  }
 
   /** k-core decomposition by iterated peeling (Seidman 1983): drop
     * every node whose degree among SURVIVORS is < k, recompute, repeat
@@ -530,81 +495,72 @@ object Graph {
   def kCoreReleasable(edges: DataFrame, k: Int, maxRounds: Int = 12): (DataFrame, () => Unit) = {
     require(k >= 1, s"kCore: k must be >= 1; got $k")
     require(maxRounds >= 1, s"kCore: need at least one round; got $maxRounds")
-    val spark = edges.sparkSession
-    val srcName = edges.columns(0)
-    val dstName = edges.columns(1)
-    // Raw leaf first, then the canonical distinct over plain rows (the
-    // conjunct-leak guard, see canonPairLeaf). NO loop-session
-    // rebinding: the peel loop ran SLOWER under the 1-partition clone
-    // (q139 4.83 vs 3.27 s at sf0.1); like CC, its per-round
-    // convergence action over the shrinking survivor joins loses more
-    // to single-partition serialization than it saves in stage wakeups.
-    val (loopSpark, canon, nCanon, canonRelease) =
-      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
-    if (nCanon == 0L) {
-      canonRelease()
-      return (canon.select(col("src").as("node"), lit(0L).as("deg")).limit(0), () => ())
+    LoopScope.run(edges.sparkSession) { scope =>
+      // Raw leaf first, then the canonical distinct over plain rows (the
+      // conjunct-leak guard, see canonPairLeaf). NO loop-session
+      // rebinding: the peel loop ran SLOWER under the 1-partition clone
+      // (q139 4.83 vs 3.27 s at sf0.1); like CC, its per-round
+      // convergence action over the shrinking survivor joins loses more
+      // to single-partition serialization than it saves in stage wakeups.
+      val (canon, nCanon) = canonPairLeaf(scope, edges)
+      if (nCanon == 0L) {
+        scope.drop(canon)
+        canon.select(col("src").as("node"), lit(0L).as("deg")).limit(0)
+      } else {
+        // Each round materializes through an RDD-backed LEAF (the PageRank
+        // loop's checkpoint trick): a plain DataFrame.persist/unpersist
+        // chain CASCADES — unpersisting round r-1 invalidates round r's
+        // cached plan, and every later consumption recomputes the whole
+        // lineage including the (possibly O(n²)) pair generator feeding
+        // `edges`, doubling work per round. The leaf cuts lineage, so an
+        // unpersisted predecessor can never be re-demanded.
+        //
+        // Only the EDGE list is leaf-materialized; the survivor frame
+        // stays a lazy aggregate over the cached edge leaf. The survivor
+        // frame is consumed three times per round (two semi-joins + the
+        // convergence count), but each consumption just re-runs one
+        // map-side-combined agg over the cached leaf — cheap, bounded,
+        // and it keeps each round at ONE action (the count), so the
+        // per-round scheduler latency that dominated the 3-job-per-round
+        // variant on small rounds is paid once, not three times.
+        def degrees(ed: DataFrame): DataFrame =
+          ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+        var eCur = scope.leaf(canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst"))))
+        var alive = degrees(eCur)
+        var aliveCount = alive.count()
+        var converged = false
+        var round = 0
+        // One peel per convergence action: batching two peels per action
+        // halved the actions but recomputed the staged inner survivor agg
+        // for both of the next peel's joins — q139 5.83 s batched vs
+        // 3.67 s unbatched at sf0.1/32cpu. Loops over self-joining frames
+        // want one cheap action per round.
+        while (!converged && round < maxRounds) {
+          // Peel the EDGES to the current survivors first, then count
+          // degrees over the shrunken list — identical recurrence to
+          // re-filtering the full list (see scaladoc), but round cost
+          // tracks the live subgraph instead of the original graph.
+          val nextE = scope.leaf(
+            eCur
+              .join(alive.select(col("node").as("src")), Seq("src"))
+              .join(alive.select(col("node").as("dst")), Seq("dst")))
+          round += 1
+          val next = degrees(nextE).filter(col("deg") >= k)
+          val nextCount = next.count()
+          // next ⊆ alive by construction (peeling only removes), so equal
+          // cardinality IS set equality — the fixpoint test needs no join.
+          converged = nextCount == aliveCount
+          scope.drop(eCur)
+          alive = next
+          eCur = nextE
+          aliveCount = nextCount
+        }
+        if (!converged)
+          throw new IllegalStateException(
+            s"kCore(k=$k) did not converge in $maxRounds rounds ($aliveCount survivors) — raise maxRounds")
+        alive
+      }
     }
-    val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
-    // Each round materializes through an RDD-backed LEAF (the PageRank
-    // loop's checkpoint trick): a plain DataFrame.persist/unpersist
-    // chain CASCADES — unpersisting round r-1 invalidates round r's
-    // cached plan, and every later consumption recomputes the whole
-    // lineage including the (possibly O(n²)) pair generator feeding
-    // `edges`, doubling work per round. The leaf cuts lineage, so an
-    // unpersisted predecessor can never be re-demanded.
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (loopSpark.createDataFrame(rdd, df.schema), rdd)
-    }
-    // Only the EDGE list is leaf-materialized; the survivor frame
-    // stays a lazy aggregate over the cached edge leaf. The survivor
-    // frame is consumed three times per round (two semi-joins + the
-    // convergence count), but each consumption just re-runs one
-    // map-side-combined agg over the cached leaf — cheap, bounded,
-    // and it keeps each round at ONE action (the count), so the
-    // per-round scheduler latency that dominated the 3-job-per-round
-    // variant on small rounds is paid once, not three times.
-    def degrees(ed: DataFrame): DataFrame =
-      ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    var (eCur, eRdd) = materialize(e)
-    var alive = degrees(eCur)
-    var aliveCount = alive.count()
-    var converged = false
-    var round = 0
-    // One peel per convergence action: batching two peels per action
-    // halved the actions but recomputed the staged inner survivor agg
-    // for both of the next peel's joins — q139 5.83 s batched vs
-    // 3.67 s unbatched at sf0.1/32cpu. Loops over self-joining frames
-    // want one cheap action per round.
-    while (!converged && round < maxRounds) {
-      // Peel the EDGES to the current survivors first, then count
-      // degrees over the shrunken list — identical recurrence to
-      // re-filtering the full list (see scaladoc), but round cost
-      // tracks the live subgraph instead of the original graph.
-      val peeled = eCur
-        .join(alive.select(col("node").as("src")), Seq("src"))
-        .join(alive.select(col("node").as("dst")), Seq("dst"))
-      round += 1
-      val (nextE, nextERdd) = materialize(peeled)
-      val next = degrees(nextE).filter(col("deg") >= k)
-      val nextCount = next.count()
-      // next ⊆ alive by construction (peeling only removes), so equal
-      // cardinality IS set equality — the fixpoint test needs no join.
-      converged = nextCount == aliveCount
-      eRdd.unpersist()
-      alive = next
-      eCur = nextE
-      eRdd = nextERdd
-      aliveCount = nextCount
-    }
-    if (!converged) {
-      eRdd.unpersist(); canonRelease()
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not converge in $maxRounds rounds ($aliveCount survivors) — raise maxRounds")
-    }
-    val lastERdd = eRdd
-    (alive, () => { lastERdd.unpersist(); canonRelease() })
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge
@@ -649,92 +605,72 @@ object Graph {
     require(scale >= 1L, s"hits: scale must be positive; got $scale")
     val srcName = edges.columns(0)
     val dstName = edges.columns(1)
-    val e = edges
-      .select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist()
-    val cachedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // Throw-path cleanup (mirrors kCore): every action from the edge
-    // pin to the mid-loop rescale (first() + a degenerate-graph
-    // require) can throw AFTER frames are persisted, and the release
-    // closure never reaches the caller on that path — without the
-    // catch the caches leak for the session.
-    var nodes: DataFrame = null
-    try {
+    LoopScope.run(edges.sparkSession) { scope =>
+      val e = scope.cache(
+        edges
+          .select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
+          .filter(col("src") =!= col("dst"))
+          .distinct())
       // Pin one evaluation of the edge cache BEFORE anything fans out
       // over it: the node-universe union reads e in two concurrent
       // branches, and racing first-touch stages each recompute an
       // uncached upstream (see bfsDistances — measured ~6x on an
       // expensive pair build).
       val eRows = e.count()
-      // Edge-derived loop sizing (loopStage): the alternating
+      // Edge-derived loop sizing (Graph.loopSessionFor): the alternating
       // hub/auth rounds run at a shuffle width matched to the
       // materialized edge count, not the corpus-sized session setting.
-      val (_, eLoop) = loopStage(e, eRows)
-      nodes = eLoop.select(col("src").as("node"))
-        .unionByName(eLoop.select(col("dst").as("node")))
-        .distinct()
-        .persist()
+      val eLoop = scope.rebind(e, eRows)
+      val nodes = scope.cache(
+        eLoop.select(col("src").as("node"))
+          .unionByName(eLoop.select(col("dst").as("node")))
+          .distinct())
       if (nodes.count() == 0L) {
-        e.unpersist(); nodes.unpersist()
-        return (
-          nodes.select(col("node"), lit(0L).as("hub"), lit(0L).as("auth")).limit(0),
-          () => ())
+        scope.drop(e); scope.drop(nodes)
+        nodes.select(col("node"), lit(0L).as("hub"), lit(0L).as("auth")).limit(0)
+      } else {
+        // Cut the fan-out with plain DataFrame caches held until release:
+        // every double-consumed frame (raw → max + join; the final-round
+        // hub/auth → output join) computes once into its cache and is
+        // re-read from there. No RDD leaf and no per-frame count() — the
+        // whole stack still evaluates in ONE final action (no per-round
+        // scheduler latency), and no mid-loop unpersist means the cascade
+        // the PageRank/kCore loops guard against can't start. The cached
+        // frames are node-sized, so holding all 4·iterations of them is
+        // trivial at any scale.
+        def rescaled(rawPlan: DataFrame, outCol: String): DataFrame = {
+          val raw = scope.cache(rawPlan)
+          // The rescale denominator is a 1-row aggregate — collect it as a
+          // driver scalar (scalable: it's a max, not data) instead of a
+          // crossJoin(broadcast(...)), which cost a broadcast-exchange job
+          // per half-round. This action also materializes raw's cache, so
+          // its two consumers (this max, the join below) compute it once.
+          val mxRow = raw.agg(max(col("raw")).as("mx")).first()
+          val mx = if (mxRow.isNullAt(0)) 1L else mxRow.getLong(0)
+          require(mx > 0L, s"hits: non-positive rescale max $mx — degenerate graph")
+          scope.cache(
+            nodes
+              .join(raw, Seq("node"), "left")
+              .select(
+                col("node"),
+                coalesce(expr(s"(raw * $scale) div $mx"), lit(0L)).as(outCol)))
+        }
+        var hub = nodes.select(col("node"), lit(scale).as("hub"))
+        var auth = nodes.select(col("node"), lit(0L).as("auth"))
+        for (_ <- 1 to iterations) {
+          auth = rescaled(
+            eLoop.join(hub.withColumnRenamed("node", "src"), Seq("src"))
+              .groupBy(col("dst").as("node"))
+              .agg(sum(col("hub")).as("raw")),
+            "auth")
+          hub = rescaled(
+            eLoop.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
+              .groupBy(col("src").as("node"))
+              .agg(sum(col("auth")).as("raw")),
+            "hub")
+        }
+        hub.join(auth, Seq("node"))
       }
-      // Cut the fan-out with plain DataFrame caches held until release:
-      // every double-consumed frame (raw → max + join; the final-round
-      // hub/auth → output join) computes once into its cache and is
-      // re-read from there. No RDD leaf and no per-frame count() — the
-      // whole stack still evaluates in ONE final action (no per-round
-      // scheduler latency), and no mid-loop unpersist means the cascade
-      // the PageRank/kCore loops guard against can't start. The cached
-      // frames are node-sized, so holding all 4·iterations of them is
-      // trivial at any scale.
-      def cached(df: DataFrame): DataFrame = {
-        df.persist()
-        cachedFrames += df
-        df
-      }
-      def rescaled(rawPlan: DataFrame, outCol: String): DataFrame = {
-        val raw = cached(rawPlan)
-        // The rescale denominator is a 1-row aggregate — collect it as a
-        // driver scalar (scalable: it's a max, not data) instead of a
-        // crossJoin(broadcast(...)), which cost a broadcast-exchange job
-        // per half-round. This action also materializes raw's cache, so
-        // its two consumers (this max, the join below) compute it once.
-        val mxRow = raw.agg(max(col("raw")).as("mx")).first()
-        val mx = if (mxRow.isNullAt(0)) 1L else mxRow.getLong(0)
-        require(mx > 0L, s"hits: non-positive rescale max $mx — degenerate graph")
-        cached(
-          nodes
-            .join(raw, Seq("node"), "left")
-            .select(
-              col("node"),
-              coalesce(expr(s"(raw * $scale) div $mx"), lit(0L)).as(outCol)))
-      }
-      var hub = nodes.select(col("node"), lit(scale).as("hub"))
-      var auth = nodes.select(col("node"), lit(0L).as("auth"))
-      for (_ <- 1 to iterations) {
-        auth = rescaled(
-          eLoop.join(hub.withColumnRenamed("node", "src"), Seq("src"))
-            .groupBy(col("dst").as("node"))
-            .agg(sum(col("hub")).as("raw")),
-          "auth")
-        hub = rescaled(
-          eLoop.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
-            .groupBy(col("src").as("node"))
-            .agg(sum(col("auth")).as("raw")),
-          "hub")
-      }
-      val out = hub.join(auth, Seq("node"))
-      (out, () => { cachedFrames.foreach(_.unpersist()); e.unpersist(); nodes.unpersist(); () })
-    } catch {
-      case t: Throwable =>
-        cachedFrames.foreach(_.unpersist())
-        e.unpersist()
-        if (nodes != null) nodes.unpersist()
-        throw t
     }
   }
 
@@ -771,9 +707,6 @@ object Graph {
       maxHops: Int): (DataFrame, () => Unit) = {
     require(maxHops >= 1 && maxHops <= 64,
       s"bfsDistances: maxHops in [1,64] (one materialized round each); got $maxHops")
-    val spark = edges.sparkSession
-    val srcName = edges.columns(0)
-    val dstName = edges.columns(1)
     // RDD-leaf materialization, NOT DataFrame.persist: caching the
     // canonicalized plan re-optimizes it under the cache's own
     // compilation, which loses the caller plan's cheap-filter-first
@@ -781,42 +714,35 @@ object Graph {
     // pair build — the decimal fold re-ran for all 12.5M candidates).
     // The leaf executes through the session planner once, pins one
     // evaluation (no first-touch race), and every round reads rows.
-    val leaves = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    def materialize(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      leaves += rdd
-      spark.createDataFrame(rdd, df.schema)
+    LoopScope.run(edges.sparkSession) { scope =>
+      // NO loop-session rebinding for BFS (4.68 s rebound vs
+      // 4.38 s at sf0.1 — the frontier loop's per-round action +
+      // growing visited anti-join sits on the CC/kCore side of the
+      // line, unlike the fixed-round relaxations below which measured
+      // faster under the clone).
+      val (canon, _) = canonPairLeaf(scope, edges)
+      val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
+      val seedCol = seeds.columns(0)
+      var frontier = scope.leaf(
+        seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("dist", lit(0L)))
+      val rounds = scala.collection.mutable.ArrayBuffer(frontier)
+      var frontierSize = frontier.count()
+      var hop = 0
+      while (frontierSize > 0L && hop < maxHops) {
+        hop += 1
+        val visited = rounds.reduce(_ unionByName _).select(col("node"))
+        val next = scope.leaf(
+          e.join(frontier.select(col("node").as("src")), Seq("src"))
+            .select(col("dst").as("node"))
+            .distinct()
+            .join(visited, Seq("node"), "left_anti")
+            .withColumn("dist", lit(hop.toLong)))
+        frontierSize = next.count()
+        if (frontierSize > 0L) rounds += next
+        frontier = next
+      }
+      rounds.reduce(_ unionByName _)
     }
-    // NO loop-session rebinding for BFS (4.68 s rebound vs
-    // 4.38 s at sf0.1 — the frontier loop's per-round action +
-    // growing visited anti-join sits on the CC/kCore side of the
-    // line, unlike the fixed-round relaxations below which measured
-    // faster under the clone).
-    val (_, canon, _, canonRelease) =
-      canonPairLeaf(spark, edges, srcName, dstName, rebind = false)
-    val e = canon.unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
-    val seedCol = seeds.columns(0)
-    var frontier = materialize(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("dist", lit(0L)))
-    val rounds = scala.collection.mutable.ArrayBuffer(frontier)
-    var frontierSize = frontier.count()
-    var hop = 0
-    while (frontierSize > 0L && hop < maxHops) {
-      hop += 1
-      val visited = rounds.reduce(_ unionByName _).select(col("node"))
-      val next = materialize(
-        e.join(frontier.select(col("node").as("src")), Seq("src"))
-          .select(col("dst").as("node"))
-          .distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop.toLong)))
-      frontierSize = next.count()
-      if (frontierSize > 0L) rounds += next
-      frontier = next
-    }
-    val out = rounds.reduce(_ unionByName _)
-    (out, () => { leaves.foreach(_.unpersist()); canonRelease() })
   }
 
   /** Weighted shortest-path distance within `rounds` hops — the
@@ -854,49 +780,29 @@ object Graph {
       rounds: Int): (DataFrame, () => Unit) = {
     require(rounds >= 1 && rounds <= 16,
       s"weightedDistances: rounds in [1,16] (one relaxation action each); got $rounds")
-    val spark = edges.sparkSession
     val Array(srcName, dstName, wName) = edges.columns.take(3)
-    // RDD-leaf materialization of the canonical edge list — same
-    // rationale as bfsDistances (a DataFrame cache would re-optimize
-    // the caller plan under the cache's compilation and can lose its
-    // cheap-filter-first ordering).
-    val leaves = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    // Rounds rebind to the edge-sized loop session once the canonical
-    // count is known (loopStage doc).
-    var loopSpark = spark
-    def materialize(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      leaves += rdd
-      loopSpark.createDataFrame(rdd, df.schema)
-    }
-    // Raw leaf first — same conjunct-leak guard as kCore/bfsDistances.
-    val rawPlan = edges
-      .select(
-        col(srcName).cast("long").as("src"),
-        col(dstName).cast("long").as("dst"),
-        col(wName).cast("long").as("w"))
-    val rawRdd = rawPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Throw-path cleanup covers EVERY action after the first persist —
-    // including canon's own materializing count, where caller-plan
-    // errors (ANSI overflow in a derived cost, source read failures)
-    // actually surface; starting the try any later would leak rawRdd
-    // and the canon leaf on exactly those throws.
-    try {
-      val canon0 = materialize(
-        spark.createDataFrame(rawRdd, rawPlan.schema)
+    LoopScope.run(edges.sparkSession) { scope =>
+      // RDD-leaf materialization of the canonical edge list — same
+      // rationale as bfsDistances (a DataFrame cache would re-optimize
+      // the caller plan under the cache's compilation and can lose its
+      // cheap-filter-first ordering). Raw leaf first — same
+      // conjunct-leak guard as kCore/bfsDistances.
+      val raw = scope.leaf(
+        edges.select(
+          col(srcName).cast("long").as("src"),
+          col(dstName).cast("long").as("dst"),
+          col(wName).cast("long").as("w")))
+      val canon0 = scope.leaf(
+        raw
           .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"), col("w"))
           .filter(col("src") =!= col("dst"))
           .groupBy(col("src"), col("dst"))
           .agg(min(col("w")).as("w")))
       val canonRows = canon0.count()
-      rawRdd.unpersist()
-      val canon = loopSessionFor(spark, canonRows) match {
-        case None => canon0
-        case Some(s) =>
-          loopSpark = s
-          s.createDataFrame(leaves.head, canon0.schema) // leaves.head IS canon's leaf
-      }
+      scope.drop(raw)
+      // Rounds rebind to the edge-sized loop session once the canonical
+      // count is known (Graph.loopSessionFor).
+      val canon = scope.rebind(canon0, canonRows)
       // Positive-cost contract check: the count reads the already-cached
       // canonical leaf (no recompute).
       val nonPos = canon.filter(col("w") < 1L).count()
@@ -906,23 +812,18 @@ object Graph {
       val e = canon.unionByName(
         canon.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       val seedCol = seeds.columns(0)
-      var dist = materialize(
+      var dist = scope.leaf(
         seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("dist", lit(0L)))
       dist.count()
       for (_ <- 1 to rounds) {
         val relaxed = e
           .join(dist.select(col("node").as("src"), col("dist")), Seq("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        dist = materialize(
+        dist = scope.leaf(
           dist.unionByName(relaxed).groupBy(col("node")).agg(min(col("dist")).as("dist")))
         dist.count()
       }
-      (dist, () => { leaves.foreach(_.unpersist()); () })
-    } catch {
-      case t: Throwable =>
-        leaves.foreach(_.unpersist())
-        rawRdd.unpersist() // no-op if the success path already released it
-        throw t
+      dist
     }
   }
 
@@ -961,102 +862,72 @@ object Graph {
       rounds: Int): (DataFrame, () => Unit) = {
     require(rounds >= 1 && rounds <= 16,
       s"earliestArrival: rounds in [1,16] (one relaxation action each); got $rounds")
-    val spark = edges.sparkSession
     val Array(srcName, dstName, depName, arrName) = edges.columns.take(4)
-    val leaves = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-    // Rounds rebind to the edge-sized loop session once the temporal
-    // edge count is known (loopStage doc).
-    var loopSpark = spark
-    def materialize(df: DataFrame): DataFrame = {
-      val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      leaves += rdd
-      loopSpark.createDataFrame(rdd, df.schema)
-    }
-    // Raw leaf first (conjunct-leak guard), then dedup + the dep<arr
-    // contract filter over plain rows.
-    val rawPlan = edges.select(
-      col(srcName).cast("long").as("src"),
-      col(dstName).cast("long").as("dst"),
-      col(depName).cast("long").as("dep"),
-      col(arrName).cast("long").as("arr"))
-    val rawRdd = rawPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val e0 = materialize(
-      spark.createDataFrame(rawRdd, rawPlan.schema)
-        .filter(col("src") =!= col("dst") && col("dep") < col("arr"))
-        .distinct())
-    val eRows = e0.count()
-    rawRdd.unpersist()
-    val e = loopSessionFor(spark, eRows) match {
-      case None => e0
-      case Some(s) =>
-        loopSpark = s
-        s.createDataFrame(leaves.head, e0.schema) // leaves.head IS e's leaf
-    }
-    val seedCol = seeds.columns(0)
-    var at = materialize(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("at", lit(0L)))
-    at.count()
-    for (_ <- 1 to rounds) {
-      val relaxed = e
-        .join(at.select(col("node").as("src"), col("at")), Seq("src"))
-        .filter(col("dep") >= col("at"))
-        .select(col("dst").as("node"), col("arr").as("at"))
-      at = materialize(
-        at.unionByName(relaxed).groupBy(col("node")).agg(min(col("at")).as("at")))
+    LoopScope.run(edges.sparkSession) { scope =>
+      // Raw leaf first (conjunct-leak guard), then dedup + the dep<arr
+      // contract filter over plain rows.
+      val raw = scope.leaf(
+        edges.select(
+          col(srcName).cast("long").as("src"),
+          col(dstName).cast("long").as("dst"),
+          col(depName).cast("long").as("dep"),
+          col(arrName).cast("long").as("arr")))
+      val e0 = scope.leaf(
+        raw
+          .filter(col("src") =!= col("dst") && col("dep") < col("arr"))
+          .distinct())
+      val eRows = e0.count()
+      scope.drop(raw)
+      // Rounds rebind to the edge-sized loop session once the temporal
+      // edge count is known (Graph.loopSessionFor).
+      val e = scope.rebind(e0, eRows)
+      val seedCol = seeds.columns(0)
+      var at = scope.leaf(
+        seeds.select(col(seedCol).cast("long").as("node")).distinct().withColumn("at", lit(0L)))
       at.count()
+      for (_ <- 1 to rounds) {
+        val relaxed = e
+          .join(at.select(col("node").as("src"), col("at")), Seq("src"))
+          .filter(col("dep") >= col("at"))
+          .select(col("dst").as("node"), col("arr").as("at"))
+        at = scope.leaf(
+          at.unionByName(relaxed).groupBy(col("node")).agg(min(col("at")).as("at")))
+        at.count()
+      }
+      at.select(col("node"), col("at").as("arrival"))
     }
-    val out = at.select(col("node"), col("at").as("arrival"))
-    (out, () => { leaves.foreach(_.unpersist()); () })
   }
 
   /** Canonicalized-undirected-pair RDD leaf: freezes the CALLER's
-    * optimized edge plan into a raw leaf first, then dedups the
-    * (min, max) pair over plain rows. Canonicalizing lazily instead
-    * lets Catalyst push the least/greatest/self-loop conjuncts into
-    * the caller plan and reorder them with its filters — measured on
-    * the prefiltered near-dup pair build: the exact decimal-cosine
-    * conjunct ran before the cheap double prefilter, for all 12.5M
-    * candidates (32 s vs 1 s, identical rows).
+    * optimized edge plan (first two columns) into a raw leaf first,
+    * then dedups the (min, max) pair over plain rows. Canonicalizing
+    * lazily instead lets Catalyst push the least/greatest/self-loop
+    * conjuncts into the caller plan and reorder them with its filters
+    * — measured on the prefiltered near-dup pair build: the exact
+    * decimal-cosine conjunct ran before the cheap double prefilter,
+    * for all 12.5M candidates (32 s vs 1 s, identical rows).
     *
-    * Raw-leaf-first conjunct-leak guard, canonical distinct over
-    * plain rows, result REBOUND to an
-    * edge-sized loop session when [[loopSessionFor]] says the count
-    * warrants one. Returns (session for the loop, canonical frame
-    * bound to it, canonical row count, cache release).
-    *
-    * `rebind = false` keeps the canonical frame on the CALLER session
-    * (session shuffle width, AQE on). The edge-derived loop sizing is
+    * Returns the canonical leaf and its row count; the raw leaf is
+    * already released. The canonical frame stays on the CALLER session
+    * (session shuffle width, AQE on): the edge-derived loop sizing is
     * justified only for iterative rounds whose shapes are fixed
-    * node-sized equi-joins; an operator whose fan-out EXCEEDS the edge
+    * node-sized equi-joins, so only such a caller applies
+    * [[LoopScope.rebind]]. An operator whose fan-out EXCEEDS the edge
     * count — triangleCounts' wedge join is quadratic in hub degree —
     * must not inherit the narrow width, and AQE's skew-split is useful
     * exactly there (q118 at sf0.1/32cpu, Profile min-of-3: 1.62 s
-    * rebind=false vs 2.97 s rebound, 1.83×).
+    * unrebound vs 2.97 s rebound, 1.83×).
     */
-  private def canonPairLeaf(
-      spark: org.apache.spark.sql.SparkSession,
-      edges: DataFrame,
-      srcName: String,
-      dstName: String,
-      rebind: Boolean = true): (org.apache.spark.sql.SparkSession, DataFrame, Long, () => Unit) = {
-    val rawPlan = edges
-      .select(col(srcName).cast("long").as("src"), col(dstName).cast("long").as("dst"))
-    val rawRdd = rawPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canonPlan = spark.createDataFrame(rawRdd, rawPlan.schema)
-      .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val canonRdd = canonPlan.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canon = spark.createDataFrame(canonRdd, canonPlan.schema)
+  private def canonPairLeaf(scope: LoopScope, edges: DataFrame): (DataFrame, Long) = {
+    val raw = scope.leaf(
+      edges.select(col(edges.columns(0)).cast("long").as("src"), col(edges.columns(1)).cast("long").as("dst")))
+    val canon = scope.leaf(
+      raw
+        .select(least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .distinct())
     val rows = canon.count()
-    rawRdd.unpersist()
-    val (loopSpark, loopCanon) =
-      if (!rebind) (spark, canon)
-      else loopSessionFor(spark, rows) match {
-        case None => (spark, canon)
-        case Some(s) => (s, s.createDataFrame(canonRdd, canonPlan.schema))
-      }
-    (loopSpark, loopCanon, rows, () => { canonRdd.unpersist(); () })
+    scope.drop(raw)
+    (canon, rows)
   }
 }

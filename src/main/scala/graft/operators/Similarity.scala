@@ -630,40 +630,38 @@ object Similarity {
     require(iterations >= 1 && iterations <= 8,
       s"powerIterationDirection: iterations in [1,8]; got $iterations")
     require(scale >= 1L, s"powerIterationDirection: scale must be positive; got $scale")
-    val gramUpper = emb
-      .select(col(embCol).as("__e"))
-      .select(col("__e"), posexplode(col("__e")).as(Seq("p", "va")))
-      .select(col("p"), col("va"), posexplode(col("__e")).as(Seq("q", "vb")))
-      .filter(col("p") <= col("q"))
-      .groupBy(col("p"), col("q"))
-      .agg(sum(dec(col("va").cast("double") * col("vb").cast("double"))).as("g"))
-      .select(
-        col("p").cast("long").as("p"),
-        col("q").cast("long").as("q"),
-        round(col("g") * lit(scale)).cast("long").as("gw"))
-    val full = gramUpper
-      .unionByName(
-        gramUpper.filter(col("p") =!= col("q"))
-          .select(col("q").as("p"), col("p").as("q"), col("gw")))
-      .persist()
-    val cachedFrames = scala.collection.mutable.ArrayBuffer[DataFrame](full)
-    try {
+    LoopScope.run(emb.sparkSession) { scope =>
+      val gramUpper = emb
+        .select(col(embCol).as("__e"))
+        .select(col("__e"), posexplode(col("__e")).as(Seq("p", "va")))
+        .select(col("p"), col("va"), posexplode(col("__e")).as(Seq("q", "vb")))
+        .filter(col("p") <= col("q"))
+        .groupBy(col("p"), col("q"))
+        .agg(sum(dec(col("va").cast("double") * col("vb").cast("double"))).as("g"))
+        .select(
+          col("p").cast("long").as("p"),
+          col("q").cast("long").as("q"),
+          round(col("g") * lit(scale)).cast("long").as("gw"))
+      val full = scope.cache(
+        gramUpper
+          .unionByName(
+            gramUpper.filter(col("p") =!= col("q"))
+              .select(col("q").as("p"), col("p").as("q"), col("gw"))))
       val fullRows = full.count()
       require(fullRows > 0L, "powerIterationDirection: empty embedding input")
-      // Gram-derived loop sizing (Graph.loopStage): the matrix is D²
+      // Gram-derived loop sizing (Graph.loopSessionFor): the matrix is D²
       // entries — tiny next to the corpus the session width is tuned
       // for — so the multiply rounds run at the derived width; the
       // Gram BUILD (the corpus-facing posexplode² pass) already ran at
-      // session width into the cache the transplant reads through.
-      val (_, fullLoop) = graft.operators.Graph.loopStage(full, fullRows)
+      // session width into the cache the rebound leaf reads through.
+      val fullLoop = scope.rebind(full, fullRows)
       var v = fullLoop.select(col("p").as("q")).distinct().withColumn("v", lit(scale))
       for (_ <- 1 to iterations) {
-        val w = fullLoop
-          .join(v, Seq("q"))
-          .groupBy(col("p"))
-          .agg(sum(col("gw") * col("v")).as("w"))
-          .persist()
-        cachedFrames += w
+        val w = scope.cache(
+          fullLoop
+            .join(v, Seq("q"))
+            .groupBy(col("p"))
+            .agg(sum(col("gw") * col("v")).as("w")))
         // 1-row broadcast max as a driver scalar (the hits recipe) —
         // this action also materializes w's cache for its two readers.
         val mxRow = w.agg(max(abs(col("w")))).first()
@@ -677,12 +675,7 @@ object Similarity {
             .cast("long")
             .as("v"))
       }
-      val out = v.select(col("q").as("p"), col("v").as("dir"))
-      (out, () => { cachedFrames.foreach(_.unpersist()); () })
-    } catch {
-      case t: Throwable =>
-        cachedFrames.foreach(_.unpersist())
-        throw t
+      v.select(col("q").as("p"), col("v").as("dir"))
     }
   }
 }

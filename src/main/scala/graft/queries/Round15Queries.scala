@@ -228,8 +228,9 @@ object Round15Queries {
     *
     * Cost decomposition at sf0.1 (min-of-5): ≈ q190 (1.2 s) + q192
     * (3.1 s) + the compaction marginal — one full-edge materialize in
-    * CC, six label rounds at ~0.4 s (real collision CHAINS, measured
-    * via GRAFT_CC_LOG: the label sum keeps falling for 5 rounds), and
+    * CC, six label rounds at ~0.4 s (real collision CHAINS: the
+    * distributed arm's label sum kept falling for 5 rounds, one
+    * `labelSum` job each under `graft.Probe`), and
     * the keep-list joins — every stage an equi-join or hash agg, no
     * new quadratic surface.
     */

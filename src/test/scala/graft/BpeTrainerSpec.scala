@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.functions.BpeTokens
 import graft.operators.BpeTrainer
 
@@ -13,8 +14,10 @@ import graft.operators.BpeTrainer
   * greedy recurrence, tie-breaks, the min-count stop, and the
   * control-char skip.
   */
-class BpeTrainerSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "bpe-trainer-spec")
+class BpeTrainerSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "bpe-trainer-spec")
+  // slowest test in a full-suite run on 4 cores: ~140 s (512 merges)
+  val timeLimit = 10.minutes
 
   test("hand case: counts, greedy order, and the non-overlapping fold") {
     import spark.implicits._

@@ -2,13 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.operators.Dedup
 
 /** Connected-components semantics (the pair→group step of the dedup
   * pipeline, q51).
   */
-class ConnCompSpec extends AnyFunSuite {
+class ConnCompSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // slowest test in a full-suite run on 4 cores: ~10 s
+  val timeLimit = 60.seconds
 
   private def comps(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._

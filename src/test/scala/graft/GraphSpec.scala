@@ -2,14 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.operators.Graph
 
 /** Integer-exact PageRank: hand-computed fixed points, dangling-node
   * policy, empty-graph short-circuit, and partitioning invariance
   * (the determinism the integer formulation exists to buy).
   */
-class GraphSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "graph-spec")
+class GraphSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "graph-spec")
+  // slowest test in a full-suite run on 4 cores: ~6 s
+  val timeLimit = 60.seconds
 
   private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
     import spark.implicits._

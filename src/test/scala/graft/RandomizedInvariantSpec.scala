@@ -124,7 +124,7 @@ class RandomizedInvariantSpec extends AnyFunSuite {
 
   test("integerPageRank (directed, seeded, danglers, 5 rounds) matches a driver-side replay") {
     import spark.implicits._
-    // iterations = 5 crosses the materializeEvery = 4 checkpoint, so
+    // iterations = 5 crosses the every-4-rounds leaf checkpoint, so
     // the persisted-leaf rewrap path is exercised, not just lazy
     // stacking. Graphs include danglers (nodes with no out-edge),
     // self-loops (kept in directed mode), and duplicate edges.
