@@ -283,7 +283,9 @@ object Bench {
     }
     val selected = wanted.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
     // Untimed warmup: JIT + codegen cache + parquet footer/page cache,
-    // otherwise it all lands on each query's rep1.
+    // otherwise it all lands on each query's rep1. The codegen part
+    // holds only while every session shares one task class loader and
+    // the cache holds the catalog's working set (GraftSession).
     selected.foreach { case (_, fn) =>
       try run(fn(spark, sfDir)) catch { case _: Throwable => () }
       sweep()

@@ -64,4 +64,13 @@ object ExecShape {
     }
     prev
   }
+
+  /** Janino compilations so far in this JVM and their total time in
+    * ns. Spark compiles a generated class only when its codegen cache
+    * misses, so the delta over a block is the code that block could
+    * not reuse.
+    */
+  def codegenCompiles(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 }

@@ -17,7 +17,19 @@ import org.apache.spark.sql.SparkSession
   *  - [[graft.functions.GraftExtensions]] installed, so the native
   *    codegen `graft_dot` is callable from any query;
   *  - UTC session timezone and nanos-as-long parquet reads — the
-  *    cross-engine determinism contract the oracle gates assume.
+  *    cross-engine determinism contract the oracle gates assume;
+  *  - one class loader for every session's tasks, and a codegen cache
+  *    that holds the working set. Spark caches each Janino-compiled
+  *    class under (class loader, source), so a class compiled for one
+  *    loader is compiled again for the next. With artifact isolation
+  *    on (Spark's default), every session — each `newSession()` loop
+  *    clone, each streaming query's cloned session — runs its tasks
+  *    on its own loader and recompiles code the JVM already holds.
+  *    Graft adds no per-session jars or files, so isolation is off
+  *    and all sessions share the executor's default loader. Each
+  *    class still takes two entries (the driver's loader and the task
+  *    threads'), and the catalog's working set is far larger than
+  *    Spark's 100-entry default, so the cache holds 4096.
   *
   * Builder only; the caller owns the session lifecycle.
   */
@@ -35,6 +47,16 @@ object GraftSession {
     * Spark's many small shuffle files. Measure before overriding.
     */
   private def localScratch: Option[String] = sys.env.get("GRAFT_LOCAL_DIR")
+
+  /** Codegen cache bound. One `graft.Verify` run of the whole catalog
+    * at sf0.001 compiles 2794 distinct classes (its compile line, with
+    * an unbounded cache); 4096 holds them all with headroom. A full
+    * cache kept ~80 MB more heap live than the 100-entry default
+    * (219 vs 139 MB after a full GC). The bound is read once per JVM,
+    * when Spark's code generator is first used, so it holds when the
+    * JVM's first session comes from this builder.
+    */
+  private[graft] val CodegenCacheEntries = 4096
 
   def builder(
       master: String,
@@ -77,6 +99,9 @@ object GraftSession {
       // the executor stack (hit at 64 byte-mode training rounds).
       .config("spark.checkpoint.checkpointAllMarkedAncestors", "true")
       .config("spark.ui.enabled", "false")
+      // Codegen reuse across sessions and queries; see the scaladoc.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     localScratch.fold(b)(dir => b.config("spark.local.dir", dir))
   }
 

@@ -13,8 +13,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * query); a prefix that matches no query is an error that names it.
   * Each query runs one untimed warm rep, then `--reps` timed reps with
   * a cache sweep and forced GC between them, as Bench does. Each timed
-  * rep prints one JSON line: seconds, rows, and the jobs / stages /
-  * tasks its job group submitted (the counts ExecShapeSpec pins).
+  * rep prints one JSON line: seconds, rows, the jobs / stages / tasks
+  * its job group submitted (the counts ExecShapeSpec pins), and the
+  * classes Janino compiled for it with their compile ms (a rep that
+  * reuses the codegen cache compiles none).
   * Timing materializes the full output: a bare `count()` lets column
   * pruning remove the computed columns of projection queries.
   *
@@ -62,13 +64,16 @@ object Probe {
           val group = s"probe-$name-$rep-${System.nanoTime()}"
           var rows = 0L
           var sec = 0.0
+          val (compiles0, compileNs0) = ExecShape.codegenCompiles()
           val (jobs, stages, tasks) = ExecShape.measureGroup(spark, group) {
             val t0 = System.nanoTime()
             rows = build(spark, sfDir).queryExecution.toRdd.count()
             sec = (System.nanoTime() - t0) / 1e9
           }
+          val (compiles1, compileNs1) = ExecShape.codegenCompiles()
           println(s"""{"probe":"query","query":"$name","rep":$rep,"sec":${fmt(sec)},"rows":$rows,""" +
-            s""""jobs":$jobs,"stages":$stages,"tasks":$tasks}""")
+            s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"codegen_compiles":${compiles1 - compiles0},""" +
+            s""""codegen_ms":${fmt((compileNs1 - compileNs0) / 1e6)}}""")
           stageLog.foreach(_.completed(group).foreach { si =>
             val wall = (for (end <- si.completionTime; start <- si.submissionTime) yield (end - start) / 1e3)
               .getOrElse(-1.0)

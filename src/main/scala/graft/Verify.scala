@@ -242,6 +242,11 @@ object Verify {
     // without parsing parquet.
     val failJson = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_failures.json"), failJson)
+    // Compile totals for the whole run: with a codegen cache large
+    // enough for the catalog, each distinct class compiles once, so
+    // the count is the cache's working set (GraftSession's bound).
+    val (compiles, compileNs) = ExecShape.codegenCompiles()
+    System.err.println(f"[verify] codegen: $compiles compilations, ${compileNs / 1e6}%.0f ms compiling")
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size}/${selected.size} queries FAILED: ${failures.keys.mkString(", ")}")
     else

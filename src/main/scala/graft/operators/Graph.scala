@@ -55,8 +55,11 @@ object Graph {
     * clamped to the session setting. If that equals the session
     * setting — the 100 TB regime — this returns None and NOTHING
     * changes: same session, AQE stays on, skew handling intact.
-    * Otherwise Some(clone) (shared SparkContext, shared cache manager)
-    * with the derived width and AQE off — justified for the rounds
+    * Otherwise Some(clone) (shared SparkContext, shared cache manager,
+    * and — with `GraftSession`'s artifact isolation off — the same
+    * task class loader, so the clone's generated classes come from the
+    * codegen cache the caller session filled) with the derived width
+    * and AQE off — justified for the rounds
     * only, whose shapes are fixed node-sized equi-join + map-side-
     * combined agg with no skew or stats surprises for AQE to exploit.
     * [[LoopScope.rebind]] moves an operator's materialized input onto

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.{Ev, Session}
 
@@ -12,8 +13,11 @@ import graft.streaming.EventStreams.{Ev, Session}
   * sessionization, driven through MemoryStream micro-batches; plus
   * batch parity of the sessionizer against the q16 window formulation.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // awaitTermination() on a wedged drain waits forever; the limit is 3×
+  // the slowest test of a full tier-1 run on 4 cores (151 s)
+  val timeLimit = 8.minutes
   val sf = "/root/testdata/sf0.001"
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
