@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Execution shape of a block of Spark work: the jobs, stages and
   * tasks the scheduler submitted for it. It is the shape record for
   * the ITERATIVE tail (PageRank/TrustRank/HITS/power-iteration), whose
@@ -73,4 +75,28 @@ object ExecShape {
   def codegenCompiles(): (Long, Long) =
     (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
+
+  /** Runs `body` and returns its result with the child processes the
+    * JVM started meanwhile, counted by executable name (`chmod`,
+    * `readlink`, ...). A fork costs milliseconds where the file
+    * operation behind it costs microseconds, so a non-zero count on a
+    * hot path is time to cut. Read from a JFR recording of
+    * `jdk.ProcessStart`, which sees every start in the JVM, from any
+    * thread.
+    */
+  def processStarts[T](body: => T): (T, Map[String, Int]) = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val out = try body finally rec.stop()
+      val file = java.nio.file.Files.createTempFile("graft-process-starts", ".jfr")
+      try {
+        rec.dump(file)
+        val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+          .map(e => new java.io.File(e.getString("command").takeWhile(_ != ' ')).getName)
+        (out, commands.groupBy(identity).view.mapValues(_.size).toMap)
+      } finally java.nio.file.Files.deleteIfExists(file): Unit
+    } finally rec.close()
+  }
 }

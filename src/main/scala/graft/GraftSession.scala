@@ -29,7 +29,19 @@ import org.apache.spark.sql.SparkSession
   *    and all sessions share the executor's default loader. Each
   *    class still takes two entries (the driver's loader and the task
   *    threads'), and the catalog's working set is far larger than
-  *    Spark's 100-entry default, so the cache holds 4096.
+  *    Spark's 100-entry default, so the cache holds 4096;
+  *  - the `file:` scheme on [[graft.sources.LocalFiles]]'s file
+  *    systems (`spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`). Without
+  *    libhadoop, Hadoop's stock local file system forks `chmod` for
+  *    every file and directory it creates and `readlink` on every
+  *    `FileContext` status lookup (a streaming checkpoint's offsets,
+  *    commits and source log); these classes keep every result and
+  *    `.crc` file and start no process. Other schemes (HDFS, S3) keep
+  *    their stock classes. Hadoop caches a `FileSystem` per scheme for
+  *    the life of the JVM, so a JVM that touched `file:` through
+  *    Hadoop before it built its first graft session keeps the stock
+  *    `FileSystem` (`FileContext` reads the setting on each use).
   *
   * Builder only; the caller owns the session lifecycle.
   */
@@ -102,6 +114,8 @@ object GraftSession {
       // Codegen reuse across sessions and queries; see the scaladoc.
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    // Local file operations without child processes; see the scaladoc.
+    graft.sources.LocalFiles.hadoopConf.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     localScratch.fold(b)(dir => b.config("spark.local.dir", dir))
   }
 

@@ -16,7 +16,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * rep prints one JSON line: seconds, rows, the jobs / stages / tasks
   * its job group submitted (the counts ExecShapeSpec pins), and the
   * classes Janino compiled for it with their compile ms (a rep that
-  * reuses the codegen cache compiles none).
+  * reuses the codegen cache compiles none), and the child processes
+  * the JVM started during it (`ExecShape.processStarts`).
   * Timing materializes the full output: a bare `count()` lets column
   * pruning remove the computed columns of projection queries.
   *
@@ -65,15 +66,17 @@ object Probe {
           var rows = 0L
           var sec = 0.0
           val (compiles0, compileNs0) = ExecShape.codegenCompiles()
-          val (jobs, stages, tasks) = ExecShape.measureGroup(spark, group) {
-            val t0 = System.nanoTime()
-            rows = build(spark, sfDir).queryExecution.toRdd.count()
-            sec = (System.nanoTime() - t0) / 1e9
+          val ((jobs, stages, tasks), processes) = ExecShape.processStarts {
+            ExecShape.measureGroup(spark, group) {
+              val t0 = System.nanoTime()
+              rows = build(spark, sfDir).queryExecution.toRdd.count()
+              sec = (System.nanoTime() - t0) / 1e9
+            }
           }
           val (compiles1, compileNs1) = ExecShape.codegenCompiles()
           println(s"""{"probe":"query","query":"$name","rep":$rep,"sec":${fmt(sec)},"rows":$rows,""" +
             s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"codegen_compiles":${compiles1 - compiles0},""" +
-            s""""codegen_ms":${fmt((compileNs1 - compileNs0) / 1e6)}}""")
+            s""""codegen_ms":${fmt((compileNs1 - compileNs0) / 1e6)},"processes_started":${processes.values.sum}}""")
           stageLog.foreach(_.completed(group).foreach { si =>
             val wall = (for (end <- si.completionTime; start <- si.submissionTime) yield (end - start) / 1e3)
               .getOrElse(-1.0)

@@ -206,34 +206,40 @@ object Verify {
       p.delete(): Unit
     }
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
-      // Remove any previous run's dump FIRST: outDir may be reused, and a
-      // query that throws below must leave no parquet behind — otherwise
-      // the driver's DuckDB compare would grade this round's failure
-      // against last round's stale (possibly green) result.
-      deleteRecursively(new java.io.File(s"$outDir/$name"))
-      try {
-        val df = fn(spark, sfDir)
-        nonVacuous.get(name).foreach(_.apply(df))
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        // A query whose build/dump throws must still produce a dump, or
-        // the driver's compare silently drops it and the round's
-        // correctness file shows fewer-but-all-green entries (round 7:
-        // 14 events queries vanished and 98/98 read as full parity).
-        // Dump a one-row error marker instead: the DuckDB compare then
-        // records an explicit red (schema+rows+hash mismatch) entry
-        // carrying the exception text.
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures(name) = String.valueOf(e.getMessage)
-        import spark.implicits._
-        Seq(("__VERIFY_ERROR__", String.valueOf(e.getMessage).take(500)))
-          .toDF("__verify_error", "message")
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    // Child processes the query loop started. GraftSession keeps Hadoop's
+    // local file operations in-process, so no `chmod`/`readlink` shows;
+    // Spark's own `rm -rf` of each dropped session's artifact directory
+    // (its Cleaner thread) still does.
+    val (_, processes) = ExecShape.processStarts {
+      selected.foreach { case (name, fn) =>
+        // Remove any previous run's dump FIRST: outDir may be reused, and a
+        // query that throws below must leave no parquet behind — otherwise
+        // the driver's DuckDB compare would grade this round's failure
+        // against last round's stale (possibly green) result.
+        deleteRecursively(new java.io.File(s"$outDir/$name"))
+        try {
+          val df = fn(spark, sfDir)
+          nonVacuous.get(name).foreach(_.apply(df))
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
+          // A query whose build/dump throws must still produce a dump, or
+          // the driver's compare silently drops it and the round's
+          // correctness file shows fewer-but-all-green entries (round 7:
+          // 14 events queries vanished and 98/98 read as full parity).
+          // Dump a one-row error marker instead: the DuckDB compare then
+          // records an explicit red (schema+rows+hash mismatch) entry
+          // carrying the exception text.
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failures(name) = String.valueOf(e.getMessage)
+          import spark.implicits._
+          Seq(("__VERIFY_ERROR__", String.valueOf(e.getMessage).take(500)))
+            .toDF("__verify_error", "message")
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
+        // Per-query cache sweep: keeps each dump independent of sibling
+        // queries' persisted frames (see GraftSession.releaseAllCaches).
+        GraftSession.releaseAllCaches(spark)
       }
-      // Per-query cache sweep: keeps each dump independent of sibling
-      // queries' persisted frames (see GraftSession.releaseAllCaches).
-      GraftSession.releaseAllCaches(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleSqlJson)
     // Loud failure summary (machine-readable beside the dumps, and a
@@ -246,7 +252,9 @@ object Verify {
     // enough for the catalog, each distinct class compiles once, so
     // the count is the cache's working set (GraftSession's bound).
     val (compiles, compileNs) = ExecShape.codegenCompiles()
-    System.err.println(f"[verify] codegen: $compiles compilations, ${compileNs / 1e6}%.0f ms compiling")
+    val byCommand = processes.toSeq.sorted.map { case (c, n) => s"$c $n" }.mkString(" (", ", ", ")")
+    System.err.println(f"[verify] codegen: $compiles compilations, ${compileNs / 1e6}%.0f ms compiling; " +
+      s"${processes.values.sum} processes started${if (processes.isEmpty) "" else byCommand}")
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size}/${selected.size} queries FAILED: ${failures.keys.mkString(", ")}")
     else

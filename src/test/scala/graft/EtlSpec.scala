@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.pipeline.Etl
 
 /** End-to-end fidelity of the five-stage pipeline against JIRA-shaped
@@ -13,8 +14,11 @@ import graft.pipeline.Etl
   *  F-3 links w/o worklogs → linked 0, null delta; F-4 worklog w/o
   *  links; F-5 zero estimates → null delta.
   */
-class EtlSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EtlSpec extends AnyFunSuite with BeforeAndAfterAll with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // the slowest test takes 1.2 s in a full run on 4 cores; 2 minutes
+  // also covers a cold session start when the spec runs alone
+  val timeLimit = 2.minutes
 
   // Etl.run persists each batch it computes.
   override def afterAll(): Unit = GraftSession.releaseAllCaches(spark)

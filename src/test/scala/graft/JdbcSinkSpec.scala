@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.sources.Sinks
 import graft.sources.Sinks.DimSpec
 
@@ -26,8 +27,11 @@ case class VFeasRow(
   * get-or-create against a live database, and the opt-in per-row-
   * tolerant loader (reference helpers.js:100-104).
   */
-class JdbcSinkSpec extends AnyFunSuite {
+class JdbcSinkSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // the slowest test takes 2.7 s in a full run on 4 cores; 2 minutes
+  // also covers a cold session start when the spec runs alone
+  val timeLimit = 2.minutes
 
   private val url = "jdbc:derby:memory:graft_e2e;create=true"
   private def props = {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.sources.Sinks
 import graft.sources.Sinks.DimSpec
 
@@ -10,8 +11,11 @@ import graft.sources.Sinks.DimSpec
   * (reviewer and reporter through one user dim), NULL-id guard, and
   * idempotence — the whole INSTEAD-OF-INSERT rewrite as one batch API.
   */
-class SinksSpec extends AnyFunSuite {
+class SinksSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // the slowest test takes 6.2 s in a full run on 4 cores; 2 minutes
+  // also covers a cold session start when the spec runs alone
+  val timeLimit = 2.minutes
 
   private def emptyDim = {
     import spark.implicits._

@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.sources.Sources
 
 /** Schema-pinned file sources round-trip (CSV / JSON-lines / parquet). */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // the slowest test takes 0.4 s in a full run on 4 cores; 2 minutes
+  // also covers a cold session start when the spec runs alone
+  val timeLimit = 2.minutes
 
   private val schema = StructType(Seq(
     StructField("id", LongType),

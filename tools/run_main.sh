@@ -2,10 +2,11 @@
 # Run a graft main class on the sbt-compiled classes WITHOUT the sbt
 # lock — same JVM flags as build.sbt's forked `run`. Usage:
 #   tools/run_main.sh graft.ScaleCheck --docs=500
-# Requires a prior `sbt compile` (does not recompile).
+# Requires a prior `sbt compile` (does not recompile). Resources are
+# read from src/main/resources, so a fresh clone needs no resource copy.
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$REPO/target/scala-2.13/classes:$REPO/src/main/resources:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
