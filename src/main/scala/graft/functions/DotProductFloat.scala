@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -80,50 +80,8 @@ case class DotProductFloat(left: Expression, right: Expression)
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
 }
 
-/** Registration for the engine's native expressions. */
+/** Argument parsing shared by the [[GraftExtensions]] builders. */
 object GraftFunctions {
-
-  /** Register `graft_dot` (fast double path) and `graft_dot_dec`
-    * (DECIMAL-exact, oracle-gateable path) in the session's function
-    * registry so SQL and `call_function(...)` resolve them. Idempotent.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProductFloat(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_dec",
-      exprs => DotProductDecimal(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_max_mult",
-      exprs => ArrayMaxMultiplicity(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_hashes",
-      exprs => { val a = arity2(exprs, "graft_gram_hashes")
-        GramHashes(a.head, foldableInt(a(1), "graft_gram_hashes k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vocab_hits",
-      exprs => mkVocabHits(exprs),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => { val a = arity2(exprs, "graft_minhash")
-        MinHashFold(a.head, foldableInt(a(1), "graft_minhash k")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_win_mins",
-      exprs => { val a = arity2(exprs, "graft_win_mins")
-        WindowMins(a.head, foldableInt(a(1), "graft_win_mins w")) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cdc_lens",
-      exprs => mkCdcLens(exprs),
-      "built-in")
-  }
 
   /** `graft_cdc_lens(hs, mod, textLen)` — the literal modulus sits
     * between the two column arguments.
@@ -186,6 +144,12 @@ object GraftFunctions {
     require(exprs.size == 2, s"$fn expects exactly 2 arguments, got ${exprs.size}")
     exprs
   }
+
+  /** [[arity2]]'s twin for the one-argument builders; returns the argument. */
+  private[functions] def arity1(exprs: Seq[Expression], fn: String): Expression = {
+    require(exprs.size == 1, s"$fn expects exactly 1 argument, got ${exprs.size}")
+    exprs.head
+  }
 }
 
 /** `spark.sql.extensions`-style injection (the installation path for a
@@ -198,17 +162,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (
         FunctionIdentifier("graft_dot"),
         new ExpressionInfo(classOf[DotProductFloat].getCanonicalName, "graft_dot"),
-        (exprs: Seq[Expression]) => DotProductFloat(exprs.head, exprs(1))))
+        (exprs: Seq[Expression]) => {
+          val a = GraftFunctions.arity2(exprs, "graft_dot")
+          DotProductFloat(a.head, a(1))
+        }))
     ext.injectFunction(
       (
         FunctionIdentifier("graft_dot_dec"),
         new ExpressionInfo(classOf[DotProductDecimal].getCanonicalName, "graft_dot_dec"),
-        (exprs: Seq[Expression]) => DotProductDecimal(exprs.head, exprs(1))))
+        (exprs: Seq[Expression]) => {
+          val a = GraftFunctions.arity2(exprs, "graft_dot_dec")
+          DotProductDecimal(a.head, a(1))
+        }))
     ext.injectFunction(
       (
         FunctionIdentifier("graft_max_mult"),
         new ExpressionInfo(classOf[ArrayMaxMultiplicity].getCanonicalName, "graft_max_mult"),
-        (exprs: Seq[Expression]) => ArrayMaxMultiplicity(exprs.head)))
+        (exprs: Seq[Expression]) => ArrayMaxMultiplicity(GraftFunctions.arity1(exprs, "graft_max_mult"))))
     ext.injectFunction(
       (
         FunctionIdentifier("graft_gram_hashes"),
@@ -247,18 +217,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (
         FunctionIdentifier("graft_bpe"),
         new ExpressionInfo(classOf[BpeTokens].getCanonicalName, "graft_bpe"),
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 1, s"graft_bpe expects exactly 1 argument, got ${exprs.size}")
-          BpeTokens(exprs.head)
-        }))
+        (exprs: Seq[Expression]) => BpeTokens(GraftFunctions.arity1(exprs, "graft_bpe"))))
     ext.injectFunction(
       (
         FunctionIdentifier("graft_bpe_bytes"),
         new ExpressionInfo(classOf[BpeBytesTokens].getCanonicalName, "graft_bpe_bytes"),
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 1, s"graft_bpe_bytes expects exactly 1 argument, got ${exprs.size}")
-          BpeBytesTokens(exprs.head)
-        }))
+        (exprs: Seq[Expression]) => BpeBytesTokens(GraftFunctions.arity1(exprs, "graft_bpe_bytes"))))
     ext.injectFunction(
       (
         FunctionIdentifier("graft_bpe_table"),
@@ -268,10 +232,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (
         FunctionIdentifier("graft_fix_mojibake"),
         new ExpressionInfo(classOf[FixMojibake].getCanonicalName, "graft_fix_mojibake"),
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 1, s"graft_fix_mojibake expects exactly 1 argument, got ${exprs.size}")
-          FixMojibake(exprs.head)
-        }))
+        (exprs: Seq[Expression]) => FixMojibake(GraftFunctions.arity1(exprs, "graft_fix_mojibake"))))
     // The whole-operator extension stack: GRAFT_TOPK hint → custom
     // logical node → custom physical operator (graft.plans.TopKPerGroup).
     ext.injectResolutionRule(spark => graft.plans.ResolveTopKHint(spark))

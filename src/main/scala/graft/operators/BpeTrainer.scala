@@ -87,7 +87,7 @@ object BpeTrainer {
     * touched-word predicate. NOT an `exists` over [[adjPairs]]: that
     * allocates the whole pair-struct array per row per scan
     * (interpreted HOF), which measured as expensive as the explode it
-    * was supposed to avoid (ScaleCheck bpetrain, 400k vocabulary).
+    * was supposed to avoid (400k vocabulary; README's BPE-arm section).
     * Instead one codegen'd substring scan over the U+0001-joined
     * symbol string: `⊕s1⊕s2⊕…⊕` contains `⊕l⊕r⊕` IFF (l, r) is an
     * adjacent symbol pair — exact because no MERGE symbol can contain
@@ -248,10 +248,10 @@ object BpeTrainer {
     // collect guarded by LocalVocabCeil. Measured: q175/q176 (48/64
     // merges, 31-word fixture vocab) spent 13.7 s of BENCH_r15 on
     // distributed job round-trips; at 512 merges over 50k words (32
-    // cores, ScaleCheck) the local arm took 5.3 s against 421.9 s for
-    // a distributed per-round recount. A genuinely huge vocabulary
-    // (> 2^20 observed words) stays distributed, so the 100 TB regime
-    // is unchanged.
+    // cores, README's BPE-arm section) the local arm took 5.3 s
+    // against 421.9 s for a distributed per-round recount. A genuinely
+    // huge vocabulary (> 2^20 observed words) stays distributed, so
+    // the 100 TB regime is unchanged.
     val useLocal =
       graft.Config.armOverride(local, "GRAFT_BPE_LOCAL").getOrElse(vocabRows <= LocalVocabCeil)
     try {

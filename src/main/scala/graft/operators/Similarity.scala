@@ -83,8 +83,9 @@ object Similarity {
   }
 
   /** Fast twin of [[bruteForceTopK]] on the codegen'd native
-    * [[graft.functions.DotProductFloat]] expression (register with
-    * `GraftFunctions.register(spark)` first). Sequential double
+    * [[graft.functions.DotProductFloat]] expression (`graft_dot`, which
+    * [[graft.functions.GraftExtensions]] installs in every
+    * [[graft.GraftSession]]). Sequential double
     * accumulation — deterministic but not decimal-exact, so it is the
     * throughput path, not the oracle path.
     */

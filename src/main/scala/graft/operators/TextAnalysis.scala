@@ -327,7 +327,7 @@ object TextAnalysis {
     * total and the scored rows) — and an unpersisted subplan would
     * re-run its corpus explode per consumer (five corpus passes
     * instead of two). The materialization is a constant visible at
-    * fixture scale (README's ScaleCheck row) and the win at corpus
+    * fixture scale (README's q109 slope row) and the win at corpus
     * scale, where the explodes dominate the vocabulary-sized tables.
     * Release via [[collocationLiftReleasable]]'s targeted handle
     * (drops exactly these two tables) or the harness-wide

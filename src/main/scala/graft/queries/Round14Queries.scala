@@ -65,7 +65,7 @@ object Round14Queries {
     imageRecordsFor(Tables.documents(s, d))
 
   /** The corpus generator over an arbitrary (doc_id, …) frame — shared
-    * with [[graft.ScaleCheck]]'s `imagehash` slope probe. */
+    * with q195's image side. */
   private[graft] def imageRecordsFor(docs: org.apache.spark.sql.DataFrame): Dataset[Multimodal.MediaRecord] = {
     val s = docs.sparkSession
     import s.implicits._
@@ -77,10 +77,11 @@ object Round14Queries {
     // Spread BEFORE the codec pass: the media fixture corpora arrive
     // as ONE parquet split and `mapPartitions` preserves input
     // partitioning, so without this every per-corpus codec chain
-    // (PNG/WAV/Y4M encode+decode, 200–500 µs/record — CodecProbe) ran
-    // as a SINGLE task at any core count. CodecProbe's thread-scaling
-    // arm pins that the kernels parallelize cleanly (4000 recs: 0.92 s
-    // @1 thread → 0.16 s @32 — no ImageIO lock pathology), and
+    // (PNG/WAV/Y4M encode+decode, 200–500 µs/record — the codec
+    // microbench in OPTIMIZATION_r16) ran as a SINGLE task at any core
+    // count. That microbench's r17 thread-scaling arm showed the
+    // kernels parallelize cleanly (4000 recs: 0.92 s @1 thread →
+    // 0.16 s @32 — no ImageIO lock pathology), and
     // spreadFewSplits is the identity once the input already has
     // ≥ parallelism splits (the real-crawl case). Every codec pass in
     // the media queries spreads its input the same way.
@@ -195,13 +196,8 @@ object Round14Queries {
     * oracle verifies the full pair set via the exact all-pairs scan
     * DuckDB can afford at oracle scale.
     */
-  val q190ImageNearDup: Q = (s, d) =>
-    imageNearDupOver(Tables.documents(s, d))
-
-  /** q190's pipeline over an arbitrary docs frame (ScaleCheck reuse). */
-  private[graft] def imageNearDupOver(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
-    val hashes = Multimodal.imageHashes(imageRecordsFor(docs))(s).toDF()
+  val q190ImageNearDup: Q = (s, d) => {
+    val hashes = Multimodal.imageHashes(imageRecords(s, d))(s).toDF()
     // Persisted: BOTH sides of the banded self-join (and the chunk
     // explode above them) would otherwise re-run the codec pipeline —
     // the winnowCandidatePairs cache-before-explode discipline over an

@@ -156,15 +156,9 @@ object Round15Queries {
     * gate's negative side exactly like q190. Oracle: exact all-pairs
     * frame scan.
     */
-  val q194VideoNearDup: Q = (s, d) => videoNearDupOver(Tables.documents(s, d))
-
-  /** q194's pipeline over an arbitrary docs frame ([[graft.ScaleCheck]]
-    * `videohash` slope probe reuse — the q190 imageNearDupOver pattern).
-    */
-  private[graft] def videoNearDupOver(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
+  val q194VideoNearDup: Q = (s, d) => {
     val hashes = Multimodal
-      .videoFrameHashes(videoRecordsFor(docs), FrameStride)(s)
+      .videoFrameHashes(videoRecordsFor(Tables.documents(s, d)), FrameStride)(s)
       .toDF()
     // Persisted: the banded self-join consumes the frame-hash lineage
     // three ways (two sides + the bucket gate); the parse+hash pass
@@ -175,7 +169,7 @@ object Round15Queries {
     // the in-plan guard raises before any pair is attributed wrong.
     val sh = hashes.select(
       when(col("nFrames") <= 8, col("docId") * 8 + col("frameIdx"))
-        .otherwise(expr("raise_error('videoNearDupOver: fid encoding (vid*8 + frame) needs nFrames <= 8')"))
+        .otherwise(expr("raise_error('q194_video_neardup: fid encoding (vid*8 + frame) needs nFrames <= 8')"))
         .as("fid"),
       expr("shiftleft(dhashHi, 32) | dhashLo").as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -317,13 +311,8 @@ object Round15Queries {
     * single modality produces on its own. Oracle: both pair sets
     * replayed analytically + the q104 recursive walk.
     */
-  val q196CrossModalKeepList: Q = (s, d) => crossModalKeepListOver(Tables.documents(s, d))
-
-  /** q196's pipeline over an arbitrary docs frame ([[graft.ScaleCheck]]
-    * `crossmodal` compaction slope probe reuse).
-    */
-  private[graft] def crossModalKeepListOver(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val s = docs.sparkSession
+  val q196CrossModalKeepList: Q = (s, d) => {
+    val docs = Tables.documents(s, d)
     val dId = col("doc_id")
     import s.implicits._
     // image per doc: q189's base geometry, seed shared across id - id%3

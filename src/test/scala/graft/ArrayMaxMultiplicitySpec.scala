@@ -2,19 +2,22 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{ArrayMaxMultiplicity, GraftFunctions}
+import org.scalatest.time.SpanSugar._
+import graft.functions.ArrayMaxMultiplicity
 import graft.operators.TextAnalysis
 
 /** The native `graft_max_mult` expression: equivalence against the
   * independent HOF-fold reference on adversarial inputs, hand-checked
   * values, codegen fusion, and the row kernel directly.
   */
-class ArrayMaxMultiplicitySpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "maxmult-spec")
+class ArrayMaxMultiplicitySpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "maxmult-spec")
+  // slowest test in a full-suite run on 4 cores: 0.2 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("agrees with the HOF-fold reference on randomized arrays incl. nulls and empties") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val vocab = Vector("a", "b", "bb", "", "x y", "é")
     val rows: Seq[Seq[Option[String]]] = (0 until 300).map { _ =>
@@ -34,7 +37,6 @@ class ArrayMaxMultiplicitySpec extends AnyFunSuite {
 
   test("hand-checked values and the null-run corner") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val cases = Seq(
       (Array("a", "b", "a", "a"), 3L),
       (Array("z"), 1L),
@@ -55,7 +57,6 @@ class ArrayMaxMultiplicitySpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen — the reason it exists") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // parquet-backed source: a local relation constant-folds the whole
     // projection away and leaves no codegen stage to inspect
     val df = Tables

@@ -134,7 +134,7 @@ class BpeTrainerSpec extends AnyFunSuite with SparkTimeLimit {
     // minPairCount 1 so exhaustion doesn't cut the sequence short.
     // The real sf0.001 corpus exhausts at 127 merges (measured — the
     // fixture vocabulary is deliberately small), so the corpus here is
-    // the ScaleCheck bigVocabCorpus construction at 3000 DISTINCT
+    // README's large-vocabulary BPE corpus at 3000 DISTINCT
     // deterministic hex words: rich enough for 512+, vocab-sized
     // rounds cheap enough for the suite. Covers rise-after-threshold,
     // tie-breaks in the U+0100..U+01FF mapped alphabet, the lazy

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{CdcSegLens, GraftFunctions}
+import org.scalatest.time.SpanSugar._
+import graft.functions.CdcSegLens
 import graft.operators.TextAnalysis
 
 /** The native `graft_cdc_lens` expression: equivalence against the
@@ -10,12 +11,14 @@ import graft.operators.TextAnalysis
   * hash streams (incl. nulls, negatives, empties), the NULL-text
   * operator corner, codegen fusion, and the row kernel directly.
   */
-class CdcSegLensSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "cdclens-spec")
+class CdcSegLensSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "cdclens-spec")
+  // slowest test in a full-suite run on 4 cores: 0.3 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("agrees with the composed boundary/diff reference on randomized streams") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(97)
     val rows: Seq[(Seq[Option[Long]], Long)] = (0 until 300).map { _ =>
       val n = rnd.nextInt(25)
@@ -43,7 +46,6 @@ class CdcSegLensSpec extends AnyFunSuite {
 
   test("NULL child null-propagates (documented divergence the operator's coalesce covers)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq(
       (null: Array[java.lang.Long], java.lang.Long.valueOf(5L)), // null hs
       (Array(java.lang.Long.valueOf(4L)), null: java.lang.Long)) // null len
@@ -62,7 +64,6 @@ class CdcSegLensSpec extends AnyFunSuite {
 
   test("cdcSegmentStats end-to-end unchanged, incl. the NULL-text corner") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq((1L, "the quick brown fox"), (2L, ""), (3L, null: String), (4L, "ab"))
       .toDF("id", "t")
     val r = TextAnalysis.cdcSegmentStats(df, "t", k = 3, mod = 4)
@@ -80,7 +81,6 @@ class CdcSegLensSpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Tables
       .documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 50)

@@ -2,19 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.GraftFunctions
+import org.scalatest.time.SpanSugar._
 import graft.operators.Similarity
 
 /** The native codegen'd dot-product expression: numeric agreement with
   * the decimal-exact path, codegen (no fallback), and the fast top-k
   * twin ranking identically on real embeddings.
   */
-class DotProductSpec extends AnyFunSuite {
+class DotProductSpec extends AnyFunSuite with SparkTimeLimit {
   lazy val spark = SparkTestSession.spark
+  // slowest test in a full-suite run on 4 cores: 0.9 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
   val sf = "/root/testdata/sf0.001"
 
   test("graft_dot agrees with the decimal-exact dot to double precision") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).filter(col("vec_id") < 30)
     val a = e.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("eb"))
@@ -33,7 +35,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("graft_dot runs inside whole-stage codegen (no interpreter fallback)") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).filter(col("vec_id") < 5)
     val df = e.select(call_function("graft_dot", col("embedding"), col("embedding")).as("sq"))
     // materialize first: with an exchange upstream (the corpus-spread
@@ -49,7 +50,6 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("bruteForceTopKFast ranks like the exact path on fixture embeddings") {
-    GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val q = emb.filter(col("vec_id") < 5)
     val exact = Similarity

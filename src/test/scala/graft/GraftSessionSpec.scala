@@ -2,18 +2,22 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** The session entry point must deliver the engine's contract configs
   * and the registered native function surface.
   */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = SparkTestSession.spark
+  // slowest test in a full-suite run on 4 cores: 0.2 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("GraftSession: scale configs set and graft_dot registered via extensions") {
     // getOrCreate may reuse the shared test session, so assert on a
     // builder-applied config map instead of a second live context where
     // possible — but extensions require a real session: reuse ours and
     // check the function, then verify builder configs via options.
-    val spark = SparkTestSession.spark
     import spark.implicits._
     // the shared test session installs the same extensions class
     val r = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f)))
@@ -24,10 +28,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(r == 11.0)
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     // every injected function must resolve FROM SQL TEXT (the
-    // extensions wiring a cluster-installed session depends on) —
-    // a registration typo in injectFunction would pass the
-    // call_function specs (which go through GraftFunctions.register)
-    // and only fail here
+    // extensions wiring a cluster-installed session depends on)
     val sqlProbe = spark.sql(
       """SELECT
         |  graft_dot(array(cast(1.0 as float)), array(cast(2.0 as float))) AS d,
@@ -46,6 +47,20 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sqlProbe.getInt(5) == 4) // k signature members
     assert(sqlProbe.getInt(6) == 1) // one window of 2 over 2 elements
     assert(sqlProbe.getInt(7) == 2) // one boundary -> two segments
+    // a wrong argument count fails at analysis with a message naming
+    // the function — not an index error, and no argument dropped
+    val f = "array(cast(1.0 as float))"
+    for ((fn, args, want) <- Seq(
+        ("graft_dot", s"$f", 2),
+        ("graft_dot", s"$f, $f, $f", 2),
+        ("graft_dot_dec", s"$f, $f, $f", 2),
+        ("graft_max_mult", "array('a'), array('b')", 1))) {
+      val e = intercept[Exception](spark.sql(s"SELECT $fn($args)").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toList
+      val plural = if (want == 1) "argument" else "arguments"
+      assert(msgs.exists(m => m != null && m.contains(s"$fn expects exactly $want $plural")),
+        s"$fn($args): ${msgs.mkString(" <- ")}")
+    }
   }
 
   test("GraftSession.builder carries AQE + skew-join + shuffle sizing") {
@@ -53,7 +68,6 @@ class GraftSessionSpec extends AnyFunSuite {
     // SparkSession.Builder has no public config getter; apply it to a
     // throwaway session ONLY if none exists — here we inspect via the
     // shared session's conf after a set/unset round trip instead.
-    val spark = SparkTestSession.spark
     val conf = spark.conf
     // the contract values GraftSession encodes (shared session uses the
     // same recipe — see SparkTestSession)

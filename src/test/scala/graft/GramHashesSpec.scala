@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, GramHashes}
+import org.scalatest.time.SpanSugar._
+import graft.functions.GramHashes
 import graft.operators.Dedup
 
 /** The native `graft_gram_hashes` expression: bit-equivalence against
@@ -11,12 +12,14 @@ import graft.operators.Dedup
   * including multi-byte code points, codegen fusion, and the row
   * kernel directly.
   */
-class GramHashesSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "gramhashes-spec")
+class GramHashesSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "gramhashes-spec")
+  // slowest test in a full-suite run on 4 cores: 0.2 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("agrees with the composed lower/split/md5 reference, incl. multi-byte text") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     // mixed 1/2/3/4-byte code points, uppercase ASCII (exercises the
     // internal A-Z fold), non-ASCII uppercase É and U+0130 'İ' (which
@@ -43,7 +46,6 @@ class GramHashesSpec extends AnyFunSuite {
 
   test("shingleHashes is set-identical to the composed distinct-shingle->h32 reference") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(59)
     // tiny alphabet: guarantees repeated grams, so the distinct paths differ
     val rows: Seq[String] = (0 until 200).map { _ =>
@@ -66,7 +68,6 @@ class GramHashesSpec extends AnyFunSuite {
 
   test("null text propagates null; shorter-than-k yields empty; k must be a literal in range") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // helper level: NULL text coalesces to the composed form's EMPTY
     // array (hofCharGramHashes' otherwise-branch)
     val r = Seq(Tuple1(null: String), Tuple1("ab")).toDF("text")
@@ -96,7 +97,6 @@ class GramHashesSpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen — the reason it exists") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // parquet-backed source: a local relation constant-folds the whole
     // projection away and leaves no codegen stage to inspect
     val df = Tables

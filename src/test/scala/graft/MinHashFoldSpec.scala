@@ -2,20 +2,23 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, MinHashFold}
+import org.scalatest.time.SpanSugar._
+import graft.functions.MinHashFold
 import graft.operators.Dedup
 
 /** The native `graft_minhash` expression: per-member equivalence
   * against the composed k-fold `array_min(transform(affine))`
   * reference, null/empty corners, codegen fusion, and the row kernel.
   */
-class MinHashFoldSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "minhash-spec")
+class MinHashFoldSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "minhash-spec")
+  // slowest test in a full-suite run on 4 cores: 0.2 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
   private val K = 12
 
   test("signature columns agree with the composed k-fold reference incl. nulls/empties") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(73)
     val rows: Seq[(Long, Seq[Option[Long]])] = (0 until 300).map { i =>
       val n = rnd.nextInt(40)
@@ -44,7 +47,6 @@ class MinHashFoldSpec extends AnyFunSuite {
 
   test("null hash array propagates null members; k must be a literal") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Seq(Tuple1(null: Array[java.lang.Long])).toDF("hs")
     val r = Dedup.minHashSignatureFromHashes(df.withColumn("id", lit(1L)), "id", "hs", 3).collect()(0)
     (2 until 5).foreach(c => assert(r.isNullAt(c)))
@@ -56,7 +58,6 @@ class MinHashFoldSpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen and the fold is not duplicated per member") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Dedup.minHashSignatureFromHashes(
       Tables.documents(spark, "/root/testdata/sf0.001")
         .filter(col("doc_id") < 50)

@@ -5,13 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
 /** Standing selectivity gate for the exact prefix-filter similarity
-  * join (r10 VERDICT ask #8): the `SimJoinProbe` main demonstrated on
-  * the 5000-doc `make_zipf.py` corpus that candidates are 2.5–5.7 %
-  * of all-pairs at realistic vocabulary — but a main run by hand
-  * cannot stop a regression. This spec replays the same construction
-  * at spec scale (500 docs, seeded in-test Zipf generator mirroring
-  * make_zipf.py: syllable vocabulary, exponent 1.07, every 20th doc a
-  * ~5 % token-replacement twin of its predecessor) and pins:
+  * join (r10 VERDICT ask #8): README's prefix-filter table records
+  * that on a 5000-doc Zipf corpus candidates are 2.5–5.7 % of
+  * all-pairs at realistic vocabulary — but a recorded run cannot stop
+  * a regression. This spec replays the same construction at spec
+  * scale (500 docs, seeded in-test Zipf generator: syllable
+  * vocabulary, exponent 1.07, every 20th doc a ~5 % token-replacement
+  * twin of its predecessor) and pins:
   *
   *  - candidates < 10 % of all-pairs (the prefix filter actually
   *    PRUNES — a regression in the rarest-first rank build or the
@@ -30,12 +30,12 @@ class SimJoinZipfSpec extends AnyFunSuite {
   // document's rarest tokens are, so the all-pairs fraction DEGRADES
   // as vocab shrinks relative to the token mass (measured here:
   // 16.9 % of all-pairs at vocab 2 000 vs 5.5 % at 10⁴ for the same
-  // 500 docs — the same gradient the SimJoinProbe measured at 5 000
-  // docs: 5.7 % at 10⁴ → 2.5 % at 3×10⁴).
+  // 500 docs — the same gradient README's prefix-filter table records
+  // at 5 000 docs: 5.7 % at 10⁴ → 2.5 % at 3×10⁴).
   private val nDocs = 500
   private val nVocab = 10000
 
-  /** (docs, plantedPairs) — the Scala twin of tools/make_zipf.py. */
+  /** (docs, plantedPairs) — the seeded Zipf corpus with planted twins. */
   private def zipfCorpus(): (Seq[(Long, String)], Set[(Long, Long)]) = {
     val rnd = new scala.util.Random(11)
     val syl = Vector("ka", "to", "ri", "ne", "su", "mo", "ba", "le", "di", "wu", "fa", "zo")

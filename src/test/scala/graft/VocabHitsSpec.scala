@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, VocabHits}
+import org.scalatest.time.SpanSugar._
+import graft.functions.VocabHits
 import graft.operators.TextAnalysis
 
 /** The native `graft_vocab_hits` expression: equivalence against the
@@ -10,12 +11,14 @@ import graft.operators.TextAnalysis
   * (empty tokens, space runs, multi-byte text, case), codegen fusion,
   * and the row kernel directly.
   */
-class VocabHitsSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "vocabhits-spec")
+class VocabHitsSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "vocabhits-spec")
+  // slowest test in a full-suite run on 4 cores: 0.2 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("agrees with the split/filter/isin reference on randomized texts") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(67)
     val words = Vector("the", "The", "la", "thé", "中文", "a", "xx", "", " ")
     val rows: Seq[String] = (0 until 300).map { _ =>
@@ -37,7 +40,6 @@ class VocabHitsSpec extends AnyFunSuite {
 
   test("null propagates; case-sensitive; empty tokens only count for an empty vocab word") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq(Tuple1(null: String), Tuple1("The the THE"), Tuple1("a  b"))
       .toDF("text")
       .select(TextAnalysis.markerHits(col("text"), Seq("the", "a")).as("h"))
@@ -54,7 +56,6 @@ class VocabHitsSpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen — the reason it exists") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Tables
       .documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 50)

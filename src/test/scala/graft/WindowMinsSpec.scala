@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{GraftFunctions, WindowMins}
+import org.scalatest.time.SpanSugar._
+import graft.functions.WindowMins
 import graft.operators.Dedup
 
 /** The native `graft_win_mins` expression: equivalence against the
@@ -10,12 +11,14 @@ import graft.operators.Dedup
   * (incl. nulls, duplicates, short/empty), codegen fusion, and the
   * deque kernel directly.
   */
-class WindowMinsSpec extends AnyFunSuite {
-  private lazy val spark = GraftSession.local(4, appName = "winmins-spec")
+class WindowMinsSpec extends AnyFunSuite with SparkTimeLimit {
+  lazy val spark = GraftSession.local(4, appName = "winmins-spec")
+  // slowest test in a full-suite run on 4 cores: 0.7 s; a cold session
+  // start fits too
+  val timeLimit = 60.seconds
 
   test("agrees with the composed slice/least reference on randomized arrays") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(83)
     val rows: Seq[Seq[Option[Long]]] = (0 until 300).map { _ =>
       val n = rnd.nextInt(30)
@@ -41,7 +44,6 @@ class WindowMinsSpec extends AnyFunSuite {
 
   test("winnowFingerprints output is unchanged vs a composed-stage rebuild") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = Tables
       .documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 80)
@@ -60,7 +62,6 @@ class WindowMinsSpec extends AnyFunSuite {
 
   test("NULL input array null-propagates (documented divergence from the composed guard)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val r = Seq(Tuple1(null: Array[java.lang.Long])).toDF("hs")
       .select(
         call_function("graft_win_mins", col("hs"), lit(3)).as("native"),
@@ -72,7 +73,6 @@ class WindowMinsSpec extends AnyFunSuite {
 
   test("runs inside whole-stage codegen") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = Tables
       .documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 50)

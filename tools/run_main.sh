@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class on the sbt-compiled classes WITHOUT the sbt
 # lock — same JVM flags as build.sbt's forked `run`. Usage:
-#   tools/run_main.sh graft.ScaleCheck --docs=500
+#   tools/run_main.sh graft.Probe q20 --sf-dir=<sfDir> --reps=2
 # Requires a prior `sbt compile` (does not recompile). Resources are
 # read from src/main/resources, so a fresh clone needs no resource copy.
 set -euo pipefail
